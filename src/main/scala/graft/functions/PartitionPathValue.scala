@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * within a file):
   *
   * {{{
-  * raw = regexp_extract(element_at(split(path, "/data/"), -1),
+  * raw = regexp_extract(substring_index(path, "/data/", -1),
   *                      "/<dir>=([^/]+)/", 1)
   * dec1(x) = url_decode(replace(x, "+", "%2B"))   // mask legal '+'
   * when(raw === "" || dec1(dec1(raw)) === "__HIVE_DEFAULT_PARTITION__",
@@ -47,8 +47,8 @@ case class PartitionPathValue(child: Expression, dirName: String) extends UnaryE
 
   private def derive(path: UTF8String): UTF8String = {
     val s = path.toString
-    // element_at(split(path, "/data/"), -1): the part after the LAST
-    // occurrence (the regex "/data/" has no metacharacters)
+    // substring_index(path, "/data/", -1): the part after the LAST
+    // occurrence, overlaps included
     val cut = s.lastIndexOf("/data/")
     val rel = if (cut < 0) s else s.substring(cut + 6)
     val m = pattern.matcher(rel)

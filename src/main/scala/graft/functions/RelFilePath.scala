@@ -15,16 +15,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * {{{
   * concat("data/", url_decode(replace(
-  *   element_at(split(path, "/data/"), -1), "+", "%2B")))
+  *   substring_index(path, "/data/", -1), "+", "%2B")))
   * }}}
   *
   * Exactly like [[PartitionPathValue]]: rows arrive in file order, so
   * a per-thread last-path memo turns the split + masked URL-decode
   * into one equality check per row and one real derivation per file.
-  * Semantics replicated bit-for-bit: the split pattern "/data/" has no
-  * regex metacharacters, so element_at(split(s), -1) is the substring
-  * after the LAST occurrence — or the WHOLE string when absent (split
-  * returns the input unsplit); '+' masks to %2B before the decode
+  * Semantics replicated bit-for-bit: substring_index(s, "/data/", -1)
+  * is the substring after the LAST occurrence, overlaps included (a
+  * table rooted at `…/data` has `…/data/data/<uuid>/…` paths and the
+  * manifest records `data/<uuid>/…`) — or the WHOLE string when
+  * absent; '+' masks to %2B before the decode
   * (url_decode would read a literal '+' as space); decode failures
   * throw like the built-in's (on-disk paths never fail).
   */

@@ -68,6 +68,8 @@ private[sources] class GraftNioFileStatus(
   override def getOwner: String = { load(); super.getOwner }
   override def getGroup: String = { load(); super.getGroup }
   override def write(out: java.io.DataOutput): Unit = { load(); super.write(out) }
+  // FileStatus.toString reads the fields, not the getters
+  override def toString: String = { load(); super.toString }
 }
 
 class GraftRawLocalFileSystem extends RawLocalFileSystem {

@@ -2522,7 +2522,7 @@ object ManifestTable {
       // %-escaping exactly (a literal `+` is legal unescaped in a
       // path, so it is pre-masked to survive the URL decoder's
       // plus-is-space rule).
-      import org.apache.spark.sql.functions.{col, element_at, lit, regexp_extract, split, url_decode, when}
+      import org.apache.spark.sql.functions.{col, lit, regexp_extract, substring_index, url_decode, when}
       val dataSchema = schema.map(s =>
         StructType(s.fields.filterNot(f => eraCarried.contains(f.name))))
       val base = dataSchema match {
@@ -2557,8 +2557,8 @@ object ManifestTable {
         val v: Column =
           if (sys.props.get("graft.partPathFused").contains("false")) {
             val pat = "/" + java.util.regex.Pattern.quote(dirName) + "=([^/]+)/"
-            val relPart = element_at(
-              split(col("_metadata.file_path"), "/data/"), -1)
+            val relPart =
+              substring_index(col("_metadata.file_path"), "/data/", -1)
             val raw = regexp_extract(relPart, pat, 1)
             def dec1(x: Column): Column = url_decode(
               org.apache.spark.sql.functions.replace(x, lit("+"), lit("%2B")))
@@ -3255,7 +3255,7 @@ object ManifestTable {
     * own `/data/` is the final occurrence — partition VALUES cannot
     * smuggle one in, the writer %-escapes `/`). */
   private def relFileCol: Column = {
-    import org.apache.spark.sql.functions.{col, concat, element_at, lit, split, replace, url_decode}
+    import org.apache.spark.sql.functions.{col, concat, lit, replace, substring_index, url_decode}
     // `_metadata.file_path` is the URI form — URL-encoded ON TOP of
     // the on-disk names the manifest records (Path.toString form,
     // verified: value `a}b` is `p=a}b` on disk but `p=a%7Db` here) —
@@ -3269,7 +3269,7 @@ object ManifestTable {
     // file. `-Dgraft.relFileFused=false` pins the chain (A/B harness).
     if (sys.props.get("graft.relFileFused").contains("false"))
       concat(lit("data/"), url_decode(replace(
-        element_at(split(col("_metadata.file_path"), "/data/"), -1),
+        substring_index(col("_metadata.file_path"), "/data/", -1),
         lit("+"), lit("%2B"))))
     else {
       import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -3290,7 +3290,8 @@ object ManifestTable {
                         statsColumns: Seq[String] = Nil,
                         partitionBy: Seq[String] = Nil,
                         transformsOpt: Option[Seq[PartitionTransform]] = None,
-                        physOverride: Option[StructType] = None)
+                        physOverride: Option[StructType] = None,
+                        inputBytes: Option[BigInt] = None)
       : (String, Seq[String], Map[String, Map[String, (Double, Double)]]) = {
     // refuse the reserved name BEFORE writing anything — a refused
     // batch must leave no garbage dir behind
@@ -3373,13 +3374,20 @@ object ManifestTable {
     }
     val uuid = java.util.UUID.randomUUID().toString
     val dataDir = new Path(table, s"data/$uuid")
-    val w = dfW.write.mode(SaveMode.ErrorIfExists)
+    // one file per minPartitionSize of input, not one per task (see
+    // [[sizedPartitions]]); a declared layout or a large write is
+    // written as the caller's frame partitions it
+    val sized = sizedPartitions(spark, df0, inputBytes)
+    val w = sized.fold(dfW)(dfW.coalesce).write.mode(SaveMode.ErrorIfExists)
     // partition dirs spell the column's PHYSICAL name (r13): a renamed
     // identity partition column keeps ONE dir grammar across its whole
     // lineage — old and new files agree on the `<phys>=<value>` key,
     // and only the recorded schema knows the logical spelling.
     // Transform targets are absent from the mapping and pass through.
     val physPartBy = partitionBy.map(c => physOf.getOrElse(c, c))
+    def write(): Unit =
+      (if (partitionBy.nonEmpty) w.partitionBy(physPartBy: _*) else w)
+        .parquet(dataDir.toString)
     // size-first AQE coalescing, SCOPED to the write action (r20,
     // guide §6 output sizing): the default parallelism-first mode
     // keeps every post-shuffle rewrite at `defaultParallelism`
@@ -3393,10 +3401,10 @@ object ManifestTable {
     // compute-dense scan stages, which want the parallelism; paired
     // A/B over the MV + lifecycle families measured the write-side
     // win at −1.3 s. `-Dgraft.sizeFirstWrites=false` pins the default.
-    withSizeFirstCoalesce(spark) {
-      (if (partitionBy.nonEmpty) w.partitionBy(physPartBy: _*) else w)
-        .parquet(dataDir.toString)
-    }
+    // A coalesced write skips it: its final stage is already fixed at
+    // `sized` tasks, and flipping the SHARED session's conf would only
+    // race the session's other threads.
+    if (sized.isDefined) write() else withSizeFirstCoalesce(spark)(write())
     val f = fs(spark, dataDir)
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       f.listStatus(p).toSeq.flatMap(s =>
@@ -3405,16 +3413,20 @@ object ManifestTable {
         else Nil)
     // manifest-relative form via the same last-/data/ convention as
     // [[relFileCol]] (URI relativize is scheme-sensitive; the string
-    // split is not)
+    // search is not) — the LAST occurrence, overlaps included, so a
+    // table rooted at `…/data` records `data/<uuid>/…`, not
+    // `data/data/<uuid>/…`
+    def relOf(p: Path): String = {
+      val s = p.toString
+      "data/" + s.substring(s.lastIndexOf("/data/") + 6)
+    }
     val newStatuses = walk(dataDir)
     val sizeOfNew: Map[String, Long] = newStatuses
-      .map(s => ("data/" + s.getPath.toString.split("/data/").last,
-        s.getLen)).toMap
+      .map(s => (relOf(s.getPath), s.getLen)).toMap
     // absolute path per new file — the footer fast path below reads
     // the just-written footers without a second directory walk
     val absOfNew: Map[String, Path] = newStatuses
-      .map(s => ("data/" + s.getPath.toString.split("/data/").last,
-        s.getPath)).toMap
+      .map(s => (relOf(s.getPath), s.getPath)).toMap
     val files = sizeOfNew.keysIterator.toSeq.sorted
     // partition values, parsed from each file's own path — free
     // (driver-side, one entry per new file) and exact: a partition
@@ -3578,6 +3590,60 @@ object ManifestTable {
     }.toMap
     (uuid, files, stats)
   }
+
+  /** The partition count a write of `df` is coalesced to, or None to
+    * write it as the frame partitions it. Without a shuffle for AQE to
+    * coalesce, a write runs one task — and lands one file — per input
+    * partition, so a 1,000-row batch became `defaultParallelism` files
+    * and a MERGE as many files as its unioned scans had partitions.
+    * This applies Spark's own parallelism-first floor to the write:
+    * `ceil(inputBytes / adaptive.coalescePartitions.minPartitionSize)`
+    * partitions, used only while that is below `defaultParallelism`.
+    * `inputBytes` is the caller's figure (rewrites: see
+    * [[rewriteBytes]]) or else the optimized plan's `sizeInBytes`; an
+    * unknown estimate is Long.MaxValue there and so never coalesces.
+    * A frame whose root declares its layout — repartition, coalesce,
+    * rebalance, or a sort (coalescing would interleave its sorted
+    * runs) — is left as declared, and so is a frame allocating
+    * IDENTITY values: [[graft.functions.NextIdentityValue]] interleaves
+    * its ordinals over the task count, which a coalesce would shrink
+    * below the partition count and so collide. */
+  private def sizedPartitions(spark: SparkSession, df: DataFrame,
+                              inputBytes: Option[BigInt]): Option[Int] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{
+      RebalancePartitions, Repartition, RepartitionByExpression, Sort}
+    val plan = df.queryExecution.analyzed
+    plan match {
+      case _: Repartition | _: RepartitionByExpression |
+           _: RebalancePartitions | _: Sort => None
+      case _ if plan.exists(_.expressions.exists(
+          _.exists(_.isInstanceOf[graft.functions.NextIdentityValue]))) => None
+      case _ =>
+        val bytes = inputBytes.getOrElse(planBytes(df))
+        val unit = BigInt(spark.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+        val k = (bytes + unit - 1) / unit
+        if (k < spark.sparkContext.defaultParallelism) Some(k.toInt.max(1))
+        else None
+    }
+  }
+
+  /** A rewrite's input size for [[sizedPartitions]], from the manifest:
+    * the recorded bytes of the `rewritten` files plus `sourceBytes`
+    * (the plan estimate of any new rows). Catalyst cannot give this —
+    * its estimate of the rewrite's join is the product of both sides.
+    * A rewritten file without a recorded size makes the total unknown
+    * (Long.MaxValue, the plan-stats convention), which never coalesces. */
+  private def rewriteBytes(stats: Map[String, Map[String, (Double, Double)]],
+                           rewritten: Iterable[String],
+                           sourceBytes: BigInt = 0): BigInt = {
+    val sizes = rewritten.iterator.map(f => stats.get(f).flatMap(_.get(SizeKey))).toSeq
+    if (sizes.exists(_.isEmpty)) BigInt(Long.MaxValue)
+    else sizes.flatten.map(r => BigInt(r._1.toLong)).sum + sourceBytes
+  }
+
+  private def planBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Hive path-name unescape (`%XX` → char): the writer %-escapes
     * special characters — `/`, `:`, control chars — in partition
@@ -4511,10 +4577,15 @@ object ManifestTable {
       case _ => None
     }
     val out = Map.newBuilder[String, Map[String, (Double, Double)]]
+    // the options `ParquetFileReader.open(file)` builds per call, built
+    // ONCE: each build copies a fresh Hadoop configuration, which
+    // profiled as this fast path's top cost
+    val options = org.apache.parquet.ParquetReadOptions.builder().build()
     files.foreach { rel =>
       val reader =
         try org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(absOfNew(rel), conf))
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(absOfNew(rel), conf),
+          options)
         catch { case _: Throwable => return None }
       try {
         import scala.jdk.CollectionConverters._
@@ -5153,7 +5224,8 @@ object ManifestTable {
       val (uuid, newFiles, newStats) =
         writeData(spark, table, merged, (statsColumnsOf(headStats) ++
           configStatsColumns(spark, table, merged.columns.toSeq))
-          .distinct.sorted, partBy)
+          .distinct.sorted, partBy,
+          inputBytes = Some(rewriteBytes(headStats, affected, planBytes(updates))))
       val files = rel.filterNot(affected) ++ newFiles
       // carried files keep their recorded stats; rewritten + inserted
       // files get fresh ranges from the write above
@@ -5261,7 +5333,7 @@ object ManifestTable {
           .drop("__f")
       val (uuid, newFiles, newStats) =
         writeData(spark, table, survivorsOfAffected, statsColumnsOf(headStats),
-          partBy)
+          partBy, inputBytes = Some(rewriteBytes(headStats, affected)))
       val files = rel.filterNot(affected) ++ newFiles
       // carried-over files keep their recorded stats (tryPublish drops
       // entries for files no longer in the snapshot); rewritten files
@@ -5411,7 +5483,8 @@ object ManifestTable {
           .filter(!coalesce(pred, lit(false)))
           .unionByName(aligned)
       val (uuid, newFiles, newStats) =
-        writeData(spark, table, toWrite, statsColumnsOf(headStats), partBy)
+        writeData(spark, table, toWrite, statsColumnsOf(headStats), partBy,
+          inputBytes = Some(rewriteBytes(headStats, affected, planBytes(aligned))))
       val files = rel.filterNot(affected) ++ newFiles
       val recordSchema =
         schema.orElse(Some(recordedSchema(toWrite.schema, partBy)))
@@ -5515,7 +5588,8 @@ object ManifestTable {
       requireSatisfied(rewritten,
         checkConstraints(spark, table, head), s"an UPDATE on $table")
       val (uuid, newFiles, newStats) =
-        writeData(spark, table, rewritten, statsColumnsOf(headStats), partBy)
+        writeData(spark, table, rewritten, statsColumnsOf(headStats), partBy,
+          inputBytes = Some(rewriteBytes(headStats, affected)))
       val files = rel.filterNot(affected) ++ newFiles
       val recordSchema =
         schema.orElse(Some(recordedSchema(rewritten.schema, partBy)))
@@ -5680,7 +5754,8 @@ object ManifestTable {
       val survivors = readLive(spark, table, targeted, schema, partBy, tombs,
         dvs = dvsHead)
       val (uuid, newFiles, newStats) =
-        writeData(spark, table, survivors, statsColumnsOf(headStats), partBy)
+        writeData(spark, table, survivors, statsColumnsOf(headStats), partBy,
+          inputBytes = Some(rewriteBytes(headStats, targeted)))
       val targetedSet = targeted.toSet
       beforeConditionalCommit()
       commitIfHead(spark, table, rel.filterNot(targetedSet) ++ newFiles, head,

@@ -63,10 +63,14 @@ object CheckpointBridge {
           rowCount = Some(BigInt(n)))
         val spark = df.sparkSession
           .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        // the constraints the stock checkpoint carries (e.g. inferred
+        // non-nullability) ride along unchanged; `constraints` is the
+        // node's origin set minus subquery-bearing predicates, and
+        // filtering it again is the identity
         PlanBridge.ofRows(spark,
           new LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
             lr.outputOrdering, lr.isStreaming, lr.stream)(
-            spark, Some(stats), None))
+            spark, Some(stats), Some(lr.constraints)))
       case _ => cp
     }
   }

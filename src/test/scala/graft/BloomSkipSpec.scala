@@ -75,7 +75,11 @@ class BloomSkipSpec extends AnyFunSuite with SparkFixture {
     ManifestTable.commit(spark, t, df.limit(0), SaveMode.Overwrite,
       statsColumns = Seq("id"))
     ManifestTable.addBloom(spark, t, Seq("name"), bits = 1L << 12, k = 4)
-    df.repartition(8, col("id")).write.parquet(s"$landing/b1")
+    // two landings, two COPY INTO commits: two indexed files to prune
+    // between
+    df.filter(col("id") < 32).write.parquet(s"$landing/b1")
+    ManifestTable.copyInto(spark, t, s"$landing/*")
+    df.filter(col("id") >= 32).write.parquet(s"$landing/b2")
     ManifestTable.copyInto(spark, t, s"$landing/*")
     val total = ManifestTable.snapshotFiles(spark, t).size
     val hit = ManifestTable.readWhere(spark, t, col("name") === "u3")

@@ -35,6 +35,18 @@ class CheckpointStatsSpec extends AnyFunSuite with SparkFixture {
     assert(stats.sizeInBytes === BigInt(1000) * BigInt(width))
   }
 
+  test("ckpt keeps the checkpointed plan's constraints") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def constraintsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.analyzed.collectFirst {
+        case lr: LogicalRDD => lr.constraints.map(_.sql).toSet
+      }.get
+    val df = frame().filter(col("v") > 10.0)
+    val stock = constraintsOf(df.localCheckpoint(true))
+    assert(stock.contains("(v IS NOT NULL)"), stock)
+    assert(constraintsOf(QueryRegistry.ckpt(df)) === stock)
+  }
+
   test("empty frame checkpoints with zero rowCount, nonzero size floor") {
     val cp = QueryRegistry.ckpt(frame().filter(col("id") < 0))
     val stats = cp.queryExecution.optimizedPlan.stats

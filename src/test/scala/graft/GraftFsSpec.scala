@@ -82,4 +82,19 @@ class GraftFsSpec extends AnyFunSuite {
     assert(g.getFileStatus(p).getPermission ===
       new FsPermission(Integer.parseInt("640", 8).toShort))
   }
+
+  test("toString of a fresh status shows the real permission, owner and group") {
+    val dir = freshDir()
+    val f = new java.io.File(dir, "shown")
+    java.nio.file.Files.writeString(f.toPath, "s")
+    Runtime.getRuntime.exec(Array("chmod", "600", f.getAbsolutePath)).waitFor()
+    val p = new Path(f.getAbsolutePath)
+    // toString first: no getter has loaded the attributes yet
+    val shown = graftFs().getFileStatus(p).toString
+    val stock = stockFs().getFileStatus(p)
+    assert(shown.contains(s"permission=${stock.getPermission}"), shown)
+    assert(shown.contains(s"owner=${stock.getOwner}"), shown)
+    assert(shown.contains(s"group=${stock.getGroup}"), shown)
+    assert(stock.getPermission.toString === "rw-------")
+  }
 }

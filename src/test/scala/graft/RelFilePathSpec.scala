@@ -16,7 +16,7 @@ class RelFilePathSpec extends AnyFunSuite with SparkFixture {
 
   private def chain(c: org.apache.spark.sql.Column) =
     concat(lit("data/"), url_decode(replace(
-      element_at(split(c, "/data/"), -1), lit("+"), lit("%2B"))))
+      substring_index(c, "/data/", -1), lit("+"), lit("%2B"))))
 
   private def fused(c: org.apache.spark.sql.Column) =
     ColumnBridge.column(RelFilePath(ColumnBridge.expression(c)))
@@ -30,6 +30,7 @@ class RelFilePathSpec extends AnyFunSuite with SparkFixture {
       "file:/tmp/t/data/uuid-2/k=50%25off/part-3.parquet", // '%' escaped
       "file:/tmp/t/data/uuid-3/k=%C3%BC/part-4.parquet",   // unicode
       "file:/tmp/with/data/in/root/data/uuid/part.parquet", // two /data/
+      "file:/x/data/data/uuid/part.parquet",                // overlapping
       "no-data-anywhere/part.parquet",                      // absent → whole
       null)
     val df = paths.zipWithIndex.map { case (p, i) => (i, p) }.toDF("i", "p")
@@ -39,6 +40,9 @@ class RelFilePathSpec extends AnyFunSuite with SparkFixture {
       assert(Option(r.getString(1)) === Option(r.getString(2)),
         s"row ${r.getInt(0)}: fused=${r.getString(1)} chain=${r.getString(2)}")
     }
+    // overlapping occurrences resolve to the last one: the manifest's
+    // relative form of a table rooted at /x/data
+    assert(got(6).getString(1) === "data/uuid/part.parquet")
   }
 
   test("memo survives interleaved file paths (same thread, alternating keys)") {
@@ -51,5 +55,37 @@ class RelFilePathSpec extends AnyFunSuite with SparkFixture {
       assert(e.compute(a).toString === "data/u1/part-0.parquet")
       assert(e.compute(b).toString === "data/u2/part-1.parquet")
     }
+  }
+
+  test("a table rooted at …/data records, reads and rewrites under both arms") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    def withArms[A](fusedOn: Boolean)(body: => A): A = {
+      val keys = Seq("graft.relFileFused", "graft.partPathFused")
+      val old = keys.map(k => k -> sys.props.get(k))
+      keys.foreach(k => sys.props(k) = fusedOn.toString)
+      try body finally old.foreach {
+        case (k, Some(v)) => sys.props(k) = v
+        case (k, None) => sys.props -= k
+      }
+    }
+    Seq(true, false).foreach { fusedOn => withArms(fusedOn) {
+      val root = java.nio.file.Files.createTempDirectory("graft_relroot").toFile
+      val t = new java.io.File(root, "data").getAbsolutePath
+      ManifestTable.commit(spark, t,
+        (1 to 20).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "p"),
+        org.apache.spark.sql.SaveMode.Overwrite, partitionBy = Seq("p"))
+      assert(ManifestTable.snapshotFiles(spark, t).forall(f =>
+        f.startsWith("data/") && !f.startsWith("data/data/")),
+        ManifestTable.snapshotFiles(spark, t))
+      ManifestTable.merge(spark, t,
+        Seq((3L, "m3", 1), (40L, "n40", 0)).toDF("id", "v", "p"), Seq("id"))
+      ManifestTable.deleteWhere(spark, t, col("id") === 4L)
+      val got = ManifestTable.read(spark, t)
+        .select("id", "v", "p").as[(Long, String, Int)].collect().sortBy(_._1).toSeq
+      val want = ((1 to 20).filter(_ != 4).map(i =>
+        (i.toLong, if (i == 3) "m3" else s"v$i", i % 2)) :+ ((40L, "n40", 0)))
+      assert(got === want, s"fused=$fusedOn")
+    } }
   }
 }

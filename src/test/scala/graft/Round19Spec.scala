@@ -304,8 +304,10 @@ class Round19Spec extends AnyFunSuite with SparkFixture {
   test("MERGE WITH SCHEMA EVOLUTION widens the target by the source's new columns") {
     val t = tmp("mevo")
     GraftCatalog.unregister("r19_evo")
+    // one file per row: the merge touches id 2's file only
     ManifestTable.commit(spark, t,
-      Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "grp", "v"),
+      Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "grp", "v")
+        .repartitionByRange(2, org.apache.spark.sql.functions.col("id")),
       SaveMode.Overwrite)
     GraftCatalog.register("r19_evo", t)
     Seq((2L, "B", 25L, "eu"), (3L, "c", 30L, "us"))
