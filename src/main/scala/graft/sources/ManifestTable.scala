@@ -3221,6 +3221,16 @@ object ManifestTable {
     (pruneWith(files, stats, ranges), files.size)
   }
 
+  /** Whether the file range [mn, mx] may meet the constraint
+    * [lo, hi]: true unless the two are provably disjoint. A NaN on
+    * either side proves nothing — NaN compares false both ways — so it
+    * never prunes. Spark orders NaN above every double and matches
+    * `NaN = NaN`, which no [mn, mx] test can honor: a NaN-holding
+    * file records max NaN, `k = NaN` extracts [NaN, NaN], and a NaN
+    * source key makes the MERGE envelope's hi NaN. */
+  private def mayOverlap(mn: Double, mx: Double, lo: Double, hi: Double): Boolean =
+    !(mn > hi || mx < lo)
+
   /** The pure pruning decision over an already-parsed snapshot. */
   private def pruneWith(files: Seq[String],
                         stats: Map[String, Map[String, (Double, Double)]],
@@ -3228,7 +3238,7 @@ object ManifestTable {
     files.filter { f =>
       ranges.forall { case (c, lo, hi) =>
         stats.get(f).flatMap(_.get(c)) match {
-          case Some((mn, mx)) => mn <= hi && mx >= lo
+          case Some((mn, mx)) => mayOverlap(mn, mx, lo, hi)
           case None => true // no stats -> never pruned
         }
       }
@@ -3242,7 +3252,7 @@ object ManifestTable {
     files.filter { f =>
       dnf.exists(_.forall { case (c, (lo, hi)) =>
         stats.get(f).flatMap(_.get(c)) match {
-          case Some((mn, mx)) => mn <= hi && mx >= lo
+          case Some((mn, mx)) => mayOverlap(mn, mx, lo, hi)
           case None => true
         }
       })
@@ -4650,10 +4660,13 @@ object ManifestTable {
     }
   }
 
-  /** The changelog's per-key-column (min, max) as [[pruneFiles]]
-    * ranges — one tiny agg over the (small by assumption) changelog.
-    * A key type without a stats encoding yields no bound (and so
-    * prunes nothing). */
+  /** The source's per-key-column (min, max) as [[pruneFiles]]
+    * ranges. A source whose optimized plan is a local relation (a
+    * `toDF`/`createDataFrame` frame, SQL `VALUES`, a view over either)
+    * already sits on the driver: its encoded keys are collected with
+    * no job and folded here. Any other source pays one tiny aggregate
+    * job. A key type without a stats encoding yields no bound, and a
+    * NaN key yields a NaN bound; neither prunes anything. */
   private def keyEnvelope(updates: DataFrame, keys: Seq[String])
       : Seq[(String, Double, Double)] = {
     import org.apache.spark.sql.functions.{col, max, min}
@@ -4672,16 +4685,24 @@ object ManifestTable {
         .map(k -> _)
     }
     if (encoded.isEmpty) return Nil
-    val aggs = encoded.flatMap { case (k, e) => Seq(
-      min(e).as(s"__mn_$k"),
-      max(e).as(s"__mx_$k")) }
-    val row = updates.agg(aggs.head, aggs.tail: _*).collect().head
-    encoded.flatMap { case (k, _) =>
-      val mn = row.getAs[Any](s"__mn_$k")
-      val mx = row.getAs[Any](s"__mx_$k")
-      if (mn == null || mx == null) None
-      else Some((k, mn.asInstanceOf[Double], mx.asInstanceOf[Double]))
+    val enc = updates.select(encoded.indices.map(i => encoded(i)._2.as(s"__e$i")): _*)
+    val env: Seq[Option[(Double, Double)]] = enc.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val rows = enc.collect()
+        encoded.indices.map { i =>
+          val ds = rows.collect { case r if !r.isNullAt(i) => r.getDouble(i) }
+          if (ds.isEmpty) None
+          else Some((ds.reduce(math.min(_, _)), ds.reduce(math.max(_, _))))
+        }
+      case _ =>
+        val aggs = encoded.indices.flatMap(i =>
+          Seq(min(col(s"__e$i")), max(col(s"__e$i"))))
+        val row = enc.agg(aggs.head, aggs.tail: _*).collect().head
+        encoded.indices.map(i =>
+          if (row.isNullAt(2 * i)) None
+          else Some((row.getDouble(2 * i), row.getDouble(2 * i + 1))))
     }
+    encoded.zip(env).flatMap { case ((k, _), e) => e.map { case (lo, hi) => (k, lo, hi) } }
   }
 
   /** Reserved stats pseudo-column carrying each file's byte size as a
@@ -4824,20 +4845,33 @@ object ManifestTable {
     * resolve inside the commit protocol too.
     *
     * Scale stance — TOUCHED-FILE pruning, the shape that makes MERGE
-    * deployable at 100 TB (a full-table rewrite per merge is not):
-    * pass 0 computes the changelog's per-key-column (min,max) in one
-    * tiny agg and prunes the manifest to files whose recorded key
-    * stats intersect it (a file outside the changelog's key range
-    * cannot hold a match — so even the key SCAN skips most of a
-    * key-clustered table); pass 1 finds the files containing matched
-    * keys among the candidates via a column-pruned key scan +
-    * semi-join (parquet reads only the key columns); pass 2 re-reads
-    * ONLY those files, applies the clause logic (one shuffle on
-    * `keys`; AQE broadcasts a small changelog; row-local
-    * projection/filter inside whole-stage codegen), and writes their
-    * post-image plus the inserts; every untouched file carries into
-    * the new snapshot by reference with its stats. Write volume is
-    * O(files containing matched keys), not O(table). */
+    * deployable at 100 TB (a full-table rewrite per merge is not). The
+    * target's files are scanned twice: candidates once, affected once.
+    *  - Pass 0, the envelope ([[keyEnvelope]]): the source's per-key
+    *    (min, max) prunes the manifest to the candidate files, those
+    *    whose recorded key range meets it. It runs no job for a local
+    *    source and one tiny aggregate otherwise.
+    *  - Pass 1, the probe: the candidates' LIVE rows (tombstones and
+    *    deletion vectors applied), column-pruned to the keys plus the
+    *    file tag, semi-joined to the source keys and collected. That
+    *    one job yields the affected files and the matched key set. A
+    *    row hidden by a tombstone or vector matches nothing: its file
+    *    carries by reference and its key inserts. Driver state is
+    *    bounded by MATCHED ROWS (the same bound as
+    *    [[deleteWhereVector]]'s victim collect), not by the table.
+    *  - Pass 2, the rewrite: the affected files' live rows left-join
+    *    the source once; ONE projection yields kept, updated and BY
+    *    SOURCE-updated rows (filter `(matched ∧ ¬del) ∨ (¬matched ∧
+    *    ¬bySrcDel)`, each column `when(matched ∧ upd, SET value)
+    *    .otherwise(kept / BY SOURCE value)`, generated columns
+    *    re-derived once). Inserts anti-join the source against the
+    *    probe's matched keys, held as a local relation, not against a
+    *    re-scan of the affected files.
+    * A source under the broadcast threshold therefore runs the merge
+    * with no shuffle: every join broadcasts a local or small side.
+    * Every untouched file carries into the new snapshot by reference
+    * with its stats. Write volume is O(files containing matched keys),
+    * not O(table). */
   def merge(spark: SparkSession, table: String, updates: DataFrame,
             keys: Seq[String],
             whenMatchedUpdate: Option[Column] = None,
@@ -4852,6 +4886,7 @@ object ManifestTable {
             whenMatchedAssign: Option[Seq[(String, Column)]] = None,
             insertCondition: Option[Column] = None,
             insertAssign: Option[Seq[(String, Column)]] = None): Int = {
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{coalesce, col, lit, struct, when}
     val srcCols = updates.columns.toSeq
     // the NOT MATCHED insert image (r14): the anti-joined source rows,
@@ -5060,29 +5095,28 @@ object ManifestTable {
           val src = updates
             .select(struct(srcCols.map(col): _*).as("_src"))
             .select(keys.map(k => col(s"_src.$k").as(k)) :+ col("_src"): _*)
-          // pass 0: the changelog's key envelope prunes the candidate
+          // pass 0: the source's key envelope prunes the candidate
           // files before anything is read (sound: a file whose
-          // recorded key range misses the envelope cannot match — and
-          // a matched key being inside the envelope by definition,
-          // keys absent from every candidate are absent from the
-          // table, so the INSERT anti-join over candidate keys stays
-          // exact; non-numeric keys yield no bound and prune nothing)
+          // recorded key range misses the envelope cannot hold a
+          // match; a key type without a stats encoding, and a NaN on
+          // either side, prune nothing)
           val candidates =
             if (bounds.isEmpty) rel
             else pruneWith(rel, headStats, bounds)
-          // pass 1: which files hold a matched key? Column-pruned to
-          // the keys; bounded driver state (≤ |snapshot files|).
-          val tgtKeys =
-            if (candidates.isEmpty) readFiles(spark, table, rel, schema, partBy)
-              .limit(0).select(keys.map(col) :+
-                org.apache.spark.sql.functions.lit("").as("__f"): _*)
-            else readFiles(spark, table, candidates, schema, partBy,
-              tagFile = true) // per-era __f: _metadata dies in the union
+          // pass 1, the probe: the candidates' LIVE rows (tombstones
+          // and deletion vectors applied — a hidden row matches
+          // nothing, so its file carries by reference and its key
+          // inserts), column-pruned to the keys and semi-joined to the
+          // source keys. One collect yields both the affected files
+          // and the matched key set; driver state is O(matched rows).
+          val matchedRows =
+            if (candidates.isEmpty) Array.empty[Row]
+            else readLive(spark, table, candidates, schema, partBy, headTombs,
+                tagFile = true, dvs = headDvs)
               .select(keys.map(col) :+ col("__f"): _*)
-          val affectedMatched = tgtKeys
-            .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
-            .select("__f").distinct()
-            .collect().map(_.getString(0)).toSet
+              .join(src.select(keys.map(col): _*), keys, "left_semi")
+              .collect()
+          val affectedMatched = matchedRows.map(_.getString(keys.length)).toSet
           // NOT MATCHED BY SOURCE widens the victim set: any file that
           // could hold a clause-condition-satisfying row must rewrite
           // (its unmatched rows are deletion candidates) — stats-pruned
@@ -5099,17 +5133,17 @@ object ManifestTable {
           // no file rewrites and no insert arm: nothing can change —
           // return the head with no commit (the deleteWhere contract)
           if (affected.isEmpty && !insertUnmatched) return head
-          // pass 2: clause logic over ONLY the affected files' rows —
-          // tombstone-AWARE: a lazily-deleted row must not resurrect
-          // into the rewritten post-image (the rewrite materializes
-          // its files' tombstones as a side effect)
+          // pass 2, the rewrite: the affected files' LIVE rows, read
+          // once (a lazily-deleted or vectored row must not resurrect
+          // into the post-image — the rewrite materializes its files'
+          // tombstones and vectors as a side effect)
           val tgt =
             if (affected.isEmpty) readFiles(spark, table, rel, schema, partBy).limit(0)
             else readLive(spark, table, affected.toSeq.sorted, schema, partBy,
               headTombs, dvs = headDvs)
           // evolution (the commit() mergeSchema rule applied to MERGE):
           // updates may ADD columns — kept target rows read them as
-          // null through the widened union — but never RETYPE one
+          // null — but never RETYPE one
           if (mergeSchema) {
             val haveTypes = tgt.schema.map(f => (f.name, f.dataType)).toMap
             updates.schema.foreach(f => haveTypes.get(f.name).foreach(t =>
@@ -5118,7 +5152,7 @@ object ManifestTable {
                   s"table has $t, batch has ${f.dataType} — evolution may " +
                   "only add columns, never change them")))
           }
-          val joined = tgt.join(src, keys, "left")
+          val tgtCols = tgt.columns.toSeq
           val matched = col("_src").isNotNull
           val del = coalesce(whenMatchedDelete.getOrElse(lit(false)), lit(false))
           val upd = coalesce(whenMatchedUpdate.getOrElse(lit(true)), lit(false))
@@ -5133,88 +5167,112 @@ object ManifestTable {
           val bySrcUpd = coalesce(
             whenNotMatchedBySourceUpdate.map(_._2).getOrElse(lit(false)),
             lit(false))
-          val bySrcAssign: Map[String, Column] =
-            whenNotMatchedBySourceUpdate.map(_._1.toMap).getOrElse(Map.empty)
-          bySrcAssign.keys.foreach(c => require(tgt.columns.contains(c),
-            s"BY SOURCE UPDATE on $table assigns unknown column '$c'"))
-          def bySrcValue(c: String): Column = {
+          // every clause condition evaluates ONCE per row, into flags
+          // the single projection below reads (a nondeterministic
+          // condition cannot split one row's columns between arms)
+          val UpdFlag = "__graft_upd"
+          val BySrcFlag = "__graft_bysrc"
+          val KeepFlag = "__graft_keep"
+          val joined = tgt.join(src, keys, "left").select(col("*"),
+            (matched && !del && upd).as(UpdFlag),
+            (!matched && bySrcUpd).as(BySrcFlag),
+            ((matched && !del) || (!matched && !bySrcDel)).as(KeepFlag))
+          def widened(what: String, c: String, e: Column, over: DataFrame): Column = {
             val target = tgt.schema(c).dataType
-            val e = bySrcAssign(c)
-            val aType = tgt.select(e.as("__p")).schema.head.dataType
+            val aType = over.select(e.as("__p")).schema.head.dataType
             if (sameType(aType, target)) e
             else if (safeStoreCast(aType, target)) e.cast(target)
             else throw new IllegalArgumentException(
-              s"BY SOURCE UPDATE on $table assigns $aType to column '$c' " +
-                s"($target) — only the widening lattice casts implicitly")
+              s"$what on $table assigns $aType to column '$c' ($target) — " +
+                "only the widening lattice casts implicitly")
           }
-          val kept = joined.filter(
-              (matched && !del && !upd) || (!matched && !bySrcDel))
-            .select(tgt.columns.toSeq.map(c =>
-              (if (bySrcAssign.contains(c))
-                 when(!matched && bySrcUpd, bySrcValue(c)).otherwise(col(c))
-               else col(c)).as(c)): _*)
-          // the matched UPDATE arm: SET * replaces the row with the
-          // source row (the original shape); an explicit SET list
-          // (r14) keeps the target row and assigns only the named
-          // columns — values may mix target columns (unqualified in
-          // the joined frame) and source columns (through `_src`),
-          // with updateWhere's widen-or-refuse type discipline. Merge
-          // KEYS are not assignable: the reconcile validity argument
-          // ("no interloper file holds one of this merge's source
-          // keys") reasons about the post-image through the source
-          // keys, which a key rewrite would silently invalidate.
-          val replaced = whenMatchedAssign match {
-            case Some(assigns) =>
-              require(assigns.map(_._1).distinct.length == assigns.length,
-                s"MERGE UPDATE SET on $table assigns a column twice")
-              val amap = assigns.toMap
-              amap.keys.foreach { c =>
-                require(tgt.columns.contains(c),
-                  s"MERGE UPDATE SET on $table assigns unknown column '$c'")
-                require(!keys.exists(_.equalsIgnoreCase(c)),
-                  s"MERGE UPDATE SET on $table cannot assign merge key " +
-                    s"'$c' — a key rewrite would unmoor the matched rows")
-              }
-              def value(c: String): Column = {
-                val target = tgt.schema(c).dataType
-                val e = amap(c)
-                val aType = joined.select(e.as("__p")).schema.head.dataType
-                if (sameType(aType, target)) e
-                else if (safeStoreCast(aType, target)) e.cast(target)
-                else throw new IllegalArgumentException(
-                  s"MERGE UPDATE SET on $table assigns $aType to column " +
-                    s"'$c' ($target) — only the widening lattice casts " +
-                    "implicitly")
-              }
-              joined.filter(matched && !del && upd)
-                .select(tgt.columns.toSeq.map(c =>
-                  (if (amap.contains(c)) value(c) else col(c)).as(c)): _*)
-            case None =>
-              // SET * (r16): spec-bearing columns the source doesn't
-              // carry KEEP the target row's value — an update never
-              // re-defaults a column or re-allocates a surrogate key;
-              // generated columns re-derive in regen below
-              val carry = recFields.filter(f =>
-                (ColumnSpecs.identityOf(f).isDefined ||
-                  ColumnSpecs.defaultOf(f).isDefined) &&
-                !srcCols.exists(_.equalsIgnoreCase(f.name))).map(_.name)
-              joined.filter(matched && !del && upd)
-                .select(srcCols.map(c => col(s"_src.$c").as(c)) ++
-                  carry.map(c => col(c).as(c)): _*)
+          val bySrcAssign: Map[String, Column] =
+            whenNotMatchedBySourceUpdate.map(_._1.toMap).getOrElse(Map.empty)
+          bySrcAssign.keys.foreach(c => require(tgtCols.contains(c),
+            s"BY SOURCE UPDATE on $table assigns unknown column '$c'"))
+          // a row no UPDATE arm touches: the target value, or the BY
+          // SOURCE assignment where that clause hit
+          def keptValue(c: String): Column = bySrcAssign.get(c) match {
+            case Some(e) => when(col(BySrcFlag),
+              widened("BY SOURCE UPDATE", c, e, tgt)).otherwise(col(c))
+            case None => col(c)
           }
-          // anti-join against the AFFECTED files' keys only: a source
-          // key present anywhere in the table is a match, and a match
-          // makes its file affected — so source keys absent from the
-          // affected files are absent from the table. This avoids a
-          // second scan of every candidate file's key column.
-          def u(a: DataFrame, b: DataFrame) =
-            a.unionByName(b, allowMissingColumns = mergeSchema)
-          val upserted =
-            if (!insertUnmatched) u(regen(kept), regen(replaced))
-            else u(u(regen(kept), regen(replaced)), insertImage(updates.join(
-              tgt.select(keys.map(col): _*).distinct(), keys, "left_anti"),
-              tgt.schema))
-          (upserted, affected)
+          // the matched UPDATE arm's value per column (None: the column
+          // keeps its kept value). An explicit SET list (r14) assigns
+          // only the named columns — values may mix target columns
+          // (unqualified in the joined frame) and source columns
+          // (through `_src`), with updateWhere's widen-or-refuse type
+          // discipline. SET * takes the source row. Merge KEYS are not
+          // assignable: the reconcile validity argument ("no interloper
+          // file holds one of this merge's source keys") reasons about
+          // the post-image through the source keys, which a key rewrite
+          // would silently invalidate.
+          val (setValue, added): (String => Option[Column], Seq[String]) =
+            whenMatchedAssign match {
+              case Some(assigns) =>
+                require(assigns.map(_._1).distinct.length == assigns.length,
+                  s"MERGE UPDATE SET on $table assigns a column twice")
+                val amap = assigns.toMap
+                amap.keys.foreach { c =>
+                  require(tgtCols.contains(c),
+                    s"MERGE UPDATE SET on $table assigns unknown column '$c'")
+                  require(!keys.exists(_.equalsIgnoreCase(c)),
+                    s"MERGE UPDATE SET on $table cannot assign merge key " +
+                      s"'$c' — a key rewrite would unmoor the matched rows")
+                }
+                (c => amap.get(c).map(widened("MERGE UPDATE SET", c, _, joined)),
+                  Nil)
+              case None =>
+                // SET * (r16): spec-bearing columns the source doesn't
+                // carry KEEP the target row's value — an update never
+                // re-defaults a column or re-allocates a surrogate key;
+                // generated columns re-derive in regen below. Any other
+                // target column the source lacks nulls under
+                // mergeSchema and refuses without it, as do source
+                // columns the target lacks.
+                def srcOf(c: String) = srcCols.find(_.equalsIgnoreCase(c))
+                val specKept = recFields.filter(f => ColumnSpecs.hasSpec(f) &&
+                  srcOf(f.name).isEmpty).map(_.name)
+                val missing = tgtCols.filter(c => srcOf(c).isEmpty &&
+                  !specKept.exists(_.equalsIgnoreCase(c)))
+                val extra = srcCols.filterNot(s => tgtCols.exists(_.equalsIgnoreCase(s)))
+                require(mergeSchema || (missing.isEmpty && extra.isEmpty),
+                  s"MERGE UPDATE SET * on $table: the source columns must " +
+                    s"match the target's (missing ${missing.mkString("[", ", ", "]")}, " +
+                    s"extra ${extra.mkString("[", ", ", "]")}) — mergeSchema " +
+                    "adds columns")
+                (c => srcOf(c).map(s => col(s"_src.$s"))
+                    .orElse(if (missing.contains(c)) Some(lit(null)) else None),
+                  extra)
+            }
+          // ONE projection over the ONE join: kept, updated and BY
+          // SOURCE-updated rows together
+          val rewritten = joined.filter(col(KeepFlag)).select(
+            tgtCols.map(c => setValue(c).fold(keptValue(c))(v =>
+              when(col(UpdFlag), v).otherwise(keptValue(c))).as(c)) ++
+              added.map(c => when(col(UpdFlag), col(s"_src.$c")).as(c)): _*)
+          // inserts: the source rows whose key matched no live target
+          // row — anti-joined against the probe's driver-held matched
+          // keys (a local relation, broadcast), not a re-scan. Exact:
+          // a source key held live anywhere in the table lies inside
+          // the envelope, so its file was a candidate and the probe saw
+          // it.
+          val merged =
+            if (!insertUnmatched) regen(rewritten)
+            else {
+              val unmatched =
+                if (matchedRows.isEmpty) updates
+                else {
+                  val keyRows = matchedRows.map(r =>
+                    Row.fromSeq(r.toSeq.take(keys.length))).distinct
+                  updates.join(spark.createDataFrame(
+                    java.util.Arrays.asList(keyRows: _*),
+                    tgt.select(keys.map(col): _*).schema), keys, "left_anti")
+                }
+              regen(rewritten).unionByName(insertImage(unmatched, tgt.schema),
+                allowMissingColumns = mergeSchema)
+            }
+          (merged, affected)
         }
       // CHECK enforcement on the post-image before anything is written
       // (kept rows re-validate too — they're bounded by churn, and a
@@ -5247,7 +5305,7 @@ object ManifestTable {
           // interloper file would change what matches (update) vs
           // inserts, so that forces the re-derive. The check is
           // envelope-pruned then column-pruned: O(interloper churn).
-          val srcKeyRows = updates.select(keys.map(col): _*).distinct()
+          val srcKeyRows = updates.select(keys.map(col): _*)
           val conflicts = (added: Seq[String], schema2: Option[StructType],
               stats2: Map[String, Map[String, (Double, Double)]],
               partBy2: Seq[String]) => added.nonEmpty && {
