@@ -129,6 +129,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SCHEMA_NOT_FOUND first. The Hints batch runs earliest.
     ext.injectHintResolutionRule(session =>
       new graft.sources.GraftCatalog.DdlResolution(session))
+    // file skipping on every manifest read (DataFrame, SQL, TVF): pins
+    // the filters pushed onto a manifest relation into its index, so
+    // the optimized plan — `inputFiles`, EXPLAIN — names only the kept
+    // files. Runs after operator optimization has pushed the filters
+    // down, like Spark's own PruneFileSourcePartitions.
+    ext.injectPreCBORule(_ => graft.sources.PinManifestFiles)
     // maintenance statements vanilla Spark has no grammar for
     // (OPTIMIZE / VACUUM) — a thin delegating parser, the sanctioned
     // injectParser extension point (r14)

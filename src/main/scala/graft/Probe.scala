@@ -23,6 +23,7 @@ object Probe {
       // fork-free chmod for file: (GraftLocalFileSystem docs)
       .config("spark.hadoop.fs.file.impl",
         "graft.sources.GraftLocalFileSystem")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._

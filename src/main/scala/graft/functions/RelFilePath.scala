@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   substring_index(path, "/data/", -1), "+", "%2B")))
   * }}}
   *
-  * Exactly like [[PartitionPathValue]]: rows arrive in file order, so
+  * Rows arrive in file order, so
   * a per-thread last-path memo turns the split + masked URL-decode
   * into one equality check per row and one real derivation per file.
   * Semantics replicated bit-for-bit: substring_index(s, "/data/", -1)

@@ -634,13 +634,12 @@ object LakehouseQueries {
     // C25: manifest-level data skipping, judged — the scan-pruning a
     // real table format exists for. The commit records per-file
     // (min,max) of o_orderkey (`statsColumns`); the write is range-
-    // partitioned so each file owns a tight key range; `readRange`
-    // prunes files on the MANIFEST's stats, before Spark lists or
-    // opens anything (StatsSkipSpec asserts the reader is handed
-    // strictly fewer files than the snapshot holds). Pruning is
-    // I/O-level, so the row-level predicate still applies on top —
-    // the hash proves pruning lost no qualifying row and leaked no
-    // pruned one. At 100 TB this is the difference between listing
+    // partitioned so each file owns a tight key range; the manifest
+    // index under `read` prunes files on the MANIFEST's stats from the
+    // filter pushed onto it, before Spark opens anything (StatsSkipSpec
+    // asserts the reader is handed strictly fewer files than the
+    // snapshot holds). The hash proves pruning lost no qualifying row
+    // and leaked no pruned one. At 100 TB this is the difference between listing
     // 100k files and listing the ~3 owning the predicate's range.
     Entry(
       "c25_stats_skip",
@@ -653,8 +652,7 @@ object LakehouseQueries {
         graft.sources.ManifestTable.commit(s, t,
           ord.repartitionByRange(8, col("o_orderkey")), SaveMode.Overwrite,
           statsColumns = Seq("o_orderkey"))
-        graft.sources.ManifestTable
-          .readRange(s, t, Seq(("o_orderkey", 1000.0, 5000.0)))
+        graft.sources.ManifestTable.read(s, t)
           .filter(col("o_orderkey").between(1000, 5000))
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("cnt"),
@@ -1276,7 +1274,7 @@ object LakehouseQueries {
     // (unclustered commit), `compact(sortBy = zkey16(part, supp),
     // statsColumns = part, supp)` (one conditional commit: z-sorted
     // larger files WITH their recorded 2-D ranges), then a 2-D box
-    // read through `readRange` on the head. Z-ordered files hold tight
+    // filter over a `read` of the head. Z-ordered files hold tight
     // ranges on BOTH dimensions, so the box keeps only the files
     // owning its tiles (StatsSkipSpec asserts the skip count against
     // this exact layout); the hash proves the full lifecycle —
@@ -1299,8 +1297,7 @@ object LakehouseQueries {
         graft.sources.ManifestTable.compact(s, t, targetFiles = 16,
           sortBy = Seq(zkey16(col("l_partkey"), col("l_suppkey"))),
           statsColumns = Seq("l_partkey", "l_suppkey"))
-        graft.sources.ManifestTable.readRange(s, t,
-            Seq(("l_partkey", 100.0, 400.0), ("l_suppkey", 10.0, 40.0)))
+        graft.sources.ManifestTable.read(s, t)
           .filter(col("l_partkey").between(100, 400) &&
             col("l_suppkey").between(10, 40))
           .groupBy("l_suppkey")

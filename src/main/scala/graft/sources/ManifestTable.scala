@@ -1489,6 +1489,7 @@ object ManifestTable {
       // must not block a constraint the visible table satisfies
       requireSatisfied(readLive(spark, table, files, schema, partBy,
           deleteTombstones(spark, table, head),
+          skipping(spark, table, head, stats),
           dvs = deleteVectors(spark, table, head)),
         Map(name -> exprSql), s"existing rows of $table")
       if (currentVersion(spark, table) == head &&
@@ -1665,10 +1666,10 @@ object ManifestTable {
         // identical stats would be a no-op version
         return head
       }
-      // tagFile=true: __f materializes inside each era scan (a
+      // __f materializes inside each era scan (a
       // mixed-era snapshot reads as a union, where `_metadata` is gone)
       val df = readFiles(spark, table, files, schemaOpt, partBy,
-        tagFile = true)
+        sizesOnly(stats), (_, d) => d.withColumn("__f", relFileCol))
       val encoded = resolved.flatMap(c =>
         statEncoder(sch(c).dataType, col(c)).map(c -> _))
       val aggs = encoded.flatMap { case (c, e) => Seq(
@@ -2196,11 +2197,11 @@ object ManifestTable {
       val cur = cacheReg.get(table)
       if (cur != null && cur._1 == v) return cur._2
     }
-    val (files, schema, _, partBy) = snapshotAll(spark, table, v)
+    val (files, schema, stats, partBy) = snapshotAll(spark, table, v)
     val df =
       if (files.isEmpty) emptyOrFail(spark, table, schema)
       else readLive(spark, table, files, schema, partBy,
-        deleteTombstones(spark, table, v),
+        deleteTombstones(spark, table, v), skipping(spark, table, v, stats),
         dvs = deleteVectors(spark, table, v))
     if (version < 0 && cacheEnabled.contains(table) && files.nonEmpty) {
       // Concurrent head reads race to populate: the registry keeps
@@ -2428,160 +2429,112 @@ object ManifestTable {
       .map(_.takeWhile(_ != '=')).toSet
   }
 
+  /** What the manifest knows for skipping a file group: per-file stats
+    * (also every file's recorded size) and, loaded only when a filter
+    * reaches the index, the hidden partition transforms and bloom
+    * config. A group read under another version's names (the change
+    * feed) passes sizes alone. */
+  private[sources] final class Skipping(
+      val stats: Map[String, Map[String, (Double, Double)]],
+      transforms0: => Seq[PartitionTransform] = Nil,
+      bloom0: => Option[BloomConfig] = None) {
+    lazy val transforms: Seq[PartitionTransform] = transforms0
+    lazy val bloom: Option[BloomConfig] = bloom0
+  }
+
+  private def skipping(spark: SparkSession, table: String, v: Int,
+                       stats: Map[String, Map[String, (Double, Double)]]) =
+    new Skipping(stats, partitionTransforms(spark, table, v),
+      bloomConfig(spark, table, v))
+
+  private def sizesOnly(stats: Map[String, Map[String, (Double, Double)]]) =
+    new Skipping(stats.map { case (f, m) => f -> m.filter(_._1 == SizeKey) })
+
+  /** The one read construction: `files` as manifest-index relations
+    * ([[ManifestFileIndex]]), surfaced under the recorded schema. */
   private def readFiles(spark: SparkSession, table: String,
                         files: Seq[String], schema: Option[StructType],
-                        partitionBy: Seq[String] = Nil,
-                        tagFile: Boolean = false): DataFrame = {
-    // partition evolution: a snapshot may mix layout eras — group by
-    // the path-carried dir set and read each era under its own
-    // data-vs-path column split, then union by name. Single-era
-    // snapshots (every pre-evolution table) take the plain path with
-    // ZERO extra cost: one group, no union. `tagFile` materializes
-    // `__f` INSIDE each era scan — `_metadata` does not survive the
-    // union, so a caller tagging on top would break on the first
-    // mixed-era table.
-    // exists-default fill groups ride the SAME split as eras: a
-    // file set mixing pre-add and post-add files scans per group so
-    // the fill is a per-group literal projection; homogeneous sets
-    // (every table without an exists-default column) take the plain
-    // single-group path with zero extra cost.
+                        partitionBy: Seq[String], skip: Skipping,
+                        perGroup: (Seq[String], DataFrame) => DataFrame =
+                          (_, d) => d): DataFrame = {
+    // partition evolution: a snapshot may mix layout eras, and an
+    // exists-default column splits pre-add from post-add files — each
+    // group reads under its own data/path column split or fill, then
+    // the groups union by name (a homogeneous set is one group, no
+    // union). `perGroup` runs INSIDE each group's scan: `_metadata`
+    // does not survive the union, so `__f`/`__ri` taggers go there.
     val fillKey = existsFillClassifier(spark, table, schema)
     val groups = files.groupBy(f => (eraDirs(f), fillKey(f))).toSeq
       .sortBy(_._2.head)
     if (groups.size > 1)
       return groups.map { case (_, fs) =>
-        readFiles(spark, table, fs, schema, partitionBy, tagFile)
+        readFiles(spark, table, fs, schema, partitionBy, skip, perGroup)
       }.reduce(_.unionByName(_))
-    val fillCols = files.headOption.map(fillKey).getOrElse(Set.empty)
-    def filled(df: DataFrame): DataFrame =
-      fillCols.foldLeft(df) { (d, c) =>
-        val f = schema.get.fields.find(_.name == c).get
-        // replace in place: pre-add files have no physical column, so
-        // the scan's null column becomes the frozen literal (codegen
-        // constant; a filter on it folds, never reaching the scan)
+    val externs = externRoots(spark, table)
+    val roots = scala.collection.mutable.HashMap.empty[Path, Path]
+    def pathOf(rel: String): Path = { // qualified once per directory
+      val p = dataPath(externs, table, rel)
+      new Path(roots.getOrElseUpdate(p.getParent,
+        fs(spark, p).makeQualified(p.getParent)), p.getName)
+    }
+    // only legacy schemaless manifests infer a schema from the footers
+    // (they predate mapping and typed partitions: partition columns
+    // surface as strings after the data columns)
+    val sch = schema.getOrElse {
+      val inferred =
+        spark.read.parquet(files.map(pathOf(_).toString): _*).schema
+      StructType(inferred.fields.filterNot(f => partitionBy.contains(f.name)) ++
+        partitionBy.filterNot(inferred.fieldNames.contains)
+          .map(StructField(_, org.apache.spark.sql.types.StringType)))
+    }
+    // the file's OWN era decides which columns its dirs carry (after an
+    // evolution away from a column, old hive-era files carry it in
+    // dirs, new flat-era files in data). Hidden transform targets are
+    // not in the recorded schema: neither read nor surfaced.
+    val era = files.headOption.map(eraDirs).getOrElse(Set.empty)
+    val (parts, data) = sch.fields.partition(f =>
+      if (schema.isEmpty) partitionBy.contains(f.name) else era.contains(physName(f)))
+    // the relation speaks PHYSICAL names (column mapping), data columns
+    // and dirs alike; a projection surfaces the logical ones in the
+    // recorded order. Nested renames ride a same-shape struct cast (a
+    // pure positional rename inside codegen). `_metadata` stays
+    // resolvable through the projection for the taggers.
+    val partitionSchema = StructType(parts.map(f =>
+      StructField(physName(f), f.dataType)))
+    val index = ManifestFileIndex(spark, table,
+      fs(spark, new Path(table)).makeQualified(new Path(table)), files, pathOf,
+      rel => skip.stats.get(rel).flatMap(_.get(SizeKey)).map(_._1.toLong),
+      partitionSchema,
+      sch.fields.iterator.map(f => physName(f) -> f.name)
+        .filter(p => p._1 != p._2).toMap,
+      sch.fields.iterator.map(f => f.name -> f.dataType).toMap, skip)
+    val base = spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+        partitionSchema,
+        relaxNulls(physType(StructType(data))).asInstanceOf[StructType],
+        None, new ManifestParquet(index.summary), Map.empty)(spark))
+    val out = base.queryExecution.analyzed.output
+    val shaped =
+      if (!hasMapping(sch) && out.map(_.name) == sch.fieldNames.toSeq) base
+      else {
+        import org.apache.spark.sql.graftbridge.ColumnBridge
+        val byName = out.map(a => a.name -> a).toMap
+        base.select(sch.fields.toIndexedSeq.map { f =>
+          val c = ColumnBridge.column(byName(physName(f)))
+          (if (hasMapping(f.dataType)) c.cast(relaxNulls(f.dataType)) else c)
+            .as(f.name)
+        }: _*)
+      }
+    // exists-default fill, in place: pre-add files have no physical
+    // column, so the scan's null column becomes the frozen literal (a
+    // codegen constant; a filter on it folds, never reaching the scan)
+    val filled = files.headOption.map(fillKey).getOrElse(Set.empty)
+      .foldLeft(shaped) { (d, c) =>
+        val f = sch(c)
         d.withColumn(c, org.apache.spark.sql.functions.expr(
           ColumnSpecs.existsDefaultOf(f).get).cast(f.dataType))
       }
-    def tagged(df: DataFrame): DataFrame =
-      filled(if (tagFile) df.withColumn("__f", relFileCol) else df)
-    // with a recorded schema, the file's OWN era decides which columns
-    // are path-carried (physical dir spelling → logical field): after
-    // an evolution away from a column, old hive-era files still derive
-    // it from their dirs while new flat-era files read it from data —
-    // the partitionBy parameter remains the legacy-manifest fallback
-    // (no schema to type path values with) and the hint for empty
-    // file lists.
-    val era = files.headOption.map(eraDirs).getOrElse(Set.empty)
-    val eraCarried: Seq[String] = schema match {
-      case Some(s) if files.nonEmpty =>
-        s.fields.filter(f => era.contains(physName(f))).map(_.name).toSeq
-      case _ => partitionBy
-    }
-    val externs = externRoots(spark, table)
-    val paths = files.map(f => dataPath(externs, table, f).toString)
-    // column mapping: scan under the PHYSICAL field names, surface the
-    // logical ones. Top level is a positional toDF rename (order is
-    // the recorded order both sides); NESTED renames ride a same-shape
-    // struct cast — Catalyst's struct cast matches fields positionally
-    // and takes the target names, so it is a pure rename (identical
-    // child types) that stays inside codegen. `_metadata` stays
-    // resolvable through both Projects (AddMetadataColumns
-    // propagates), which the partition-derivation and __f/__ri
-    // taggers below rely on.
-    def mapped(read: StructType => DataFrame, s: StructType): DataFrame = {
-      if (!hasMapping(s)) read(s)
-      else {
-        val top = read(physType(s).asInstanceOf[StructType])
-          .toDF(s.fieldNames.toIndexedSeq: _*)
-        if (!s.fields.exists(f => hasMapping(f.dataType))) top
-        else top.select(s.fields.map(f =>
-          if (hasMapping(f.dataType))
-            org.apache.spark.sql.functions.col(f.name)
-              .cast(relaxNulls(f.dataType)).as(f.name)
-          else org.apache.spark.sql.functions.col(f.name)).toIndexedSeq: _*)
-      }
-    }
-    // the recorded snapshot schema makes evolved tables readable (files
-    // predating an added column yield null for it) without mergeSchema's
-    // per-file footer pass; legacy manifests fall back to inference
-    // (legacy roots predate mapping, so inference surfaces the right —
-    // identical — names).
-    if (eraCarried.isEmpty)
-      tagged(schema.fold(spark.read.parquet(paths: _*))(s =>
-        mapped(ps => spark.read.schema(ps).parquet(paths: _*), s)))
-    else {
-      // Partitioned snapshots: the partition columns exist ONLY in the
-      // file paths (`<col>=<value>/` dirs). Spark's own partition
-      // DISCOVERY cannot express this snapshot — it requires all leaf
-      // dirs to share one directory structure, and a manifest lineage
-      // spans many `data/<uuid>/` roots ("conflicting directory
-      // structures"). So, like Delta's file index, the table derives
-      // the columns itself: scan the files under the data-only schema
-      // and compute each partition column from `_metadata.file_path`,
-      // typed by the recorded schema. url_decode reverses the writer's
-      // %-escaping exactly (a literal `+` is legal unescaped in a
-      // path, so it is pre-masked to survive the URL decoder's
-      // plus-is-space rule).
-      import org.apache.spark.sql.functions.{col, lit, regexp_extract, substring_index, url_decode, when}
-      val dataSchema = schema.map(s =>
-        StructType(s.fields.filterNot(f => eraCarried.contains(f.name))))
-      val base = dataSchema match {
-        case Some(s) => mapped(ps => spark.read.schema(ps).parquet(paths: _*), s)
-        case None => spark.read.parquet(paths: _*)
-      }
-      // HIDDEN layout columns (partition transforms) never enter the
-      // recorded schema — and never surface on a read; only partition
-      // columns the schema knows are derived back from the paths
-      // (legacy schemaless manifests derive all, the old behavior)
-      val surfaced = schema.fold(eraCarried)(s =>
-        eraCarried.filter(s.fieldNames.contains))
-      tagged(surfaced.foldLeft(base) { (df, c) =>
-        // dirs spell the column's PHYSICAL name; the recorded schema
-        // carries the logical one the derived column surfaces under
-        val dirName = schema.flatMap(_.fields.find(_.name == c))
-          .map(physName).getOrElse(c)
-        // extract from the table-RELATIVE part (after the LAST /data/,
-        // the same anchor relFileCol uses): a table rooted under a
-        // directory that happens to contain `<col>=<value>` would
-        // otherwise match the root's value for every row. Inside the
-        // relative part the pattern is unambiguous — `=` and `/` are
-        // hive-escaped inside values, so `/<col>=` occurs only as the
-        // real partition dir. The value is DOUBLY %XX-encoded in
-        // file_path (writer hive-escape, then URI %-escape) — decoded
-        // twice with '+' masked each round. All fused and per-file
-        // memoized in [[graft.functions.PartitionPathValue]] (r19: the
-        // built-in regexp + double-url_decode chain re-derived the
-        // file-constant value per ROW and was a top task cost of every
-        // partitioned read). `-Dgraft.partPathFused=false` pins the
-        // built-in chain (A/B harness; PartitionPathSpec pins equality).
-        val v: Column =
-          if (sys.props.get("graft.partPathFused").contains("false")) {
-            val pat = "/" + java.util.regex.Pattern.quote(dirName) + "=([^/]+)/"
-            val relPart =
-              substring_index(col("_metadata.file_path"), "/data/", -1)
-            val raw = regexp_extract(relPart, pat, 1)
-            def dec1(x: Column): Column = url_decode(
-              org.apache.spark.sql.functions.replace(x, lit("+"), lit("%2B")))
-            val dec = dec1(dec1(raw))
-            when(raw === "" || dec === "__HIVE_DEFAULT_PARTITION__",
-              lit(null)).otherwise(dec)
-          } else {
-            import org.apache.spark.sql.graftbridge.ColumnBridge
-            ColumnBridge.column(graft.functions.PartitionPathValue(
-              ColumnBridge.expression(col("_metadata.file_path")), dirName))
-          }
-        val typed = schema.flatMap(_.fields.find(_.name == c))
-          .map(f => v.cast(f.dataType)).getOrElse(v)
-        df.withColumn(c, typed)
-      } match {
-        // every era surfaces the RECORDED column order — withColumn
-        // appends derived columns, and after a partition evolution the
-        // recorded order need not end with them (create-time tables
-        // do; ALTER SET PARTITION SPEC never reorders)
-        case derived => schema.fold(derived)(s =>
-          derived.select(s.fieldNames.toIndexedSeq.map(col): _*))
-      })
-    }
+    perGroup(files, filled)
   }
 
   /** [[readFiles]] with pending lazy-delete tombstones applied:
@@ -2595,6 +2548,7 @@ object ManifestTable {
                        files: Seq[String], schema: Option[StructType],
                        partitionBy: Seq[String],
                        tombs: Seq[(String, Seq[String])],
+                       skip: Skipping,
                        tagFile: Boolean = false,
                        dvs: Map[String, Seq[Long]] = Map.empty,
                        tagRowIndex: Boolean = false,
@@ -2612,21 +2566,11 @@ object ManifestTable {
       tombAugment.filterNot(f => d.columns.contains(f.name))
         .foldLeft(d)((x, f) =>
           x.withColumn(f.name, lit(null).cast(f.dataType)))
-    // partition evolution: split a tombstone group by layout era
-    // BEFORE the _metadata-dependent taggers — `_metadata` does not
-    // survive readFiles' internal mixed-era union, so each era scans
-    // (and tags) alone; single-era groups take the plain path
-    def scan(fs: Seq[String]): DataFrame = {
-      // exists-default fill groups split here too (r17): readFiles'
-      // internal fill union would strand the `_metadata` taggers below
-      val fillKey = existsFillClassifier(spark, table, schema)
-      val eras = fs.groupBy(f => (eraDirs(f), fillKey(f))).toSeq
-        .sortBy(_._2.head).map(_._2)
-      if (eras.size <= 1) scanOne(fs)
-      else eras.map(scanOne).reduce(_.unionByName(_))
-    }
-    def scanOne(fs: Seq[String]): DataFrame = augment {
-      val base = readFiles(spark, table, fs, schema, partitionBy)
+    // the `_metadata`-dependent taggers and the vector anti-join run
+    // per layout-era / fill group, inside readFiles' union
+    def scan(fs: Seq[String]): DataFrame =
+      readFiles(spark, table, fs, schema, partitionBy, skip, scanOne)
+    def scanOne(fs: Seq[String], base: DataFrame): DataFrame = augment {
       val dvd = fs.filter(dvs.contains)
       if (dvd.isEmpty) {
         val t1 = if (tagFile) base.withColumn("__f", relFileCol) else base
@@ -2660,100 +2604,59 @@ object ManifestTable {
     }
   }
 
-  /** Read `version` scanning ONLY the files whose recorded per-file
-    * (min, max) stats intersect EVERY given `col -> (lo, hi)` range —
-    * the manifest-level data-skipping a filtered read of a 100 TB table
-    * lives on: the pruning decision happens on the manifest's stats,
-    * BEFORE Spark lists or opens any file. Files without stats for a
-    * constrained column are conservatively kept, so the result equals
-    * `read(...).filter(every col BETWEEN lo AND hi …)` minus nothing —
-    * callers still apply the row-level predicate; this prunes I/O, not
-    * rows. Pair with [[compact]]`(sortBy = zkey16(...))`: z-ordered
-    * files hold tight ranges on BOTH dimensions, so a 2-D box keeps
-    * only the files owning its tiles (ZOrderSkipSpec measures the
-    * payoff; StatsSkipSpec pins this read path). */
+  /** Read `version` scanning ONLY the files whose recorded (min, max)
+    * stats intersect EVERY given `col -> (lo, hi)` range (the index's
+    * min/max step on caller-given ranges in the stats' double space;
+    * files without stats for a column are kept). Unlike
+    * `read(...).filter(p)` this returns EVERY row of the kept files:
+    * it prunes I/O, not rows. Pair with
+    * [[compact]]`(sortBy = zkey16(...))`: z-ordered files hold tight
+    * ranges on BOTH dimensions, so a 2-D box keeps only the files
+    * owning its tiles (ZOrderSkipSpec measures the payoff;
+    * StatsSkipSpec pins this read path). */
   def readRange(spark: SparkSession, table: String,
                 ranges: Seq[(String, Double, Double)],
                 version: Int = -1): DataFrame = {
     val v = if (version < 0) currentVersion(spark, table) else version
     val (files, schema, stats, partBy) = snapshotAll(spark, table, v)
     if (files.isEmpty) return emptyOrFail(spark, table, schema)
-    val kept = pruneWith(files, stats, ranges)
-    if (kept.isEmpty) readFiles(spark, table, files, schema, partBy).limit(0)
+    val kept = pruneDnf(files, stats, Seq(rangeConj(ranges)))
+    val skip = skipping(spark, table, v, stats)
+    if (kept.isEmpty) readFiles(spark, table, files, schema, partBy, skip).limit(0)
     else readLive(spark, table, kept, schema, partBy,
-      deleteTombstones(spark, table, v),
+      deleteTombstones(spark, table, v), skip,
       dvs = deleteVectors(spark, table, v))
   }
 
-  /** Filtered read with AUTOMATIC data skipping (the Delta shape —
-    * the caller hands over the predicate, the table derives the
-    * pruning): range/equality constraints on stats-tracked columns are
-    * extracted from `pred`'s expression tree as a bounded DISJUNCTION
-    * of conjunctive range sets ([[extractDnf]] — so `a = 1 OR a = 5`
-    * and even mixed-column ORs prune), files outside every disjunct
-    * are skipped via the manifest, and `pred` is applied row-level on
-    * the survivors — result ≡ `read(...).filter(pred)` by construction
-    * (extraction is conservative: any subtree it cannot read — casts
-    * it cannot see through, function calls, too-wide OR fans —
-    * contributes an unconstrained branch and prunes nothing). */
+  /** Filtered read: `read(...).filter(pred)`. The manifest index under
+    * the read skips files from the filters the optimizer pushes onto
+    * it (min/max over an OR-capable DNF, transforms, buckets, blooms),
+    * exactly as for SQL on `graft.<name>` — see [[ManifestFileIndex]].
+    * Skipping shows in `inputFiles` when the session runs
+    * `graft.GraftExtensions`. */
   def readWhere(spark: SparkSession, table: String, pred: Column,
-                version: Int = -1): DataFrame = {
-    val v = if (version < 0) currentVersion(spark, table) else version
-    val (files, schema, stats, partBy) = snapshotAll(spark, table, v)
-    if (files.isEmpty) return emptyOrFail(spark, table, schema).filter(pred)
-    val conds = analyzedConditions(spark, table, pred, files, schema)
-    val dnf = conds.map(extractDnf).foldLeft(Seq(Map.empty): Dnf)(andDnf)
-    val pts = partitionTransforms(spark, table, v)
-    val types = schema.map(_.fields.map(f => f.name -> f.dataType).toMap)
-      .getOrElse(Map.empty[String, DataType])
-    val kept0 = pruneDnf(files, stats, transformDnfAugment(dnf, pts, types))
-    val kept1 = bucketDnfOf(spark, conds, pts, types)
-      .fold(kept0)(bd => pruneDnf(kept0, stats, bd))
-    val kept = bloomPrune(spark, table, v, kept1, conds, schema)
-    val base =
-      if (kept.isEmpty) readFiles(spark, table, files, schema, partBy).limit(0)
-      else readLive(spark, table, kept, schema, partBy,
-        deleteTombstones(spark, table, v),
-        dvs = deleteVectors(spark, table, v))
-    base.filter(pred)
-  }
+                version: Int = -1): DataFrame =
+    read(spark, table, version).filter(pred)
 
-  /** The range constraints `pred` itself implies, ready for
-    * [[pruneFiles]] — sound by construction (a predicate implies each
-    * of its conjuncts, so a file outside them cannot hold a matching
-    * row). The constraint tree must be RESOLVED before it is walkable
-    * (Spark 4 Columns convert lazily), so the predicate is analyzed
-    * against an EMPTY frame carrying the recorded snapshot schema —
-    * resolving through a real read would list every snapshot file just
-    * to name the columns, defeating the skip's purpose (only legacy
-    * schemaless manifests read one file's footer). The ANALYZED plan
-    * keeps the Filter (the optimizer would fold an empty relation's
-    * Filter away entirely); foldable subtrees — casts of literals,
-    * arithmetic — fold here so comparisons expose plain Literals. */
-  private def analyzedConditions(spark: SparkSession, table: String,
-                                 pred: Column, files: Seq[String],
-                                 schema: Option[StructType])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val sch = schema.orElse(files.headOption.map(fl =>
-      spark.read.parquet(
-        dataPath(externRoots(spark, table), table, fl).toString).schema))
-    if (sch.isEmpty) return Nil
-    val probe = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), sch.get).filter(pred)
-    probe.queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.map(_.transformUp {
-      case e if e.foldable && !e.isInstanceOf[Literal] =>
-        Literal.create(e.eval(), e.dataType)
-    })
-  }
+  /** The files of a read the manifest index keeps for the filters on
+    * it: the decision pinned into `df`'s optimized plan (taken here if
+    * the session runs no [[PinManifestFiles]]). */
+  private def filesKept(df: DataFrame): Seq[String] =
+    PinManifestFiles(df.queryExecution.optimizedPlan).collect {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(
+          org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+            i: ManifestFileIndex, _, _, _, _, _), _, _, _, _) => i.files
+    }.flatten.distinct
 
-  private def predicateDnfWith(spark: SparkSession, table: String,
-                               pred: Column, files: Seq[String],
-                               schema: Option[StructType]): Dnf =
-    analyzedConditions(spark, table, pred, files, schema)
-      .map(extractDnf).foldLeft(Seq(Map.empty): Dnf)(andDnf)
+  /** The files of `files` that may hold rows matching `pred`. */
+  private def candidatesFor(spark: SparkSession, table: String,
+                            files: Seq[String], schema: Option[StructType],
+                            partBy: Seq[String], skip: Skipping,
+                            pred: Column): Seq[String] = {
+    val kept = filesKept(
+      readFiles(spark, table, files, schema, partBy, skip).filter(pred)).toSet
+    files.filter(kept)
+  }
 
   // --- equality-literal DNF, the bloom-pruning counterpart of the
   // range DNF above: per disjunct, column → the equality literals the
@@ -2842,16 +2745,26 @@ object ManifestTable {
       if (e.eval(null) == null) None else Some(e)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Evaluate many derived columns over ONE one-row local plan — the
-    * prune side batches every literal hash here, so a 50-value IN
-    * costs one tiny job, not fifty (review r10 finding). The columns
-    * still route through the SHARED write-side expressions
-    * ([[bloomPosCol]] / [[transformCol]]), so hash identity holds. */
-  private def evalOnce(spark: SparkSession,
-                       cols: Seq[Column]): Option[org.apache.spark.sql.Row] =
+  /** Evaluate many derived columns over ONE one-row local relation —
+    * the prune side batches every literal hash here, so a 50-value IN
+    * costs one evaluation, not fifty (review r10 finding). The
+    * optimizer folds a projection of a local relation into its rows,
+    * so no job runs: this is safe inside the optimizer rule that pins
+    * a manifest index. The columns still route through the SHARED
+    * write-side expressions ([[bloomPosCol]] / [[transformCol]]), so
+    * hash identity holds. */
+  private def evalOnce(spark: SparkSession, cols: Seq[Column])
+      : Option[org.apache.spark.sql.catalyst.InternalRow] =
     if (cols.isEmpty) None
-    else try Some(spark.range(1).select(cols: _*).head())
-    catch { case scala.util.control.NonFatal(_) => None }
+    else try {
+      spark.createDataFrame(
+          java.util.List.of(org.apache.spark.sql.Row()), StructType(Nil))
+        .select(cols: _*).queryExecution.optimizedPlan match {
+        case org.apache.spark.sql.catalyst.plans.logical.LocalRelation(_, Seq(row), _, _) =>
+          Some(row)
+        case _ => None
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Hidden-partitioning pruning, monotone half: a disjunct bounding a
     * transform's SOURCE column also bounds the derived TARGET — days
@@ -2898,14 +2811,11 @@ object ManifestTable {
     * like the bloom path); a disjunct whose every candidate value maps
     * constrains the target to the ids' hull. None when nothing maps —
     * callers then skip the extra prune entirely. */
-  private def bucketDnfOf(spark: SparkSession,
-                          conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+  private def bucketDnfOf(spark: SparkSession, eqDnf: EqDnf,
                           pts: Seq[PartitionTransform],
                           types: Map[String, DataType]): Option[Dnf] = {
     val bpts = pts.filter(_.kind == "bucket")
-    if (bpts.isEmpty || conds.isEmpty) return None
-    val eqDnf = conds.map(extractEqDnf)
-      .foldLeft(Seq(Map.empty): EqDnf)(andEqDnf)
+    if (bpts.isEmpty) return None
     // batch every literal's bucket id into ONE local evaluation
     val wanted = eqDnf.flatMap(_.toSeq.flatMap { case (c, lits) =>
       bpts.find(_.source == c).toSeq.flatMap(pt => lits.map(l => (pt, c, l)))
@@ -2941,25 +2851,17 @@ object ManifestTable {
     if (out.forall(_.isEmpty)) None else Some(out)
   }
 
-  /** The bloom-index pruning pass [[readWhere]] runs AFTER range/stats
-    * pruning: a surviving file is dropped when, for EVERY disjunct of
+  /** The bloom-index pruning pass the manifest index runs AFTER
+    * range/stats pruning: a surviving file is dropped when, for EVERY disjunct of
     * the predicate's equality DNF, some bloom-indexed column's bit
     * sets definitively exclude every candidate value. Files without a
     * sidecar (pre-config history, lost-era configs) and columns
     * without bits are kept; sidecars load lazily per uuid dir, only
     * for files that survived range pruning. */
-  private def bloomPrune(spark: SparkSession, table: String, version: Int,
-                         files: Seq[String],
-                         conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-                         schema: Option[StructType]): Seq[String] = {
-    if (files.isEmpty || conds.isEmpty) return files
-    val cfgOpt = bloomConfig(spark, table, version)
-    if (cfgOpt.isEmpty) return files
-    val bc = cfgOpt.get
-    val types = schema.map(_.fields.map(f => f.name -> f.dataType).toMap)
-      .getOrElse(Map.empty[String, DataType])
-    val eqDnf = conds.map(extractEqDnf)
-      .foldLeft(Seq(Map.empty): EqDnf)(andEqDnf)
+  private def bloomPrune(spark: SparkSession, table: String, bc: BloomConfig,
+                         files: Seq[String], eqDnf: EqDnf,
+                         types: Map[String, DataType]): Seq[String] = {
+    if (files.isEmpty) return files
     // all distinct (column, literal) pairs any disjunct wants, hashed
     // in ONE batched local evaluation
     val wanted = eqDnf.flatMap(_.toSeq.collect {
@@ -2976,8 +2878,8 @@ object ManifestTable {
       }) match {
         case None => Map.empty
         case Some(row) => valid.zipWithIndex.flatMap { case ((c, l, _), i) =>
-          Option(row.getAs[scala.collection.Seq[Long]](i))
-            .map(s => (c, l.value) -> s.toSeq)
+          if (row.isNullAt(i)) None
+          else Some((c, l.value) -> row.getArray(i).toLongArray().toSeq)
         }.toMap
       }
     // per disjunct: indexed equality columns → candidate-value positions
@@ -3212,13 +3114,14 @@ object ManifestTable {
     }.toMap
   }
 
-  /** The pruning decision behind [[readRange]], visible for tests:
-    * (files kept, total files in the snapshot). */
+  /** The pruning decision behind [[readRange]] — the index's min/max
+    * step on the given ranges — visible for tests: (files kept, total
+    * files in the snapshot). */
   def pruneFiles(spark: SparkSession, table: String,
                  ranges: Seq[(String, Double, Double)],
                  version: Int = -1): (Seq[String], Int) = {
     val (files, _, stats, _) = snapshotAll(spark, table, version)
-    (pruneWith(files, stats, ranges), files.size)
+    (pruneDnf(files, stats, Seq(rangeConj(ranges))), files.size)
   }
 
   /** Whether the file range [mn, mx] may meet the constraint
@@ -3231,18 +3134,40 @@ object ManifestTable {
   private def mayOverlap(mn: Double, mx: Double, lo: Double, hi: Double): Boolean =
     !(mn > hi || mx < lo)
 
-  /** The pure pruning decision over an already-parsed snapshot. */
-  private def pruneWith(files: Seq[String],
-                        stats: Map[String, Map[String, (Double, Double)]],
-                        ranges: Seq[(String, Double, Double)]): Seq[String] =
-    files.filter { f =>
-      ranges.forall { case (c, lo, hi) =>
-        stats.get(f).flatMap(_.get(c)) match {
-          case Some((mn, mx)) => mayOverlap(mn, mx, lo, hi)
-          case None => true // no stats -> never pruned
-        }
-      }
+  /** Caller-given ranges as one conjunct (per-column intersection). */
+  private def rangeConj(ranges: Seq[(String, Double, Double)]): Conj =
+    ranges.foldLeft(Map.empty: Conj)((m, r) => andConj(m, Map(r._1 -> (r._2, r._3))))
+
+  /** The manifest index's file-skipping decision over `files` for the
+    * pushed filters `conds` (already renamed to logical columns):
+    * min/max stats over the predicate's OR-capable DNF, then the
+    * hidden-partition transform augmentation, then bucket ids, then
+    * bloom sidecars — each step narrows the previous one's survivors.
+    * Returns the kept files and, per step that ran, (mechanism, files
+    * in, files kept). Sound by construction: a predicate implies each
+    * of its conjuncts, so a file outside them holds no matching row. */
+  private[sources] def skipFiles(spark: SparkSession, table: String,
+      skip: Skipping, types: Map[String, DataType], files: Seq[String],
+      conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : (Seq[String], Seq[(String, Int, Int)]) = {
+    val steps = Seq.newBuilder[(String, Int, Int)]
+    def step(name: String, in: Seq[String])(out: Seq[String]): Seq[String] = {
+      steps += ((name, in.size, out.size)); out
     }
+    val dnf = conds.map(extractDnf).foldLeft(Seq(Map.empty): Dnf)(andDnf)
+    val byRange = step("min/max", files)(pruneDnf(files, skip.stats, dnf))
+    val aug = transformDnfAugment(dnf, skip.transforms, types)
+    val byTransform =
+      if (aug == dnf) byRange
+      else step("transform", byRange)(pruneDnf(byRange, skip.stats, aug))
+    val eqDnf = conds.map(extractEqDnf).foldLeft(Seq(Map.empty): EqDnf)(andEqDnf)
+    val byBucket = bucketDnfOf(spark, eqDnf, skip.transforms, types)
+      .fold(byTransform)(bd =>
+        step("bucket", byTransform)(pruneDnf(byTransform, skip.stats, bd)))
+    val kept = skip.bloom.fold(byBucket)(cfg =>
+      step("bloom", byBucket)(bloomPrune(spark, table, cfg, byBucket, eqDnf, types)))
+    (kept, steps.result())
+  }
 
   /** DNF pruning: a file survives iff SOME disjunct's every interval
     * intersects its stats (absent stats intersect everything). */
@@ -3461,7 +3386,7 @@ object ManifestTable {
               val k0 = seg.substring(0, i)
               val (k, raw) =
                 (logicalOf.getOrElse(k0, k0), unescapePath(seg.substring(i + 1)))
-              if (raw == "__HIVE_DEFAULT_PARTITION__") None
+              if (raw == DefaultPartition) None
               else partitionValueBound(raw, types.get(k)).map(v => k -> (v, v))
             }
           }.toMap
@@ -3659,7 +3584,7 @@ object ManifestTable {
     * special characters — `/`, `:`, control chars — in partition
     * values; reversing it recovers the exact value for the stats
     * encoding. */
-  private def unescapePath(s: String): String = {
+  private[sources] def unescapePath(s: String): String = {
     val sb = new StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -3689,6 +3614,9 @@ object ManifestTable {
       case _ => None
     }
   }
+
+  /** The dir value Hive-style writers give a null partition value. */
+  private[sources] val DefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
   /** Step 3: exclusive publish of `files` as version `head + 1`.
     * True iff this writer won the slot. */
@@ -5076,6 +5004,7 @@ object ManifestTable {
       val (rel, schema, headStats, partBy) = snapshotAll(spark, table, head)
       val headTombs = deleteTombstones(spark, table, head)
       val headDvs = deleteVectors(spark, table, head)
+      val headSkip = skipping(spark, table, head, headStats)
       // a merge with no insert arm can change nothing on an empty
       // table — same no-op-no-commit contract as deleteWhere
       if ((head == 0 || rel.isEmpty) && !insertUnmatched) return head
@@ -5102,7 +5031,7 @@ object ManifestTable {
           // either side, prune nothing)
           val candidates =
             if (bounds.isEmpty) rel
-            else pruneWith(rel, headStats, bounds)
+            else pruneDnf(rel, headStats, Seq(rangeConj(bounds)))
           // pass 1, the probe: the candidates' LIVE rows (tombstones
           // and deletion vectors applied — a hidden row matches
           // nothing, so its file carries by reference and its key
@@ -5112,7 +5041,7 @@ object ManifestTable {
           val matchedRows =
             if (candidates.isEmpty) Array.empty[Row]
             else readLive(spark, table, candidates, schema, partBy, headTombs,
-                tagFile = true, dvs = headDvs)
+                headSkip, tagFile = true, dvs = headDvs)
               .select(keys.map(col) :+ col("__f"): _*)
               .join(src.select(keys.map(col): _*), keys, "left_semi")
               .collect()
@@ -5126,8 +5055,7 @@ object ManifestTable {
           val bySrcVictims: Set[String] =
             (whenNotMatchedBySourceDelete.toSeq ++
               whenNotMatchedBySourceUpdate.map(_._2)).map { c =>
-              val dnf = predicateDnfWith(spark, table, c, rel, schema)
-              pruneDnf(rel, headStats, dnf).toSet
+              candidatesFor(spark, table, rel, schema, partBy, headSkip, c).toSet
             }.foldLeft(Set.empty[String])(_ ++ _)
           val affected = affectedMatched ++ bySrcVictims
           // no file rewrites and no insert arm: nothing can change —
@@ -5138,9 +5066,10 @@ object ManifestTable {
           // into the post-image — the rewrite materializes its files'
           // tombstones and vectors as a side effect)
           val tgt =
-            if (affected.isEmpty) readFiles(spark, table, rel, schema, partBy).limit(0)
+            if (affected.isEmpty)
+              readFiles(spark, table, rel, schema, partBy, headSkip).limit(0)
             else readLive(spark, table, affected.toSeq.sorted, schema, partBy,
-              headTombs, dvs = headDvs)
+              headTombs, headSkip, dvs = headDvs)
           // evolution (the commit() mergeSchema rule applied to MERGE):
           // updates may ADD columns — kept target rows read them as
           // null — but never RETYPE one
@@ -5316,8 +5245,10 @@ object ManifestTable {
             whenNotMatchedBySourceDelete.isDefined ||
             whenNotMatchedBySourceUpdate.isDefined || {
               val cand =
-                if (bounds.isEmpty) added else pruneWith(added, stats2, bounds)
-              cand.nonEmpty && !readFiles(spark, table, cand, schema2, partBy2)
+                if (bounds.isEmpty) added
+                else pruneDnf(added, stats2, Seq(rangeConj(bounds)))
+              cand.nonEmpty && !readFiles(spark, table, cand, schema2, partBy2,
+                  new Skipping(stats2))
                 .select(keys.map(col): _*)
                 .join(srcKeyRows, keys, "left_semi")
                 .isEmpty
@@ -5365,20 +5296,20 @@ object ManifestTable {
       val headTombs = deleteTombstones(spark, table, head)
       val headDvs = deleteVectors(spark, table, head)
       if (rel.isEmpty) return head
-      // extracted DNF ∧ caller-asserted conjunctive scanRanges: every
-      // disjunct is narrowed by the asserted conjuncts
-      val scanConj = scanRanges.foldLeft(Map.empty: Conj)((m, r) =>
-        andConj(m, Map(r._1 -> (r._2, r._3))))
-      val dnf = predicateDnfWith(spark, table, pred, rel, schema)
-        .map(andConj(_, scanConj))
-      val candidates = pruneDnf(rel, headStats, dnf)
+      // the index's decision for `pred`, narrowed by the caller-asserted
+      // scanRanges
+      val headSkip = skipping(spark, table, head, headStats)
+      val scanConj = rangeConj(scanRanges)
+      val candidates = pruneDnf(
+        candidatesFor(spark, table, rel, schema, partBy, headSkip, pred),
+        headStats, Seq(scanConj))
       if (candidates.isEmpty) return head
       // absolute scan path → the manifest's relative form via
       // [[relFileCol]] (everything from the last /data/ on — correct
       // at any partition-dir depth); tombstone-aware so rows another
       // (lazy) delete already hid neither match nor survive a rewrite
       val withFile = readLive(spark, table, candidates, schema, partBy,
-        headTombs, tagFile = true, dvs = headDvs)
+        headTombs, headSkip, tagFile = true, dvs = headDvs)
       val affected = withFile.filter(pred).select("__f").distinct()
         .collect().map(_.getString(0)).toSet // bounded: ≤ |snapshot files|
       if (affected.isEmpty) return head
@@ -5406,18 +5337,7 @@ object ManifestTable {
           // Lost the race — reconcile unless an interloper rewrote a
           // victim file or added a file holding rows this predicate
           // would delete (those rows would survive a carried publish);
-          // the check prunes the interloper files through the same DNF
-          // before reading them.
-          val conflicts = (added: Seq[String], schema2: Option[StructType],
-              stats2: Map[String, Map[String, (Double, Double)]],
-              partBy2: Seq[String]) => added.nonEmpty && {
-            val dnf2 = predicateDnfWith(spark, table, pred, added, schema2)
-              .map(andConj(_, scanConj))
-            val cand = pruneDnf(added, stats2, dnf2)
-            cand.nonEmpty &&
-              !readFiles(spark, table, cand, schema2, partBy2)
-                .filter(pred).isEmpty
-          }
+          val conflicts = matchIn(spark, table, pred, scanConj)
           reconcilePublish(spark, table, rel, schema, partBy, affected,
               newFiles, newStats, recordSchema, uuid, conflicts,
               checkConstraints(spark, table, head), "delete",
@@ -5432,6 +5352,20 @@ object ManifestTable {
     throw new java.util.ConcurrentModificationException(
       s"deleteWhere on $table lost $maxAttempts commit races")
   }
+
+  /** The reconcile conflict check of a predicate rewrite: does an
+    * interloper's added file hold a row `pred` matches? The files are
+    * read through an index that skips by `pred`, narrowed first by the
+    * caller-asserted ranges `within`. */
+  private def matchIn(spark: SparkSession, table: String, pred: Column,
+                      within: Conj = Map.empty)
+      : (Seq[String], Option[StructType],
+         Map[String, Map[String, (Double, Double)]], Seq[String]) => Boolean =
+    (added, schema2, stats2, partBy2) => {
+      val cand = pruneDnf(added, stats2, Seq(within))
+      cand.nonEmpty && !readFiles(spark, table, cand, schema2, partBy2,
+        new Skipping(stats2)).filter(pred).isEmpty
+    }
 
   /** TRUNCATE — the metadata-only full clear (ADVICE r14): publish a
     * new version with an EMPTY file list, carrying the schema,
@@ -5524,19 +5458,20 @@ object ManifestTable {
       val aligned = schema.map(s =>
         batch.select(s.fieldNames.toIndexedSeq.map(col): _*)).getOrElse(batch)
         .filter(coalesce(pred, lit(false)))
-      val dnf = predicateDnfWith(spark, table, pred, rel, schema)
-      val candidates = pruneDnf(rel, headStats, dnf)
+      val headSkip = skipping(spark, table, head, headStats)
+      val candidates =
+        candidatesFor(spark, table, rel, schema, partBy, headSkip, pred)
       val affected: Set[String] =
         if (candidates.isEmpty) Set.empty
         else readLive(spark, table, candidates, schema, partBy, headTombs,
-            tagFile = true, dvs = headDvs)
+            headSkip, tagFile = true, dvs = headDvs)
           .filter(pred).select("__f").distinct()
           .collect().map(_.getString(0)).toSet // bounded: ≤ |snapshot files|
       if (affected.isEmpty && aligned.isEmpty) return head
       val toWrite =
         if (affected.isEmpty) aligned
         else readLive(spark, table, affected.toSeq, schema, partBy,
-            headTombs, dvs = headDvs)
+            headTombs, headSkip, dvs = headDvs)
           // SQL DELETE semantics: a NULL predicate keeps the row
           .filter(!coalesce(pred, lit(false)))
           .unionByName(aligned)
@@ -5554,15 +5489,7 @@ object ManifestTable {
           // same conflict rule as deleteWhere: an interloper's added
           // files holding predicate-matching rows belong to the
           // replaced region — a carried publish would keep them
-          val conflicts = (added: Seq[String], schema2: Option[StructType],
-              stats2: Map[String, Map[String, (Double, Double)]],
-              partBy2: Seq[String]) => added.nonEmpty && {
-            val dnf2 = predicateDnfWith(spark, table, pred, added, schema2)
-            val cand = pruneDnf(added, stats2, dnf2)
-            cand.nonEmpty &&
-              !readFiles(spark, table, cand, schema2, partBy2)
-                .filter(pred).isEmpty
-          }
+          val conflicts = matchIn(spark, table, pred)
           reconcilePublish(spark, table, rel, schema, partBy, affected,
               newFiles, newStats, recordSchema, uuid, conflicts,
               cons, "replace-where", headTombs, baseDvs = headDvs,
@@ -5611,11 +5538,12 @@ object ManifestTable {
       val headTombs = deleteTombstones(spark, table, head)
       val headDvs = deleteVectors(spark, table, head)
       if (rel.isEmpty) return head
-      val dnf = predicateDnfWith(spark, table, pred, rel, schema)
-      val candidates = pruneDnf(rel, headStats, dnf)
+      val headSkip = skipping(spark, table, head, headStats)
+      val candidates =
+        candidatesFor(spark, table, rel, schema, partBy, headSkip, pred)
       if (candidates.isEmpty) return head
       val withFile = readLive(spark, table, candidates, schema, partBy,
-        headTombs, tagFile = true, dvs = headDvs)
+        headTombs, headSkip, tagFile = true, dvs = headDvs)
       val names = withFile.columns.filterNot(_ == "__f").toSeq
       assignments.foreach { case (c, _) => require(names.contains(c),
         s"UPDATE on $table assigns unknown column '$c' " +
@@ -5659,15 +5587,7 @@ object ManifestTable {
           // lost the race: reconcilable iff no interloper file holds a
           // row this predicate would have updated (it would silently
           // miss the update) and no victim file was itself rewritten
-          val conflicts = (added: Seq[String], schema2: Option[StructType],
-              stats2: Map[String, Map[String, (Double, Double)]],
-              partBy2: Seq[String]) => added.nonEmpty && {
-            val dnf2 = predicateDnfWith(spark, table, pred, added, schema2)
-            val cand = pruneDnf(added, stats2, dnf2)
-            cand.nonEmpty &&
-              !readFiles(spark, table, cand, schema2, partBy2)
-                .filter(pred).isEmpty
-          }
+          val conflicts = matchIn(spark, table, pred)
           reconcilePublish(spark, table, rel, schema, partBy, affected,
               newFiles, newStats, recordSchema, uuid, conflicts,
               checkConstraints(spark, table, head), "update",
@@ -5709,17 +5629,17 @@ object ManifestTable {
       val head = currentVersion(spark, table)
       val (rel, schema, headStats, partBy) = snapshotAll(spark, table, head)
       if (rel.isEmpty) return head
-      // analysis-only probe: resolves the predicate against the
-      // recorded schema (bad column references fail HERE, loudly) and
-      // yields the resolvable SQL text the read paths will re-parse
-      val probe = readFiles(spark, table, rel.take(1), schema, partBy)
-        .filter(pred)
+      // resolves the predicate against the recorded schema (bad column
+      // references fail HERE, loudly), yields the resolvable SQL text
+      // the read paths will re-parse, and — optimized — the files the
+      // index keeps for it: the tombstone's targets
+      val probe = readFiles(spark, table, rel, schema, partBy,
+        skipping(spark, table, head, headStats)).filter(pred)
       val predSql = probe.queryExecution.analyzed.collect {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.headOption.getOrElse(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(pred)).sql
-      val dnf = predicateDnfWith(spark, table, pred, rel, schema)
-      val candidates = pruneDnf(rel, headStats, dnf)
+      val candidates = { val k = filesKept(probe).toSet; rel.filter(k) }
       if (candidates.isEmpty) return head
       val tombs = deleteTombstones(spark, table, head) :+ (predSql, candidates)
       beforeConditionalCommit()
@@ -5761,14 +5681,16 @@ object ManifestTable {
       if (rel.isEmpty) return head
       val headTombs = deleteTombstones(spark, table, head)
       val headDvs = deleteVectors(spark, table, head)
-      val dnf = predicateDnfWith(spark, table, pred, rel, schema)
-      val candidates = pruneDnf(rel, headStats, dnf)
+      val headSkip = skipping(spark, table, head, headStats)
+      val candidates =
+        candidatesFor(spark, table, rel, schema, partBy, headSkip, pred)
       if (candidates.isEmpty) return head
       // the victim scan sees the LIVE table (rows already hidden by a
       // tombstone or an earlier vector neither match nor re-record)
       import org.apache.spark.sql.functions.col
       val victims = readLive(spark, table, candidates, schema, partBy,
-          headTombs, tagFile = true, dvs = headDvs, tagRowIndex = true)
+          headTombs, headSkip, tagFile = true, dvs = headDvs,
+          tagRowIndex = true)
         .filter(pred)
         .select(col("__f"), col("__ri"))
         .collect() // bounded by matched rows — the scattered-delete unit
@@ -5810,7 +5732,7 @@ object ManifestTable {
         .distinct.filter(relSet).sorted
       if (targeted.isEmpty) return head
       val survivors = readLive(spark, table, targeted, schema, partBy, tombs,
-        dvs = dvsHead)
+        sizesOnly(headStats), dvs = dvsHead)
       val (uuid, newFiles, newStats) =
         writeData(spark, table, survivors, statsColumnsOf(headStats), partBy,
           inputBytes = Some(rewriteBytes(headStats, targeted)))
@@ -5878,38 +5800,19 @@ object ManifestTable {
       val toFields = snapshotSchema(spark, table, to)
         .map(_.fields.toSeq).getOrElse(Nil)
       val unioned = groups.map { case (v, fs) =>
-        // re-spell the group schema to the TO-version logical names
-        // (column mapping, r12): a column renamed inside the range
-        // keeps its physical identity, so the group reads the same
-        // bytes but surfaces the name the to-version projection and
-        // tombstone predicates speak — without this, the projection
-        // would null-fill the "missing" new name and silently drop
-        // the old one
-        val gSchema = snapshotSchema(spark, table, v)
-          .map(respellTo(_, toFields))
+        // re-spelled to the TO-version names (see [[layoutAs]]) —
+        // without it the projection would null-fill the "missing" new
+        // name and silently drop the old one
+        val (gSchema, gPartBy) = layoutAs(spark, table, v, to)
         // to-version columns this group's schema lacks: null-filled
         // before the to-version tombstone filters resolve (see
         // readLive's tombAugment note)
         val missing = gSchema.map(g =>
           toFields.filterNot(f => g.fieldNames.contains(f.name)))
           .getOrElse(Nil)
-        // a PARTITION column renamed inside the range re-spells like
-        // every schema field (r13): the group's layout list must speak
-        // the respelled name the gSchema fields carry, or the read
-        // would treat the renamed column as data (nulls from the
-        // files) and never derive it from its physical dir key.
-        // respellTo preserves field positions, so a positional zip
-        // maps each v-era name to its to-version spelling.
-        val vSchema = snapshotSchema(spark, table, v)
-        val renameOf: Map[String, String] =
-          vSchema.map(_.fields.toSeq).getOrElse(Nil)
-            .zip(gSchema.map(_.fields.toSeq).getOrElse(Nil))
-            .map { case (a, b) => a.name -> b.name }.toMap
-        val gPartBy = partitionColumns(spark, table, v)
-          .map(p => renameOf.getOrElse(p, p))
-        readLive(spark, table, fs,
-          gSchema, gPartBy,
-          toTombs, dvs = toDvs, tombAugment = missing)
+        readLive(spark, table, fs, gSchema, gPartBy, toTombs,
+          sizesOnly(snapshotStats(spark, table, v)), dvs = toDvs,
+          tombAugment = missing)
       }.reduce(_.unionByName(_, allowMissingColumns = true))
       snapshotSchema(spark, table, to) match {
         case Some(s) =>
@@ -5936,9 +5839,11 @@ object ManifestTable {
     * columns plus `_change_type` ∈ {insert, update_post, delete} —
     * insert and update_post carry the post-image row, delete the
     * pre-image. Rows untouched between the versions are absent.
-    * Derived, not bookkept: [[changes]]' file-granular diff narrows
-    * both sides to the CHURNED files only (rows in files added to the
-    * lineage vs rows in files dropped from it), and a full-outer join
+    * Derived, not bookkept: [[multisetDelta]]'s file-granular diff
+    * narrows both sides to the CHURNED files only (rows in files added
+    * to the lineage vs rows in files dropped from it, plus files whose
+    * deletion vector changed — so a vectored delete is reported once,
+    * in the range holding its commit), and a full-outer join
     * on `keys` classifies each — a rewritten-but-identical survivor
     * (same key, null-safe-equal row) is filtered out, which is exactly
     * the spurious duplication c23's hand-rolled feed had to `distinct`
@@ -5949,62 +5854,11 @@ object ManifestTable {
   def rowChanges(spark: SparkSession, table: String, sinceVersion: Int,
                  keys: Seq[String], toVersion: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, struct, when}
-    val to = if (toVersion < 0) currentVersion(spark, table) else toVersion
-    require(sinceVersion <= to,
-      s"sinceVersion $sinceVersion is beyond version $to of $table")
-    val before = snapshotFiles(spark, table, sinceVersion)
-    val after = snapshotFiles(spark, table, to)
-    val added = after.filterNot(before.toSet)
-    val removed = before.filterNot(after.toSet)
-    // each side reads under ITS OWN version's recorded schema and
-    // partition layout — the snapshot-homogeneity rule guarantees
-    // added ⊆ to-layout and removed ⊆ since-layout, and reading the
-    // since side under the to layout would strip a physically-present
-    // column and re-derive it as null from paths that have no
-    // `<col>=` segment (a layout-changing overwrite mid-range). The
-    // pre side then ALIGNS to the to-version column set: missing
-    // (later-added) columns null, to-dropped columns projected away —
-    // the same null semantics the old to-schema read gave for pure
-    // column evolution.
-    val schema = snapshotSchema(spark, table, to)
-    val partedBy = partitionColumns(spark, table, to)
-    def emptySide: DataFrame = read(spark, table, to).limit(0)
-    // POST side reads live under the to-version delete state: a row
-    // inserted and then lazy-deleted inside the range is not an
-    // insert (it is not live at `to`), and a rewritten row the head
-    // vectors away classifies as DELETE, not update. The PRE side
-    // stays raw on purpose — that is what makes a materialization's
-    // rewrites surface the deferred deletes exactly once.
-    val post =
-      if (added.nonEmpty) readLive(spark, table, added, schema, partedBy,
-        deleteTombstones(spark, table, to), dvs = deleteVectors(spark, table, to))
-      else emptySide
+    // tombstones are deferred deletes: they surface exactly once, when
+    // a rewrite materializes them
+    val (post, pre) = multisetDelta(spark, table, sinceVersion, toVersion,
+      deferTombstones = true)
     val cols = post.columns.toSeq
-    val typeOf = post.schema.map(f => f.name -> f.dataType).toMap
-    val pre =
-      if (removed.isEmpty) emptySide
-      else {
-        // since-version schema re-spelled to the to-version logical
-        // names (column mapping): a rename inside the range must not
-        // null the pre-image out of the key/struct comparison
-        val toF = snapshotSchema(spark, table, to).map(_.fields.toSeq)
-        val sinceSchema = snapshotSchema(spark, table, sinceVersion)
-        val respelled = sinceSchema.map(s => toF.fold(s)(respellTo(s, _)))
-        // the since-version layout list re-spells with the schema
-        // (r13, partition-column rename): respellTo preserves field
-        // positions, so a positional zip maps each name
-        val renameOf: Map[String, String] =
-          sinceSchema.map(_.fields.toSeq).getOrElse(Nil)
-            .zip(respelled.map(_.fields.toSeq).getOrElse(Nil))
-            .map { case (a, b) => a.name -> b.name }.toMap
-        val raw = readFiles(spark, table, removed, respelled,
-          partitionColumns(spark, table, sinceVersion)
-            .map(p => renameOf.getOrElse(p, p)))
-        val have = raw.columns.toSet
-        raw.select(cols.map(c =>
-          if (have.contains(c)) col(c)
-          else lit(null).cast(typeOf(c)).as(c)): _*)
-      }
     def keyed(df: DataFrame, as: String): DataFrame =
       df.select(keys.map(col) :+ struct(cols.map(col): _*).as(as): _*)
     keyed(post, "_post").join(keyed(pre, "_pre"), keys, "full_outer")
@@ -6022,21 +5876,35 @@ object ManifestTable {
   }
 
   /** Multiset row delta between two versions (r17, incremental
-    * materialized-view maintenance): `(entered, left)` — the live rows
-    * that ENTERED the snapshot and the live rows that LEFT it, both
-    * under the to-version column set. Unlike [[rowChanges]] this needs
-    * NO key columns and does NO join: a compaction's
-    * rewritten-but-identical row appears on both sides and cancels in
-    * any additive use; the dirty-GROUP rescan only projects the
-    * union's group keys, where double-appearance is harmless. Cost is
-    * O(churned files): the added/removed file diff, plus shared files
-    * whose row-level delete state — deletion vectors or tombstone
-    * targeting — changed between the versions (a metadata-only lazy
-    * delete churns no file yet changes the live rowset; both sides
-    * read such a file LIVE under their own version's delete state, so
-    * the difference is exactly the newly-hidden rows). */
+    * materialized-view maintenance; also [[rowChanges]]' two sides):
+    * `(entered, left)` — the live rows that ENTERED the snapshot and
+    * the live rows that LEFT it, both under the to-version column set.
+    * No key columns and no join: a compaction's rewritten-but-identical
+    * row appears on both sides and cancels in any additive use; the
+    * dirty-GROUP rescan only projects the union's group keys, where
+    * double-appearance is harmless. Cost is O(churned files): the
+    * added/removed file diff, plus shared files whose row-level delete
+    * state — deletion vectors or tombstone targeting — changed between
+    * the versions (a metadata-only delete churns no file yet changes
+    * the live rowset; both sides read such a file LIVE under their own
+    * version's delete state, so the difference is exactly the
+    * newly-hidden rows).
+    *
+    * Each side reads under ITS OWN version's recorded schema and
+    * partition layout (the snapshot-homogeneity rule guarantees added
+    * ⊆ to-layout and removed ⊆ since-layout; reading the since side
+    * under the to layout would strip a physically-present column and
+    * re-derive it as null from paths without `<col>=` dirs). The since
+    * side is re-spelled to the to-version logical names (column
+    * mapping: a rename inside the range keeps its physical identity)
+    * and aligned to the to-version column set — missing columns null,
+    * dropped ones projected away. With `deferTombstones` tombstones
+    * are not row state: the since side reads them raw and a changed
+    * target list churns nothing, so a lazy delete surfaces once, when
+    * a rewrite drops its file. */
   private[sources] def multisetDelta(spark: SparkSession, table: String,
-      sinceVersion: Int, toVersion: Int = -1): (DataFrame, DataFrame) = {
+      sinceVersion: Int, toVersion: Int = -1,
+      deferTombstones: Boolean = false): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.{col, lit}
     val to = if (toVersion < 0) currentVersion(spark, table) else toVersion
     require(sinceVersion <= to,
@@ -6048,11 +5916,13 @@ object ManifestTable {
     val removed = before.filterNot(afterSet)
     val dvS = deleteVectors(spark, table, sinceVersion)
     val dvT = deleteVectors(spark, table, to)
+    val tombS = if (deferTombstones) Nil else deleteTombstones(spark, table, sinceVersion)
+    val tombT = deleteTombstones(spark, table, to)
     def predsOf(tb: Seq[(String, Seq[String])]): Map[String, Seq[String]] =
       tb.flatMap { case (p, fs) => fs.map(_ -> p) }
         .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    val pS = predsOf(deleteTombstones(spark, table, sinceVersion))
-    val pT = predsOf(deleteTombstones(spark, table, to))
+    val pS = predsOf(tombS)
+    val pT = if (deferTombstones) pS else predsOf(tombT)
     val dvChurned = after.filter(beforeSet).filter(f =>
       dvS.get(f) != dvT.get(f) || pS.get(f) != pT.get(f))
     val schema = snapshotSchema(spark, table, to)
@@ -6061,8 +5931,8 @@ object ManifestTable {
     val post = {
       val fs = added ++ dvChurned
       if (fs.isEmpty) emptySide
-      else readLive(spark, table, fs, schema, partedBy,
-        deleteTombstones(spark, table, to), dvs = dvT)
+      else readLive(spark, table, fs, schema, partedBy, tombT,
+        sizesOnly(snapshotStats(spark, table, to)), dvs = dvT)
     }
     val cols = post.columns.toSeq
     val typeOf = post.schema.map(f => f.name -> f.dataType).toMap
@@ -6070,19 +5940,9 @@ object ManifestTable {
       val fs = removed ++ dvChurned
       if (fs.isEmpty) emptySide
       else {
-        // since-version schema re-spelled to the to-version logical
-        // names (column mapping), exactly as rowChanges' pre side
-        val toF = snapshotSchema(spark, table, to).map(_.fields.toSeq)
-        val sinceSchema = snapshotSchema(spark, table, sinceVersion)
-        val respelled = sinceSchema.map(s => toF.fold(s)(respellTo(s, _)))
-        val renameOf: Map[String, String] =
-          sinceSchema.map(_.fields.toSeq).getOrElse(Nil)
-            .zip(respelled.map(_.fields.toSeq).getOrElse(Nil))
-            .map { case (a, b) => a.name -> b.name }.toMap
-        val raw = readLive(spark, table, fs, respelled,
-          partitionColumns(spark, table, sinceVersion)
-            .map(p => renameOf.getOrElse(p, p)),
-          deleteTombstones(spark, table, sinceVersion), dvs = dvS)
+        val (respelled, partBy) = layoutAs(spark, table, sinceVersion, to)
+        val raw = readLive(spark, table, fs, respelled, partBy, tombS,
+          sizesOnly(snapshotStats(spark, table, sinceVersion)), dvs = dvS)
         val have = raw.columns.toSet
         raw.select(cols.map(c =>
           if (have.contains(c)) col(c)
@@ -6090,6 +5950,24 @@ object ManifestTable {
       }
     }
     (post, pre)
+  }
+
+  /** Version `v`'s recorded schema and partition columns re-spelled to
+    * version `to`'s logical names through the stable physical identity
+    * (column mapping, r12/r13): a column — partition columns included
+    * — renamed between the two keeps its bytes and dirs but surfaces
+    * under the name the to-version projection and predicates speak.
+    * [[respellTo]] preserves field positions, so a positional zip maps
+    * each v-era name to its to-version spelling. */
+  private def layoutAs(spark: SparkSession, table: String, v: Int,
+                       to: Int): (Option[StructType], Seq[String]) = {
+    val toFields = snapshotSchema(spark, table, to).map(_.fields.toSeq).getOrElse(Nil)
+    val vSchema = snapshotSchema(spark, table, v)
+    val respelled = vSchema.map(respellTo(_, toFields))
+    val renameOf = vSchema.map(_.fields.toSeq).getOrElse(Nil)
+      .zip(respelled.map(_.fields.toSeq).getOrElse(Nil))
+      .map { case (a, b) => a.name -> b.name }.toMap
+    (respelled, partitionColumns(spark, table, v).map(p => renameOf.getOrElse(p, p)))
   }
 
   /** OPTIMIZE-style compaction: rewrite the head snapshot into
@@ -6114,7 +5992,8 @@ object ManifestTable {
     // lazy delete (its publish clears them — see below)
     val tombs0 = deleteTombstones(spark, table, head)
     val dvs0 = deleteVectors(spark, table, head)
-    val df0 = readLive(spark, table, rel0, schema0, partBy, tombs0, dvs = dvs0)
+    val df0 = readLive(spark, table, rel0, schema0, partBy, tombs0,
+      sizesOnly(stats0), dvs = dvs0)
     // Hidden partition-transform targets are NOT in the read frame (the
     // read hides them by design) — shuffling "on the partition columns"
     // must recompute them from their sources through the ONE shared
@@ -6311,8 +6190,8 @@ object ManifestTable {
       val head = currentVersion(spark, table)
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
-      val sch = schema.getOrElse(recordedSchema(
-        readFiles(spark, table, files.take(1), None, partBy).schema, partBy))
+      val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
+        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
       val edited = cols.foldLeft(sch) { case (cur, (path, dataType)) =>
         val (parent, name) = (path.init, path.last)
         val dotted = path.mkString(".")
@@ -6527,8 +6406,8 @@ object ManifestTable {
       val head = currentVersion(spark, table)
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
-      val sch = schema.getOrElse(recordedSchema(
-        readFiles(spark, table, files.take(1), None, partBy).schema, partBy))
+      val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
+        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
       cols.filter(_._1.length == 1).foreach { case (path, _) =>
         val name = path.head
         // bucket is the one type-SENSITIVE transform (xxhash64 of int vs
@@ -6593,8 +6472,8 @@ object ManifestTable {
       val head = currentVersion(spark, table)
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
-      val sch = schema.getOrElse(recordedSchema(
-        readFiles(spark, table, files.take(1), None, partBy).schema, partBy))
+      val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
+        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
       val edited = edits.foldLeft(sch) { case (cur, (name, sqlOpt)) =>
         val f = cur.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
           throw new IllegalArgumentException(
@@ -6675,8 +6554,8 @@ object ManifestTable {
       val head = currentVersion(spark, table)
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
-      val sch = schema.getOrElse(recordedSchema(
-        readFiles(spark, table, files.take(1), None, partBy).schema, partBy))
+      val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
+        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
       if (path.length == 1) {
         // top-level-only references: layout transforms and bloom
         // sidecars spell TOP-LEVEL names (existence and
@@ -6854,8 +6733,8 @@ object ManifestTable {
       val head = currentVersion(spark, table)
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
-      val sch = schema.getOrElse(recordedSchema(
-        readFiles(spark, table, files.take(1), None, partBy).schema, partBy))
+      val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
+        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
       names.foreach { name =>
         require(!partBy.contains(name),
           s"cannot drop partition column '$name'")
@@ -7061,9 +6940,9 @@ object ManifestTable {
     val scoped = where match {
       case None => rel0
       case Some(pred) =>
-        val dnf = predicateDnfWith(spark, table, pred, rel0,
-          snapshotSchema(spark, table, head0))
-        pruneDnf(rel0, snapshotStats(spark, table, head0), dnf)
+        val (_, schema0, stats0, partBy0) = snapshotAll(spark, table, head0)
+        candidatesFor(spark, table, rel0, schema0, partBy0,
+          skipping(spark, table, head0, stats0), pred)
     }
     val small = scoped.map(r => r -> sizeOf(r)).filter(_._2 < minFileBytes)
     // partition-local bins: group by the file's partition dir prefix
@@ -7098,7 +6977,7 @@ object ManifestTable {
         // maxBinBytes, and one output file is the entire point of packing;
         // tombstone-aware — packing materializes the bin files' deletes
         val df = readLive(spark, table, binFiles, schema, partBy, binTombs,
-            dvs = deleteVectors(spark, table, head))
+            sizesOnly(headStats), dvs = deleteVectors(spark, table, head))
           .coalesce(1)
         val cols = (statsColumnsOf(headStats) ++ statsColumns).distinct.sorted
         val (uuid, newFiles, newStats) = writeData(spark, table, df, cols, partBy)

@@ -126,11 +126,35 @@ class DeletionVectorSpec extends AnyFunSuite with SparkFixture {
     ManifestTable.deleteWhereVector(spark, t2, col("id") === 2L)
     assert(ids(ManifestTable.changes(spark, t2, 0)) === Set(1L, 3L),
       "a vector-deleted row must not flow to feed consumers as live")
-    // materialization surfaces the deferred delete exactly once
-    ManifestTable.materializeDeletes(spark, t2)
-    val mat = ManifestTable.rowChanges(spark, t2, 2, Seq("id"))
+    // the vectored delete surfaces exactly once: in the range holding
+    // the vector's commit, not again when materialization rewrites the
+    // file — and a range spanning both reports it once too
+    def feed(tb: String, since: Int) = ManifestTable.rowChanges(spark, tb, since, Seq("id"))
       .collect().map(r => (r.getLong(0), r.getAs[String]("_change_type"))).toSet
-    assert(mat === Set((2L, "delete")), s"got $mat")
+    assert(feed(t2, 1) === Set((2L, "delete")))
+    ManifestTable.materializeDeletes(spark, t2)
+    assert(feed(t2, 2) === Set(), "materialization must not report the delete again")
+    assert(feed(t2, 1) === Set((2L, "delete")))
+  }
+
+  test("a vectored delete in a rewritten file is reported once across consecutive ranges") {
+    // the file the vector lands in was itself written by a rewrite: the
+    // range holding both reports the delete (pre-image from the older
+    // file, post-image vectored away); the later materialization must
+    // not report it a second time
+    val t = fresh()
+    ManifestTable.commit(spark, t, df(1L -> "a", 2L -> "b", 3L -> "c").coalesce(1),
+      SaveMode.Overwrite, statsColumns = Seq("id"))                  // v1
+    ManifestTable.upsert(spark, t, df(2L -> "B"), Seq("id"))          // v2: rewrite
+    ManifestTable.deleteWhereVector(spark, t, col("id") === 3L)       // v3: vector
+    ManifestTable.materializeDeletes(spark, t)                        // v4: rewrite
+    def deletes(since: Int, to: Int) =
+      ManifestTable.rowChanges(spark, t, since, Seq("id"), to)
+        .filter(col("_change_type") === "delete").collect().map(_.getLong(0)).toSeq
+    assert(deletes(1, 3) === Seq(3L))
+    assert(deletes(3, 4) === Nil, "the materialization re-reported the vectored delete")
+    assert(deletes(1, 4) === Seq(3L))
+    assert(ids(ManifestTable.read(spark, t)) === Set(1L, 2L))
   }
 
   test("vectors work on a partitioned table (path-derived columns, per-file positions)") {

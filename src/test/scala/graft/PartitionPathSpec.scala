@@ -5,36 +5,24 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.sources.ManifestTable
 
-/** r19 optimization: partition columns derived from
-  * `_metadata.file_path` go through the fused, per-file-memoized
-  * graft.functions.PartitionPathValue instead of the per-row
-  * regexp + double-url_decode chain. These tests pin equality of the
-  * two paths (`-Dgraft.partPathFused=false` pins the chain) across the
-  * writer's whole escaping surface. */
+/** Partition values come from the manifest index: each recorded
+  * relative path's `<col>=<value>` dirs, hive-unescaped once and cast
+  * to the recorded type (`__HIVE_DEFAULT_PARTITION__` is null). These
+  * tests pin the writer's whole escaping surface, typed values, a
+  * table root that itself sits under a `<col>=<value>` dir, and a
+  * renamed partition column (the dirs keep the physical name). */
 class PartitionPathSpec extends AnyFunSuite with SparkFixture {
 
   private def fresh(): String =
     java.nio.file.Files.createTempDirectory("graft_ppath").toString
 
-  private def withFused[A](on: Boolean)(body: => A): A = {
-    val k = "graft.partPathFused"
-    val old = sys.props.get(k)
-    sys.props(k) = on.toString
-    try body finally old match {
-      case Some(v) => sys.props(k) = v
-      case None => sys.props -= k
-    }
-  }
-
-  test("fused partition derivation equals the built-in chain on adversarial values") {
+  test("partition values round-trip the writer's escaping on adversarial values") {
     import spark.implicits._
-    // every escaping hazard: space, '+', '%', '=', '/', ':', unicode,
-    // a value that LOOKS like the null marker's neighbor, and NULL
-    // (written as __HIVE_DEFAULT_PARTITION__)
+    // every escaping hazard: space, '+', '%', '=', '/', ':', a
+    // %-escape-looking value, a value that LOOKS like the null
+    // marker's neighbor, and NULL (written as __HIVE_DEFAULT_PARTITION__)
     // (a unicode value is not writable on this JVM's POSIX file
-    // encoding — an FS limit predating this change — so the unicode
-    // decode path is pinned at the expression level instead, via the
-    // %-escaped spelling "%C3%BC" below)
+    // encoding, so "%C3%BC" stands in for its escaped spelling)
     val vals = Seq("plain", "with space", "a+b", "50%off", "k=v", "a/b",
       "c:d", "%C3%BC", "a++b", "__HIVE_DEFAULT_partition__", null)
     val df = vals.zipWithIndex
@@ -42,29 +30,47 @@ class PartitionPathSpec extends AnyFunSuite with SparkFixture {
     val t = fresh()
     ManifestTable.commit(spark, t, df, SaveMode.Overwrite,
       partitionBy = Seq("k"))
-    def readAll(fused: Boolean): Seq[(Long, Option[String])] = withFused(fused) {
-      ManifestTable.read(spark, t).select("id", "k").collect()
-        .map(r => (r.getLong(0), Option(r.getString(1)))).toSeq.sortBy(_._1)
+    val got = ManifestTable.read(spark, t).select("id", "k").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).toSeq.sortBy(_._1)
+    assert(got === vals.zipWithIndex.map { case (v, i) => (i.toLong, Option(v)) })
+    // a filter on an escaped value selects exactly its partition's file
+    Seq("k=v", "a/b", "50%off", "a+b").foreach { v =>
+      val hit = ManifestTable.read(spark, t).filter(col("k") === v)
+      assert(hit.inputFiles.length === 1, v)
+      assert(hit.select("id").as[Long].collect().toSeq ===
+        Seq(vals.indexOf(v).toLong), v)
     }
-    val a = readAll(true)
-    val b = readAll(false)
-    assert(a === b)
-    // and both must round-trip the written values exactly
-    assert(a === vals.zipWithIndex.map { case (v, i) => (i.toLong, Option(v)) })
+    val nul = ManifestTable.read(spark, t).filter(col("k").isNull)
+    assert(nul.inputFiles.length === 1)
+    assert(nul.select("id").as[Long].collect().toSeq === Seq(vals.size - 1L))
   }
 
-  test("typed (non-string) partition values derive identically") {
+  test("typed values, a root under a <col>=<v> dir and a renamed column read back") {
     import spark.implicits._
-    val df = (1 to 40).map(i => (i.toLong, i % 4, java.sql.Date.valueOf(f"202${i % 3}%d-01-0${i % 9 + 1}%d")))
-      .toDF("id", "bucket", "d")
-    val t = fresh()
-    ManifestTable.commit(spark, t, df, SaveMode.Overwrite,
+    val rows = (1 to 40).map(i =>
+      (i.toLong, i % 4, java.sql.Date.valueOf(f"202${i % 3}%d-01-0${i % 9 + 1}%d")))
+    val df = rows.toDF("id", "bucket", "d")
+    // the table root itself sits under dirs spelled like partitions
+    val root = new java.io.File(fresh(), "bucket=9/d=1999-01-01").getAbsolutePath
+    ManifestTable.commit(spark, root, df, SaveMode.Overwrite,
       partitionBy = Seq("bucket", "d"))
-    def sums(fused: Boolean) = withFused(fused) {
-      ManifestTable.read(spark, t)
-        .groupBy("bucket").agg(count(lit(1)).as("n"), max("d").as("mx"))
-        .orderBy("bucket").collect().map(_.toSeq).toSeq
-    }
-    assert(sums(true) === sums(false))
+    def read() = ManifestTable.read(spark, root)
+    assert(read().schema.map(f => f.name -> f.dataType.simpleString) ===
+      Seq("id" -> "bigint", "bucket" -> "int", "d" -> "date"))
+    val got = read().as[(Long, Int, java.sql.Date)].collect().sortBy(_._1).toSeq
+    assert(got === rows)
+    // typed pruning on the values: int equality and a date range
+    val b2 = read().filter(col("bucket") === 2)
+    assert(b2.count() === rows.count(_._2 == 2))
+    assert(b2.inputFiles.forall(_.contains("bucket=2/")))
+    assert(read().filter(col("d") >= lit(java.sql.Date.valueOf("2022-01-01")))
+      .count() === rows.count(_._3.toString >= "2022-01-01"))
+    // a renamed partition column keeps its physical dirs
+    ManifestTable.renameColumn(spark, root, "bucket", "shard")
+    val renamed = read().filter(col("shard") === 3)
+    assert(renamed.columns.toSeq === Seq("id", "shard", "d"))
+    assert(renamed.select("id").as[Long].collect().toSet ===
+      rows.filter(_._2 == 3).map(_._1).toSet)
+    assert(renamed.inputFiles.forall(_.contains("bucket=3/")))
   }
 }

@@ -61,7 +61,7 @@ class RelFilePathSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import graft.sources.ManifestTable
     def withArms[A](fusedOn: Boolean)(body: => A): A = {
-      val keys = Seq("graft.relFileFused", "graft.partPathFused")
+      val keys = Seq("graft.relFileFused")
       val old = keys.map(k => k -> sys.props.get(k))
       keys.foreach(k => sys.props(k) = fusedOn.toString)
       try body finally old.foreach {
