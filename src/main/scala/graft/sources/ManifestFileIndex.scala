@@ -111,6 +111,17 @@ final class ManifestFileIndex private (
   }
 
   override def toString: String = s"ManifestFileIndex($summary)[$table]"
+
+  // value equality (InMemoryFileIndex's is by root paths), so a
+  // self-join reuses its exchange and a cached read matches a later one;
+  // data files are immutable and uniquely named
+  private lazy val identity =
+    (table, root, entries.map(_.rel).sorted, partitionSchema, decision)
+  override def equals(o: Any): Boolean = o match {
+    case m: ManifestFileIndex => m.identity == identity
+    case _ => false
+  }
+  override def hashCode: Int = identity.hashCode
 }
 
 object ManifestFileIndex {

@@ -1669,7 +1669,7 @@ object ManifestTable {
       // __f materializes inside each era scan (a
       // mixed-era snapshot reads as a union, where `_metadata` is gone)
       val df = readFiles(spark, table, files, schemaOpt, partBy,
-        sizesOnly(stats), (_, d) => d.withColumn("__f", relFileCol))
+        new Skipping(stats), (_, d) => d.withColumn("__f", relFileCol))
       val encoded = resolved.flatMap(c =>
         statEncoder(sch(c).dataType, col(c)).map(c -> _))
       val aggs = encoded.flatMap { case (c, e) => Seq(
@@ -2433,7 +2433,8 @@ object ManifestTable {
     * (also every file's recorded size) and, loaded only when a filter
     * reaches the index, the hidden partition transforms and bloom
     * config. A group read under another version's names (the change
-    * feed) passes sizes alone. */
+    * feed's older groups) passes [[sizesOnly]], so no filter can prune
+    * it by stats keyed under the wrong names. */
   private[sources] final class Skipping(
       val stats: Map[String, Map[String, (Double, Double)]],
       transforms0: => Seq[PartitionTransform] = Nil,
@@ -2745,26 +2746,33 @@ object ManifestTable {
       if (e.eval(null) == null) None else Some(e)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Evaluate many derived columns over ONE one-row local relation —
-    * the prune side batches every literal hash here, so a 50-value IN
-    * costs one evaluation, not fifty (review r10 finding). The
-    * optimizer folds a projection of a local relation into its rows,
-    * so no job runs: this is safe inside the optimizer rule that pins
-    * a manifest index. The columns still route through the SHARED
-    * write-side expressions ([[bloomPosCol]] / [[transformCol]]), so
-    * hash identity holds. */
+  /** Evaluate many derived columns at once, on the driver — the prune
+    * side batches every literal hash here, so a 50-value IN costs one
+    * evaluation, not fifty (review r10 finding). Only the analyzer runs
+    * (to resolve the functions), then the expressions evaluate directly:
+    * no job and no optimizer rule, so this is safe inside the optimizer
+    * rule that pins a manifest index. The columns still route through
+    * the SHARED write-side expressions ([[bloomPosCol]] /
+    * [[transformCol]]), so hash identity holds. A failure keeps every
+    * file and logs why. */
   private def evalOnce(spark: SparkSession, cols: Seq[Column])
       : Option[org.apache.spark.sql.catalyst.InternalRow] =
     if (cols.isEmpty) None
     else try {
-      spark.createDataFrame(
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.plans.logical.Project
+      val analyzed = spark.createDataFrame(
           java.util.List.of(org.apache.spark.sql.Row()), StructType(Nil))
-        .select(cols: _*).queryExecution.optimizedPlan match {
-        case org.apache.spark.sql.catalyst.plans.logical.LocalRelation(_, Seq(row), _, _) =>
-          Some(row)
-        case _ => None
+        .select(cols: _*).queryExecution.analyzed
+      org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(analyzed) match {
+        case Project(list, _) =>
+          Some(InternalRow.fromSeq(list.map(_.eval(InternalRow.empty))))
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case e: Exception =>
+      org.slf4j.LoggerFactory.getLogger(getClass)
+        .warn("bucket/bloom skipping off for this scan: literal hashing failed", e)
+      None
+    }
 
   /** Hidden-partitioning pruning, monotone half: a disjunct bounding a
     * transform's SOURCE column also bounds the derived TARGET — days
@@ -5732,7 +5740,7 @@ object ManifestTable {
         .distinct.filter(relSet).sorted
       if (targeted.isEmpty) return head
       val survivors = readLive(spark, table, targeted, schema, partBy, tombs,
-        sizesOnly(headStats), dvs = dvsHead)
+        new Skipping(headStats), dvs = dvsHead)
       val (uuid, newFiles, newStats) =
         writeData(spark, table, survivors, statsColumnsOf(headStats), partBy,
           inputBytes = Some(rewriteBytes(headStats, targeted)))
@@ -5899,8 +5907,8 @@ object ManifestTable {
     * mapping: a rename inside the range keeps its physical identity)
     * and aligned to the to-version column set — missing columns null,
     * dropped ones projected away. With `deferTombstones` tombstones
-    * are not row state: the since side reads them raw and a changed
-    * target list churns nothing, so a lazy delete surfaces once, when
+    * are not row state: a changed target list churns nothing, and only
+    * added files read under them, so a lazy delete surfaces once, when
     * a rewrite drops its file. */
   private[sources] def multisetDelta(spark: SparkSession, table: String,
       sinceVersion: Int, toVersion: Int = -1,
@@ -5916,13 +5924,17 @@ object ManifestTable {
     val removed = before.filterNot(afterSet)
     val dvS = deleteVectors(spark, table, sinceVersion)
     val dvT = deleteVectors(spark, table, to)
+    // deferred tombstones hide rows of added files only (a row lazily
+    // deleted inside the range is no insert); shared and removed files
+    // read raw of them on both sides, so only a vector change shows
     val tombS = if (deferTombstones) Nil else deleteTombstones(spark, table, sinceVersion)
-    val tombT = deleteTombstones(spark, table, to)
+    val tombT = deleteTombstones(spark, table, to).map { case (p, fs) =>
+      (p, if (deferTombstones) fs.filterNot(beforeSet) else fs) }
     def predsOf(tb: Seq[(String, Seq[String])]): Map[String, Seq[String]] =
       tb.flatMap { case (p, fs) => fs.map(_ -> p) }
         .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
     val pS = predsOf(tombS)
-    val pT = if (deferTombstones) pS else predsOf(tombT)
+    val pT = predsOf(tombT)
     val dvChurned = after.filter(beforeSet).filter(f =>
       dvS.get(f) != dvT.get(f) || pS.get(f) != pT.get(f))
     val schema = snapshotSchema(spark, table, to)
@@ -5932,7 +5944,7 @@ object ManifestTable {
       val fs = added ++ dvChurned
       if (fs.isEmpty) emptySide
       else readLive(spark, table, fs, schema, partedBy, tombT,
-        sizesOnly(snapshotStats(spark, table, to)), dvs = dvT)
+        new Skipping(snapshotStats(spark, table, to)), dvs = dvT)
     }
     val cols = post.columns.toSeq
     val typeOf = post.schema.map(f => f.name -> f.dataType).toMap
@@ -5993,7 +6005,7 @@ object ManifestTable {
     val tombs0 = deleteTombstones(spark, table, head)
     val dvs0 = deleteVectors(spark, table, head)
     val df0 = readLive(spark, table, rel0, schema0, partBy, tombs0,
-      sizesOnly(stats0), dvs = dvs0)
+      new Skipping(stats0), dvs = dvs0)
     // Hidden partition-transform targets are NOT in the read frame (the
     // read hides them by design) — shuffling "on the partition columns"
     // must recompute them from their sources through the ONE shared
@@ -6191,7 +6203,7 @@ object ManifestTable {
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
       val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
-        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
+        files.take(1), None, partBy, new Skipping(stats)).schema, partBy))
       val edited = cols.foldLeft(sch) { case (cur, (path, dataType)) =>
         val (parent, name) = (path.init, path.last)
         val dotted = path.mkString(".")
@@ -6407,7 +6419,7 @@ object ManifestTable {
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
       val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
-        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
+        files.take(1), None, partBy, new Skipping(stats)).schema, partBy))
       cols.filter(_._1.length == 1).foreach { case (path, _) =>
         val name = path.head
         // bucket is the one type-SENSITIVE transform (xxhash64 of int vs
@@ -6473,7 +6485,7 @@ object ManifestTable {
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
       val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
-        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
+        files.take(1), None, partBy, new Skipping(stats)).schema, partBy))
       val edited = edits.foldLeft(sch) { case (cur, (name, sqlOpt)) =>
         val f = cur.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
           throw new IllegalArgumentException(
@@ -6555,7 +6567,7 @@ object ManifestTable {
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
       val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
-        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
+        files.take(1), None, partBy, new Skipping(stats)).schema, partBy))
       if (path.length == 1) {
         // top-level-only references: layout transforms and bloom
         // sidecars spell TOP-LEVEL names (existence and
@@ -6734,7 +6746,7 @@ object ManifestTable {
       require(head >= 1, s"no committed snapshot in $table")
       val (files, schema, stats, partBy) = snapshotAll(spark, table, head)
       val sch = schema.getOrElse(recordedSchema(readFiles(spark, table,
-        files.take(1), None, partBy, sizesOnly(stats)).schema, partBy))
+        files.take(1), None, partBy, new Skipping(stats)).schema, partBy))
       names.foreach { name =>
         require(!partBy.contains(name),
           s"cannot drop partition column '$name'")
@@ -6977,7 +6989,7 @@ object ManifestTable {
         // maxBinBytes, and one output file is the entire point of packing;
         // tombstone-aware — packing materializes the bin files' deletes
         val df = readLive(spark, table, binFiles, schema, partBy, binTombs,
-            sizesOnly(headStats), dvs = deleteVectors(spark, table, head))
+            new Skipping(headStats), dvs = deleteVectors(spark, table, head))
           .coalesce(1)
         val cols = (statsColumnsOf(headStats) ++ statsColumns).distinct.sorted
         val (uuid, newFiles, newStats) = writeData(spark, table, df, cols, partBy)

@@ -157,6 +157,25 @@ class DeletionVectorSpec extends AnyFunSuite with SparkFixture {
     assert(ids(ManifestTable.read(spark, t)) === Set(1L, 2L))
   }
 
+  test("a lazy delete under a later vector on the same file is reported once, at materialization") {
+    val t = fresh()
+    ManifestTable.commit(spark, t,
+      df((1L to 6L).map(i => i -> s"v$i"): _*).coalesce(1),
+      SaveMode.Overwrite, statsColumns = Seq("id"))                  // v1
+    ManifestTable.deleteWhereLazy(spark, t, col("id") === 5L)         // v2: tombstone
+    ManifestTable.deleteWhereVector(spark, t, col("id") === 2L)       // v3: vector, same file
+    ManifestTable.materializeDeletes(spark, t)                        // v4: rewrite
+    def deletes(since: Int, to: Int) =
+      ManifestTable.rowChanges(spark, t, since, Seq("id"), to)
+        .filter(col("_change_type") === "delete").collect().map(_.getLong(0)).toSeq.sorted
+    assert(deletes(1, 2) === Nil, "a lazy delete is deferred")
+    assert(deletes(2, 3) === Seq(2L))
+    assert(deletes(1, 3) === Seq(2L), "the vector churn surfaced the deferred delete early")
+    assert(deletes(3, 4) === Seq(5L))
+    assert(deletes(1, 4) === Seq(2L, 5L))
+    assert(ids(ManifestTable.read(spark, t)) === Set(1L, 3L, 4L, 6L))
+  }
+
   test("vectors work on a partitioned table (path-derived columns, per-file positions)") {
     val t = fresh()
     import spark.implicits._

@@ -134,6 +134,37 @@ class ReadParitySpec extends AnyFunSuite with SparkFixture {
     assert(ManifestTable.readWhere(spark, t, col("key") <= 20L).count() === 18)
   }
 
+  test("two references to one snapshot are one scan: exchange reuse and cache hits") {
+    val t = fresh()
+    ManifestTable.commit(spark, t,
+      (1 to 40).map(i => (i.toLong, i % 4)).toDF("k", "g").repartition(2),
+      SaveMode.Overwrite, statsColumns = Seq("k"))
+    GraftCatalog.register("par_self", t)
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val join = spark.sql(
+        "SELECT a.k, a.g, b.g FROM graft.par_self a JOIN graft.par_self b ON a.k = b.k")
+      val reused = join.queryExecution.executedPlan.collect {
+        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+      }
+      assert(reused.nonEmpty, join.queryExecution.executedPlan.treeString)
+      assert(join.count() === 40)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val cached = ManifestTable.read(spark, t).cache()
+    try {
+      val again = ManifestTable.read(spark, t).filter(col("k") > 10L)
+      assert(again.queryExecution.withCachedData.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]))
+      assert(again.count() === 30)
+    } finally cached.unpersist()
+  }
+
   test("EXPLAIN of a bloom-pruned SQL lookup shows the pinned decision") {
     val t = bloomed(4)
     GraftCatalog.register("par_explain", t)
@@ -142,5 +173,11 @@ class ReadParitySpec extends AnyFunSuite with SparkFixture {
       .collect().head.getString(0)
     assert(plan.contains("ManifestFileIndex(kept 2/4 files, min/max 4->4, bloom 4->2)"),
       plan)
+    // the literal hashes need no optimizer rule to fold them
+    val rule = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    spark.conf.set("spark.sql.optimizer.excludedRules", rule)
+    try assert(spark.sql(s"SELECT * FROM graft.par_explain WHERE id = $probe")
+      .inputFiles.length === 2)
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 }
