@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Focused A/B timer: times ONLY the query keys named in
   * `SPARK_GRAFT_KEYS` (comma-separated), `SPARK_GRAFT_REPS` times each
@@ -14,36 +13,28 @@ import org.apache.spark.sql.SparkSession
 object AbBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val keys = sys.env.getOrElse("SPARK_GRAFT_KEYS", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     require(keys.nonEmpty, "set SPARK_GRAFT_KEYS=k1,k2,…")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-    // GRAFT_FS_RAW=1: serve file: through RawLocalFileSystem (no
-    // client-side .crc siblings) — measurement arm for the checksum
-    // overhead question; session-level because FileSystem instances
-    // are cached per scheme. GRAFT_FS_SHELL_CHMOD=1: measurement arm
-    // pinning Hadoop's fork-per-chmod LocalFileSystem instead of the
-    // default fork-free GraftLocalFileSystem.
-    val b1 =
-      if (sys.env.get("GRAFT_FS_RAW").contains("1"))
-        b0.config("spark.hadoop.fs.file.impl",
-          "org.apache.hadoop.fs.RawLocalFileSystem")
-      else if (sys.env.get("GRAFT_FS_SHELL_CHMOD").contains("1"))
-        b0.config("spark.hadoop.fs.file.impl",
-          "org.apache.hadoop.fs.LocalFileSystem")
-      else b0.config("spark.hadoop.fs.file.impl",
-        "graft.sources.GraftLocalFileSystem")
-    val spark = b1.getOrCreate()
+    // optional in-JVM conf A/B (r19): SPARK_GRAFT_AB_PROP names a
+    // runtime-settable spark.* SQL conf, SPARK_GRAFT_AB_VALUES its arms
+    // ("unset" clears it). Each rep runs every key once PER ARM, back
+    // to back, so both arms share the window, the JIT state, and any
+    // machine drift — the cross-window ambiguity this tool exists to
+    // remove, applied to a config toggle instead of a git revision.
+    // Keys are suffixed "@<value>" in the output.
+    val abProp = armedConf(sys.env.get("SPARK_GRAFT_AB_PROP"))
+    val abValues: Seq[Option[String]] = abProp match {
+      case None => Seq(None)
+      case Some(_) => sys.env.getOrElse("SPARK_GRAFT_AB_VALUES", "")
+        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        .map(v => if (v == "unset") None else Some(v)) match {
+          case Nil => sys.error("set SPARK_GRAFT_AB_VALUES=v1,v2,…")
+          case vs => vs
+        }
+    }
+    val spark = Graft.mainSession()
     spark.sparkContext.setLogLevel("WARN")
     def probeOnce(): Double = {
       import org.apache.spark.sql.functions._
@@ -58,39 +49,14 @@ object AbBench {
     try probeOnce() catch { case _: Throwable => () }
     val byName = SparkEntry.queries
     keys.foreach(k => require(byName.contains(k), s"unknown query key $k"))
-    // optional in-JVM property A/B (r19): SPARK_GRAFT_AB_PROP names a
-    // system property, SPARK_GRAFT_AB_VALUES its arms ("unset" clears
-    // it). Each rep runs every key once PER ARM, back to back, so both
-    // arms share the window, the JIT state, and any machine drift —
-    // the cross-window ambiguity this tool exists to remove, applied
-    // to a config toggle instead of a git revision. Keys are suffixed
-    // "@<value>" in the output.
-    val abProp = sys.env.get("SPARK_GRAFT_AB_PROP")
-    val abValues: Seq[Option[String]] = abProp match {
-      case None => Seq(None)
-      case Some(_) => sys.env.getOrElse("SPARK_GRAFT_AB_VALUES", "")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        .map(v => if (v == "unset") None else Some(v)) match {
-          case Nil => sys.error("set SPARK_GRAFT_AB_VALUES=v1,v2,…")
-          case vs => vs
-        }
-    }
     def withArm[A](v: Option[String])(body: => A): A = abProp match {
       case None => body
-      case Some(p) if p.startsWith("spark.") =>
-        // a runtime-settable SQL conf arms through the session
+      case Some(p) =>
         val old = spark.conf.getOption(p)
         v match { case Some(x) => spark.conf.set(p, x); case None => spark.conf.unset(p) }
         try body finally old match {
           case Some(x) => spark.conf.set(p, x)
           case None => spark.conf.unset(p)
-        }
-      case Some(p) =>
-        val old = sys.props.get(p)
-        v match { case Some(x) => sys.props(p) = x; case None => sys.props -= p }
-        try body finally old match {
-          case Some(x) => sys.props(p) = x
-          case None => sys.props -= p
         }
     }
     def armKey(k: String, v: Option[String]): String =
@@ -127,5 +93,15 @@ object AbBench {
     println(f"""{"probe_median":$probeMed%.3f,"probes":[${probes.sorted
       .map(p => f"$p%.3f").mkString(",")}],"reps":$reps,"queries":{$body}}""")
     spark.stop()
+  }
+
+  /** The A/B conf name, refused unless it is a `spark.*` SQL conf: the
+    * engine reads no other property, so any other name would time two
+    * identical arms and report their noise as an A/B result. */
+  private[graft] def armedConf(name: Option[String]): Option[String] = {
+    name.foreach(p => require(p.startsWith("spark."),
+      s"SPARK_GRAFT_AB_PROP=$p: only spark.* SQL confs can be A/B'd; " +
+        "the engine reads no other property"))
+    name
   }
 }

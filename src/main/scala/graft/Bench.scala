@@ -10,23 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      // fork-free chmod for file: (GraftLocalFileSystem docs)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.GraftLocalFileSystem")
-      // additive: custom expressions + the graft name-resolution rule
-      // (touches only relations the built-in resolver left unresolved),
-      // so SQL-surface queries (q_sql_insert) run under the driver too
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Graft.mainSession()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: JIT/codegen/classloading outside the timed region, so the
     // first timed queries don't absorb one-time JVM startup cost. Touches

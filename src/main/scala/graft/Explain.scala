@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: dumps the formatted physical plan of each query so
   * pushdown/broadcast/codegen can be inspected (SURVEY.md §4.2).
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
@@ -11,23 +9,7 @@ object Explain {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      // fork-free chmod for file: (GraftLocalFileSystem docs)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.GraftLocalFileSystem")
-      // r20: the SQL-surface queries (q_sql_*, q_mv_*) plan only under
-      // the graft extensions — without them Explain printed "failed to
-      // plan: SCHEMA_NOT_FOUND" instead of their plans
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Graft.mainSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

@@ -49,16 +49,36 @@ object Graft {
   /** Session builder with the engine's required configs (UTC, ns-as-
     * long events, SQL extensions with dot_product registered). */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
+    builder(master, shufflePartitions.toString).getOrCreate()
+
+  /** The session every main runs in: `local[$SPARK_GRAFT_CPUS]`
+    * (default 4) with one shuffle partition per core, the engine's
+    * required configs, the warehouse under the JVM temp dir and no UI. */
+  private[graft] def mainSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    builder(s"local[$cpus]", cpus)
+      .config("spark.sql.warehouse.dir",
+        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
+
+  private def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet stores ts as TIMESTAMP(NANOS); Spark rejects that
+      // physical type unless it is surfaced as a long (Tables.events then
+      // converts ns → µs TimestampType explicitly)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // fork-free chmod for file: (GraftLocalFileSystem docs)
       .config("spark.hadoop.fs.file.impl",
         "graft.sources.GraftLocalFileSystem")
+      // custom expressions + the graft name-resolution rule (touches
+      // only relations the built-in resolver left unresolved), so the
+      // SQL-surface queries plan in every session
       .withExtensions(new GraftExtensions)
-      .getOrCreate()
 
   // ---- deduplication ----------------------------------------------
   /** Exact dedup: one surviving row (smallest id) per normalized-text

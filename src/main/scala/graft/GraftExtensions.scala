@@ -12,7 +12,7 @@ import graft.functions.{DotProduct, MaxSimScore, MinHashSignature, ShingleMinHas
   * expressions to SQL users, so a session built with
   *
   * {{{
-  * SparkSession.builder()
+  * SparkSession.builder
   *   .withExtensions(new GraftExtensions)
   *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentLinkedQueue
 
 /** Measurement harness (optimization guide §1): runs the named queries
@@ -13,23 +12,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val keys = sys.env.getOrElse("SPARK_GRAFT_KEYS", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     require(keys.nonEmpty, "set SPARK_GRAFT_KEYS=k1,k2,…")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      // fork-free chmod for file: (GraftLocalFileSystem docs)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.GraftLocalFileSystem")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Graft.mainSession()
     spark.sparkContext.setLogLevel("WARN")
     final case class JobRec(id: Int, desc: String, start: Long,
                             var end: Long = 0L, var stages: Int = 0,

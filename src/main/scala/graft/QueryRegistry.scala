@@ -59,8 +59,7 @@ object QueryRegistry {
     * byte size as the frame's statistics (CheckpointBridge docs): the
     * optimizer then sizes runtime bloom filters and broadcast choices
     * from the truth instead of `defaultSizeInBytes` at every scale.
-    * Used by every operator-level checkpoint of bounded model state.
-    * `-Dgraft.ckptStats=false` pins the stock stats-less checkpoint. */
+    * Used by every operator-level checkpoint of bounded model state. */
   def ckpt(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointWithStats(df)
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Task-binary size diagnostic (optimization guide §2.2/§5): for each
   * named query, builds the DataFrame, walks its executed RDD lineage,
@@ -12,26 +11,10 @@ import org.apache.spark.sql.SparkSession
 object TaskBin {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val keys = sys.env.getOrElse("SPARK_GRAFT_KEYS", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     require(keys.nonEmpty, "set SPARK_GRAFT_KEYS=k1,k2,…")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.GraftLocalFileSystem")
-      // experiment toggle: GRAFT_RBF=false disables runtime bloom
-      // filter injection so its task-binary weight can be isolated
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-        sys.env.getOrElse("GRAFT_RBF", "true"))
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Graft.mainSession()
     spark.sparkContext.setLogLevel("WARN")
     def size(o: AnyRef): Long = try {
       val bos = new java.io.ByteArrayOutputStream()

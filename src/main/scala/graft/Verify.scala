@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +8,7 @@ object Verify {
     // optional extra args: restrict to the named queries (dev loop);
     // the driver always passes exactly two, so its surface is unchanged
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores ts as TIMESTAMP(NANOS); Spark rejects that
-      // physical type unless it is surfaced as a long (Tables.events then
-      // converts ns → µs TimestampType explicitly).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      // fork-free chmod for file: (GraftLocalFileSystem docs)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.GraftLocalFileSystem")
-      // additive: custom expressions + the graft name-resolution rule
-      // (touches only relations the built-in resolver left unresolved),
-      // so SQL-surface queries (q_sql_insert) run under the driver too
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Graft.mainSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]

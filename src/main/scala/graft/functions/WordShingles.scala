@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * INTERPRETED per shingle (r19 profile: StringSplit.nullSafeEval +
   * ConcatWs.eval were the top task frames of the whole b2 family).
   *
-  * Semantics are EXACTLY `MinHash.shinglesHof`: because the words come
+  * Semantics are EXACTLY that formulation's: because the words come
   * from a single-space split and are re-joined by single spaces, every
   * shingle is a byte-range of the ORIGINAL text (consecutive spaces
   * produce empty words, and concat_ws keeps empty strings — the bytes

@@ -20,63 +20,37 @@ object MinHash {
 
   /** n-word shingles of a text column; whole text when shorter than n.
     * One fused byte scan ([[graft.functions.WordShingles]]) — the
-    * built-in spelling [[shinglesHof]] interprets its lambda body per
-    * shingle and was the b2 family's top task cost (r19 profile). */
-  def shingles(text: Column, n: Int): Column =
-    // `-Dgraft.shinglesFused=false` pins the HOF spelling (A/B harness)
-    if (sys.props.get("graft.shinglesFused").contains("false"))
-      shinglesHof(text, n)
-    else {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      ColumnBridge.column(
-        graft.functions.WordShingles(ColumnBridge.expression(text), n))
-    }
+    * built-in `transform(sequence(…), i => concat_ws(…, slice(…)))`
+    * spelling interprets its lambda body per shingle and was the b2
+    * family's top task cost (r19 profile). */
+  def shingles(text: Column, n: Int): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(
+      graft.functions.WordShingles(ColumnBridge.expression(text), n))
+  }
 
   /** Exact set-Jaccard of two shingle arrays — one fused pass
-    * ([[graft.functions.SetJaccard]]), bit-identical to
-    * [[setJaccardBuiltin]], which materializes the intersection AND
-    * union arrays per candidate pair only to take their sizes (the
-    * r19 profile's top task cost in b2_prefix_join).
-    * `-Dgraft.setJaccardFused=false` pins the built-in spelling. */
-  def setJaccard(a: Column, b: Column): Column =
-    if (sys.props.get("graft.setJaccardFused").contains("false"))
-      setJaccardBuiltin(a, b)
-    else {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      ColumnBridge.column(graft.functions.SetJaccard(
-        ColumnBridge.expression(a), ColumnBridge.expression(b)))
-    }
-
-  /** Built-in-only formulation of [[setJaccard]] (the equivalence
-    * oracle for tests). */
-  def setJaccardBuiltin(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
-
-  /** Built-in-only formulation of [[shingles]] (kept as the equivalence
-    * oracle for tests, like [[signatureHof]]). */
-  def shinglesHof(text: Column, n: Int): Column = {
-    val w = split(text, " ")
-    when(size(w) >= n,
-      transform(
-        sequence(lit(0), size(w) - n),
-        i => concat_ws(" ", slice(w, i + 1, lit(n)))))
-      .otherwise(array(concat_ws(" ", w)))
+    * ([[graft.functions.SetJaccard]]), bit-identical to the built-in
+    * `size(array_intersect) / size(array_union)`, which materializes
+    * the intersection AND union arrays per candidate pair only to take
+    * their sizes (the r19 profile's top task cost in b2_prefix_join). */
+  def setJaccard(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.functions.SetJaccard(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
 
   /** k-slot minhash signature: slot i = min over shingles of
     * xxhash64(shingle, i). Deterministic (fixed internal seed).
     * One-pass codegen'd expression — hash-identical to the built-in
-    * formulation [[signatureHof]], 16× less shingling work. */
+    * per-slot `array_min(transform(sh, s => xxhash64(s, i)))`
+    * formulation, which duplicates the shingle subtree per slot: 16×
+    * less shingling work. */
   def signature(sh: Column, k: Int = NumHashes): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(
       graft.functions.MinHashSignature(ColumnBridge.expression(sh), k))
   }
-
-  /** Built-in-only formulation of [[signature]] (duplicates the shingle
-    * subtree per slot — kept as the equivalence oracle for tests). */
-  def signatureHof(sh: Column, k: Int = NumHashes): Column =
-    array((0 until k).map(i => array_min(transform(sh, s => xxhash64(s, lit(i))))): _*)
 
   /** Fused words→signature column: shingle construction and hashing in
     * one codegen'd pass (semantics identical to
@@ -310,18 +284,12 @@ object MinHash {
     // slot agreement fused into one codegen'd loop (r19): the
     // aggregate-over-zip_with spelling evaluates two lambda layers
     // interpreted per slot per candidate pair.
-    // `-Dgraft.slotAgreementFused=false` pins the built-in spelling.
-    val agreement: Column =
-      if (sys.props.get("graft.slotAgreementFused").contains("false"))
-        aggregate(
-          zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v)
-      else {
-        import org.apache.spark.sql.graftbridge.ColumnBridge
-        ColumnBridge.column(graft.functions.SlotAgreement(
-          ColumnBridge.expression(col("sig_a")),
-          ColumnBridge.expression(col("sig_b"))))
-      }
+    val agreement: Column = {
+      import org.apache.spark.sql.graftbridge.ColumnBridge
+      ColumnBridge.column(graft.functions.SlotAgreement(
+        ColumnBridge.expression(col("sig_a")),
+        ColumnBridge.expression(col("sig_b"))))
+    }
     smallPairs.union(bigPairs)
       .select(col("doc_a"), col("doc_b"),
         (agreement.cast("double") / NumHashes).as("est_jaccard"))

@@ -146,6 +146,9 @@ object Similarity {
       .transform(graft.QueryRegistry.ckpt)
     val ids = nodes.select(col("id"))
     var pr = ids.withColumn("pr_micro", lit(1000000L))
+    // no per-iteration checkpoint (r20): the rank state is n rows and
+    // 5 iterations, the lineage stays ~1 MiB, and a paired A/B measured
+    // the extra materialization job per iteration as a net cost here
     for (_ <- 1 to iters) {
       val contrib = edges
         .join(pr, edges("src") === pr("id"))
@@ -155,13 +158,6 @@ object Similarity {
       pr = ids.join(contrib, ids("id") === contrib("dst"), "left")
         .select(col("id"),
           expr("150000 + (85 * coalesce(contrib, 0)) DIV 100").as("pr_micro"))
-      // measurement arm (r20): -Dgraft.prCkpt=true bounds the plan at
-      // every iteration (one extra materialization job each) — the
-      // iterativeComponents shape. Default OFF: the rank state is
-      // n rows and 5 iterations, the lineage stays ~1 MiB, and the
-      // paired A/B measured the checkpoints as a net cost here.
-      if (sys.props.get("graft.prCkpt").contains("true"))
-        pr = graft.QueryRegistry.ckpt(pr)
     }
     pr
   }

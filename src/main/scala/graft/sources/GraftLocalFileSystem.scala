@@ -77,13 +77,11 @@ class GraftRawLocalFileSystem extends RawLocalFileSystem {
   private[sources] def toLocalFile(p: Path): java.io.File = pathToFile(p)
 
   /** Statuses from the deprecated (fork-on-permission-read) path are
-    * re-wrapped with the NIO lazy loader; GRAFT_FS_SHELL_STATUS=1 pins
-    * the stock statuses (A/B measurement arm). */
+    * re-wrapped with the NIO lazy loader. */
   private def wrap(s: org.apache.hadoop.fs.FileStatus)
       : org.apache.hadoop.fs.FileStatus =
     if (s != null &&
-        s.getClass.getName.endsWith("DeprecatedRawLocalFileStatus") &&
-        !sys.env.get("GRAFT_FS_SHELL_STATUS").contains("1"))
+        s.getClass.getName.endsWith("DeprecatedRawLocalFileStatus"))
       new GraftNioFileStatus(s, this)
     else s
 

@@ -63,7 +63,6 @@ object ManifestTable {
     * the session value on exit; correctness-neutral (AQE partition
     * sizing only). */
   private def withSizeFirstCoalesce[A](spark: SparkSession)(body: => A): A = {
-    if (sys.props.get("graft.sizeFirstWrites").contains("false")) return body
     val k = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     val old = spark.conf.getOption(k)
     spark.conf.set(k, "false")
@@ -954,24 +953,19 @@ object ManifestTable {
     * hashing over codegen'd xxhash64), so membership can never drift
     * between them. */
   private def bloomPosCol(c: Column, bits: Long, k: Int): Column = {
-    import org.apache.spark.sql.functions.{lit, pmod, sequence, transform, xxhash64}
+    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
     // both hashes are reduced mod bits BEFORE combining: bits ≤ 2^31
     // and i ≤ 15, so i*h2 + h1 < 2^36 — no long overflow under ANSI
     val h1 = pmod(xxhash64(c), lit(bits))
     val h2 = pmod(xxhash64(c, lit(0x9E3779B97F4A7C15L)), lit(bits))
     // k-position loop fused into one codegen'd expression (r19): the
-    // transform spelling below re-evaluates the whole h1/h2 subtree
-    // interpreted per element — two xxhash64 calls × k per row on
-    // every bloom-indexed write. `-Dgraft.bloomPosFused=false` pins
-    // the built-in spelling (A/B harness; BloomSpec pins equality).
-    if (sys.props.get("graft.bloomPosFused").contains("false"))
-      transform(sequence(lit(0L), lit((k - 1).toLong)),
-        i => pmod(h1 + i * h2, lit(bits)))
-    else {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      ColumnBridge.column(graft.functions.HashPositions(
-        ColumnBridge.expression(h1), ColumnBridge.expression(h2), bits, k))
-    }
+    // built-in spelling `transform(sequence(0, k-1), i => pmod(h1 +
+    // i*h2, bits))` re-evaluates the whole h1/h2 subtree interpreted
+    // per element — two xxhash64 calls × k per row on every
+    // bloom-indexed write (BloomSkipSpec pins equality).
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.functions.HashPositions(
+      ColumnBridge.expression(h1), ColumnBridge.expression(h2), bits, k))
   }
 
   /** Configure (or replace) the bloom index: later writes — appends,
@@ -3198,7 +3192,7 @@ object ManifestTable {
     * own `/data/` is the final occurrence — partition VALUES cannot
     * smuggle one in, the writer %-escapes `/`). */
   private def relFileCol: Column = {
-    import org.apache.spark.sql.functions.{col, concat, lit, replace, substring_index, url_decode}
+    import org.apache.spark.sql.functions.col
     // `_metadata.file_path` is the URI form — URL-encoded ON TOP of
     // the on-disk names the manifest records (Path.toString form,
     // verified: value `a}b` is `p=a}b` on disk but `p=a%7Db` here) —
@@ -3209,16 +3203,10 @@ object ManifestTable {
     // fused + per-file memoized (r20, graft.functions.RelFilePath): the
     // built-in chain re-split and re-url_decoded the path PER ROW on
     // every merge/DV/delete rewrite read — the value is constant per
-    // file. `-Dgraft.relFileFused=false` pins the chain (A/B harness).
-    if (sys.props.get("graft.relFileFused").contains("false"))
-      concat(lit("data/"), url_decode(replace(
-        substring_index(col("_metadata.file_path"), "/data/", -1),
-        lit("+"), lit("%2B"))))
-    else {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      ColumnBridge.column(graft.functions.RelFilePath(
-        ColumnBridge.expression(col("_metadata.file_path"))))
-    }
+    // file (RelFilePathSpec pins equality with the chain).
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.functions.RelFilePath(
+      ColumnBridge.expression(col("_metadata.file_path"))))
   }
 
   /** Step 1: full data write under a fresh uuid dir — unreferenced (and
@@ -3343,7 +3331,7 @@ object ManifestTable {
     // Scoped, not global: r19 measured size-first +0.5 s on
     // compute-dense scan stages, which want the parallelism; paired
     // A/B over the MV + lifecycle families measured the write-side
-    // win at −1.3 s. `-Dgraft.sizeFirstWrites=false` pins the default.
+    // win at −1.3 s.
     // A coalesced write skips it: its final stage is already fixed at
     // `sized` tasks, and flipping the SHARED session's conf would only
     // race the session's other threads.
@@ -4413,13 +4401,11 @@ object ManifestTable {
     * never serializes 10k footer reads through the driver. */
   private[graft] val FooterStatsFileCap = 64
 
-  /** Test/A-B override: `-Dgraft.footerStatsCap=-1` disables the footer
-    * fast path (forcing the distributed pass), a positive value moves
-    * the cap. Read per write so a running session can be toggled. */
-  private[graft] def footerStatsCap: Int =
-    sys.props.get("graft.footerStatsCap")
-      .orElse(sys.env.get("GRAFT_FOOTER_STATS_CAP"))
-      .map(_.trim.toInt).getOrElse(FooterStatsFileCap)
+  /** The cap in force on this thread: [[FooterStatsFileCap]] unless a
+    * spec scopes another (`footerStatsCap.withValue(-1) { … }` forces
+    * the distributed pass) — thread-scoped, so it never reaches a
+    * concurrent session's writes. */
+  private[graft] val footerStatsCap = new scala.util.DynamicVariable(FooterStatsFileCap)
 
   /** Footer-derived twin of writeData's distributed stats pass, or
     * None when any gate fails (the caller then runs the Spark pass).
@@ -4451,7 +4437,7 @@ object ManifestTable {
                               hasBloom: Boolean)
       : Option[Map[String, Map[String, (Double, Double)]]] = {
     import org.apache.spark.sql.types._
-    if (hasBloom || files.size > footerStatsCap) return None
+    if (hasBloom || files.size > footerStatsCap.value) return None
     def fastType(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType | BooleanType |
            DateType | StringType | TimestampType | TimestampNTZType => true

@@ -17,22 +17,17 @@ object Tables {
     * one-to-three source reads × 227 bench queries. Keyed on the two
     * session confs that change what a footer infers to, so differently
     * configured test sessions never share an entry. Schema METADATA
-    * only — no data or results are ever cached across runs.
-    * `-Dgraft.schemaCache=false` pins the uncached read (A/B). */
+    * only — no data or results are ever cached across runs. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
-    if (sys.props.get("graft.schemaCache").contains("false"))
-      spark.read.parquet(p)
-    else {
-      val key = p + "|" +
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") + "|" +
-        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      val sch = schemaCache.computeIfAbsent(key, _ => spark.read.parquet(p).schema)
-      spark.read.schema(sch).parquet(p)
-    }
+    val key = p + "|" +
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") + "|" +
+      spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    val sch = schemaCache.computeIfAbsent(key, _ => spark.read.parquet(p).schema)
+    spark.read.schema(sch).parquet(p)
   }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")

@@ -41,16 +41,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * stops attracting megabyte bloom filters and broadcasts when it
   * should, while a genuinely large checkpointed frame (100 TB runs)
   * reports its real cardinality and keeps shuffle-side plans.
-  * `-Dgraft.ckptStats=false` pins the stock estimate-stats behavior
-  * (A/B harness).
   */
 object CheckpointBridge {
 
   /** Eager local checkpoint whose resulting plan carries exact
     * `rowCount` statistics (and the size estimate derived from it). */
   def localCheckpointWithStats(df: DataFrame): DataFrame = {
-    if (sys.props.get("graft.ckptStats").contains("false"))
-      return df.localCheckpoint(true)
     // lazy mark; the count below IS the materialization job (same job
     // count as an eager checkpoint, row count kept instead of thrown)
     val cp = df.localCheckpoint(false)

@@ -53,18 +53,4 @@ class CheckpointStatsSpec extends AnyFunSuite with SparkFixture {
     assert(stats.rowCount.contains(BigInt(0)))
     assert(stats.sizeInBytes === BigInt(1))
   }
-
-  test("the -Dgraft.ckptStats=false toggle pins the stock checkpoint") {
-    val old = sys.props.get("graft.ckptStats")
-    sys.props("graft.ckptStats") = "false"
-    try {
-      val cp = QueryRegistry.ckpt(frame())
-      // stock checkpoints carry rewritten ESTIMATES (no exact rowCount
-      // is guaranteed); rows are identical either way
-      assert(cp.count() === 1000L)
-    } finally old match {
-      case Some(v) => sys.props("graft.ckptStats") = v
-      case None => sys.props -= "graft.ckptStats"
-    }
-  }
 }

@@ -30,7 +30,7 @@ class CodegenStrictSpec extends AnyFunSuite with SparkFixture {
       val df = Seq(Seq("a b c", "b c d"), Seq("x y z")).toDF("sh")
       val got = df.select(MinHash.signature(col("sh"), 4).as("sig"))
         .collect().map(_.getSeq[Long](0))
-      val want = df.select(MinHash.signatureHof(col("sh"), 4).as("sig"))
+      val want = df.select(HofSpellings.signatureHof(col("sh"), 4).as("sig"))
         .collect().map(_.getSeq[Long](0))
       assert(got.toSeq.map(_.toSeq) === want.toSeq.map(_.toSeq))
     }

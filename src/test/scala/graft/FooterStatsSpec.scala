@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.sources.ManifestTable
@@ -11,7 +13,7 @@ import graft.sources.ManifestTable
   * The fast path is gated to types whose footer min/max equals the
   * distributed encoder's output EXACTLY; these tests pin that equality
   * by writing the same data through both paths
-  * (`-Dgraft.footerStatsCap=-1` forces the distributed pass) and
+  * (a scoped cap of -1 forces the distributed pass) and
   * comparing the recorded manifest stats verbatim. */
 class FooterStatsSpec extends AnyFunSuite with SparkFixture {
 
@@ -27,14 +29,25 @@ class FooterStatsSpec extends AnyFunSuite with SparkFixture {
       base.split("-").take(2).mkString("-") -> (m - ManifestTable.SizeKey)
     }
 
-  private def withCap[A](cap: String)(body: => A): A = {
-    val k = "graft.footerStatsCap"
-    val old = sys.props.get(k)
-    sys.props(k) = cap
-    try body finally old match {
-      case Some(v) => sys.props(k) = v
-      case None => sys.props -= k
+  /** Spark jobs `body` launches from this thread. */
+  private def jobsOf(body: => Unit): Int = {
+    val key = "footer.stats.spec.tag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) { jobs.incrementAndGet(); () }
     }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
   }
 
   private def sample() = {
@@ -77,10 +90,13 @@ class FooterStatsSpec extends AnyFunSuite with SparkFixture {
     val df = sample()
     val cols = Seq("k", "i", "b", "d")
     val fast = fresh(); val slow = fresh()
-    ManifestTable.commit(spark, fast, df, SaveMode.Overwrite, statsColumns = cols)
-    withCap("-1") {
+    val fastJobs = jobsOf(
+      ManifestTable.commit(spark, fast, df, SaveMode.Overwrite, statsColumns = cols))
+    val slowJobs = jobsOf(ManifestTable.footerStatsCap.withValue(-1) {
       ManifestTable.commit(spark, slow, df, SaveMode.Overwrite, statsColumns = cols)
-    }
+    })
+    // the scoped cap really forced the distributed pass: its stats job
+    assert(slowJobs > fastJobs, s"fast $fastJobs jobs, forced $slowJobs")
     val (a, b) = (byPart(fast), byPart(slow))
     assert(a.keySet === b.keySet)
     a.keys.foreach { p => assert(a(p) === b(p), s"stats diverge for $p") }
@@ -93,7 +109,7 @@ class FooterStatsSpec extends AnyFunSuite with SparkFixture {
     val cols = Seq("k", "s", "ts", "dec")
     val fast = fresh(); val slow = fresh()
     ManifestTable.commit(spark, fast, df, SaveMode.Overwrite, statsColumns = cols)
-    withCap("-1") {
+    ManifestTable.footerStatsCap.withValue(-1) {
       ManifestTable.commit(spark, slow, df, SaveMode.Overwrite, statsColumns = cols)
     }
     val (a, b) = (byPart(fast), byPart(slow))
@@ -120,7 +136,7 @@ class FooterStatsSpec extends AnyFunSuite with SparkFixture {
     val cols = Seq("k", "i")
     val fast = fresh(); val slow = fresh()
     ManifestTable.commit(spark, fast, df, SaveMode.Overwrite, statsColumns = cols)
-    withCap("2") { // 3 part files > cap 2 → distributed pass
+    ManifestTable.footerStatsCap.withValue(2) { // 3 part files > cap 2 → distributed pass
       ManifestTable.commit(spark, slow, df, SaveMode.Overwrite, statsColumns = cols)
     }
     assert(byPart(fast) === byPart(slow))

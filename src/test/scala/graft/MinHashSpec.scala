@@ -39,7 +39,7 @@ class MinHashSpec extends AnyFunSuite with SparkFixture {
   test("codegen'd signature is hash-identical to the built-in formulation") {
     val fast = docs.select(MinHash.signature(MinHash.shingles(col("text"), 3)).as("s"))
       .collect().map(_.getSeq[Long](0)).toSeq
-    val hof = docs.select(MinHash.signatureHof(MinHash.shingles(col("text"), 3)).as("s"))
+    val hof = docs.select(HofSpellings.signatureHof(MinHash.shingles(col("text"), 3)).as("s"))
       .collect().map(_.getSeq[Long](0)).toSeq
     assert(fast === hof)
   }

@@ -57,35 +57,24 @@ class RelFilePathSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("a table rooted at …/data records, reads and rewrites under both arms") {
+  test("a table rooted at …/data records, reads and rewrites") {
     import spark.implicits._
     import graft.sources.ManifestTable
-    def withArms[A](fusedOn: Boolean)(body: => A): A = {
-      val keys = Seq("graft.relFileFused")
-      val old = keys.map(k => k -> sys.props.get(k))
-      keys.foreach(k => sys.props(k) = fusedOn.toString)
-      try body finally old.foreach {
-        case (k, Some(v)) => sys.props(k) = v
-        case (k, None) => sys.props -= k
-      }
-    }
-    Seq(true, false).foreach { fusedOn => withArms(fusedOn) {
-      val root = java.nio.file.Files.createTempDirectory("graft_relroot").toFile
-      val t = new java.io.File(root, "data").getAbsolutePath
-      ManifestTable.commit(spark, t,
-        (1 to 20).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "p"),
-        org.apache.spark.sql.SaveMode.Overwrite, partitionBy = Seq("p"))
-      assert(ManifestTable.snapshotFiles(spark, t).forall(f =>
-        f.startsWith("data/") && !f.startsWith("data/data/")),
-        ManifestTable.snapshotFiles(spark, t))
-      ManifestTable.merge(spark, t,
-        Seq((3L, "m3", 1), (40L, "n40", 0)).toDF("id", "v", "p"), Seq("id"))
-      ManifestTable.deleteWhere(spark, t, col("id") === 4L)
-      val got = ManifestTable.read(spark, t)
-        .select("id", "v", "p").as[(Long, String, Int)].collect().sortBy(_._1).toSeq
-      val want = ((1 to 20).filter(_ != 4).map(i =>
-        (i.toLong, if (i == 3) "m3" else s"v$i", i % 2)) :+ ((40L, "n40", 0)))
-      assert(got === want, s"fused=$fusedOn")
-    } }
+    val root = java.nio.file.Files.createTempDirectory("graft_relroot").toFile
+    val t = new java.io.File(root, "data").getAbsolutePath
+    ManifestTable.commit(spark, t,
+      (1 to 20).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "p"),
+      org.apache.spark.sql.SaveMode.Overwrite, partitionBy = Seq("p"))
+    assert(ManifestTable.snapshotFiles(spark, t).forall(f =>
+      f.startsWith("data/") && !f.startsWith("data/data/")),
+      ManifestTable.snapshotFiles(spark, t))
+    ManifestTable.merge(spark, t,
+      Seq((3L, "m3", 1), (40L, "n40", 0)).toDF("id", "v", "p"), Seq("id"))
+    ManifestTable.deleteWhere(spark, t, col("id") === 4L)
+    val got = ManifestTable.read(spark, t)
+      .select("id", "v", "p").as[(Long, String, Int)].collect().sortBy(_._1).toSeq
+    val want = ((1 to 20).filter(_ != 4).map(i =>
+      (i.toLong, if (i == 3) "m3" else s"v$i", i % 2)) :+ ((40L, "n40", 0)))
+    assert(got === want)
   }
 }

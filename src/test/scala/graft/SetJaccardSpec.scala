@@ -7,7 +7,7 @@ import graft.operators.MinHash
 /** r19 optimization: the `size(array_intersect)/size(array_union)`
   * exact-Jaccard became one fused pass (graft.functions.SetJaccard).
   * These tests pin bit-identical doubles against the built-in spelling
-  * (MinHash.setJaccardBuiltin) over every set shape the built-ins
+  * (HofSpellings.setJaccardBuiltin) over every set shape the built-ins
   * distinguish: duplicates, null elements, empty and null arrays. */
 class SetJaccardSpec extends AnyFunSuite with SparkFixture {
 
@@ -28,7 +28,7 @@ class SetJaccardSpec extends AnyFunSuite with SparkFixture {
     val df = cases.toDF("a", "b")
     val rows = df.select(
       MinHash.setJaccard(col("a"), col("b")).as("fused"),
-      MinHash.setJaccardBuiltin(col("a"), col("b")).as("builtin")).collect()
+      HofSpellings.setJaccardBuiltin(col("a"), col("b")).as("builtin")).collect()
     rows.zip(cases).foreach { case (r, c) =>
       val f = if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0))
       val b = if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))
@@ -47,10 +47,10 @@ class SetJaccardSpec extends AnyFunSuite with SparkFixture {
     }
     if (spark.conf.get("spark.sql.ansi.enabled") == "true") {
       divByZero(run(MinHash.setJaccard(col("a"), col("b"))))
-      divByZero(run(MinHash.setJaccardBuiltin(col("a"), col("b"))))
+      divByZero(run(HofSpellings.setJaccardBuiltin(col("a"), col("b"))))
     } else {
       assert(run(MinHash.setJaccard(col("a"), col("b"))).isNullAt(0))
-      assert(run(MinHash.setJaccardBuiltin(col("a"), col("b"))).isNullAt(0))
+      assert(run(HofSpellings.setJaccardBuiltin(col("a"), col("b"))).isNullAt(0))
     }
   }
 
@@ -63,7 +63,7 @@ class SetJaccardSpec extends AnyFunSuite with SparkFixture {
     val out = a.join(b, "ia")
       .select(col("ia"),
         MinHash.setJaccard(col("ga"), col("gb")).as("f"),
-        MinHash.setJaccardBuiltin(col("ga"), col("gb")).as("o"))
+        HofSpellings.setJaccardBuiltin(col("ga"), col("gb")).as("o"))
       .collect()
     assert(out.length === 99)
     out.foreach(r => assert(r.getDouble(1) === r.getDouble(2)))

@@ -7,7 +7,7 @@ import graft.operators.MinHash
 /** r19 optimization: MinHash.shingles became a fused byte-scan
   * expression (graft.functions.WordShingles). These tests pin exact
   * equivalence with the built-in HOF spelling it replaced
-  * (MinHash.shinglesHof) — same shingles, same order, same null
+  * (HofSpellings.shinglesHof) — same shingles, same order, same null
   * behavior — so every b2_* oracle hash is provably unchanged. */
 class WordShinglesSpec extends AnyFunSuite with SparkFixture {
 
@@ -32,7 +32,7 @@ class WordShinglesSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val df = corner.toDF("text")
     val f = df.select(MinHash.shingles(col("text"), n).as("s")).collect()
-    val h = df.select(MinHash.shinglesHof(col("text"), n).as("s")).collect()
+    val h = df.select(HofSpellings.shinglesHof(col("text"), n).as("s")).collect()
     (f.map(_.getSeq[String](0)), h.map(_.getSeq[String](0)))
   }
 
@@ -65,7 +65,7 @@ class WordShinglesSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val df = Seq("  MiXeD Case TEXT here  ", "SINGLE", null: String).toDF("text")
     val f = df.select(array_distinct(MinHash.shingles(lower(trim(col("text"))), 3)).as("s")).collect()
-    val h = df.select(array_distinct(MinHash.shinglesHof(lower(trim(col("text"))), 3)).as("s")).collect()
+    val h = df.select(array_distinct(HofSpellings.shinglesHof(lower(trim(col("text"))), 3)).as("s")).collect()
     assert(f.map(_.getSeq[String](0)).toSeq === h.map(_.getSeq[String](0)).toSeq)
   }
 }
