@@ -15,9 +15,10 @@ import graft.functions.VectorOps
   * n to ~n/k per query, the standard IVF trade of recall for scan cost.
   *
   * Scale notes: the only driver-side data is the k×dim centroid matrix
-  * (like broadcasting a bounded dim table); assignment is a codegen'd
-  * argmax over k dot products; the probe join is an equi-join on cell
-  * — no all-pairs scan anywhere.
+  * (like broadcasting a bounded dim table), folded from per-task partial
+  * sums as they arrive; assignment is a codegen'd argmax over k dot
+  * products; the probe join is an equi-join on cell — no all-pairs scan
+  * anywhere — and the queries × k result sorts in one partition.
   */
 object IvfAnn {
 
@@ -34,21 +35,29 @@ object IvfAnn {
   }
 
   /** k-means centroids: deterministic init (vec_id < k), `iters` Lloyd
-    * iterations via the CentroidAgg UDAF, each result rounded to 6
-    * decimals (summation-order jitter is ~1e-13 — rounding makes the
-    * quantizer bit-stable across runs and partitionings). Empty cells
-    * keep their previous centroid. */
+    * iterations, each result rounded to 6 decimals (summation-order
+    * jitter is ~1e-13 — rounding makes the quantizer bit-stable across
+    * runs and partitionings). Empty cells keep their previous centroid.
+    * One job per step: the seed collects k rows (sorted on the driver);
+    * an iteration assigns cells and reduces per-partition
+    * [[VectorOps.CentroidAgg]] partial sums to the k×dim state. */
   def centroids(embeddings: DataFrame, k: Int, iters: Int): Seq[Seq[Double]] = {
+    import VectorOps.CentroidAgg
     def rounded(xs: Seq[Double]) = xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    var cs: Seq[Seq[Double]] = embeddings.filter(col("vec_id") < k).orderBy("vec_id")
-      .select(transform(col("embedding"), _.cast("double")).as("v"))
-      .collect().map(r => rounded(r.getSeq[Double](0))).toSeq
+    var cs: Seq[Seq[Double]] = embeddings.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("long"), transform(col("embedding"), _.cast("double")))
+      .collect().sortBy(_.getLong(0)).map(r => rounded(r.getSeq[Double](1))).toSeq
+    val n = cs.size
     for (_ <- 1 to iters) {
-      val next = embeddings
-        .withColumn("cell", assign(col("embedding"), cs))
-        .groupBy("cell").agg(VectorOps.centroid(col("embedding")).as("c"))
-        .collect().map(r => r.getInt(0) -> rounded(r.getSeq[Double](1))).toMap
-      cs = cs.indices.map(i => next.getOrElse(i, cs(i)))
+      val sums = embeddings.select(assign(col("embedding"), cs), col("embedding")).rdd
+        .mapPartitions { rows =>
+          val acc = Array.fill(n)(CentroidAgg.zero)
+          rows.foreach(r => acc(r.getInt(0)) = CentroidAgg.reduce(acc(r.getInt(0)), r.getSeq[Float](1)))
+          Iterator.single(acc)
+        }
+        .reduce((a, b) => a.zip(b).map { case (x, y) => CentroidAgg.merge(x, y) })
+      cs = cs.indices.map(i =>
+        if (sums(i).n == 0) cs(i) else rounded(CentroidAgg.finish(sums(i))))
     }
     cs
   }
@@ -90,6 +99,6 @@ object IvfAnn {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("qid"), col("rnk"), col("cid").as("nid"), round(col("sim"), 4).as("sim"))
-      .orderBy("qid", "rnk")
+      .transform(Similarity.boundedOrder("qid", "rnk"))
   }
 }

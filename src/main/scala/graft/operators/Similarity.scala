@@ -68,6 +68,12 @@ object Similarity {
       case None => build
     }
 
+  /** Total order of a BOUNDED result (a top-k's queries × k rows): one
+    * exchange into one partition and a local sort, where `orderBy`
+    * would spend a range-sampling job on a few hundred rows. */
+  private[graft] def boundedOrder(cols: String*)(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions(cols.map(col): _*)
+
   /** Top-k nearest neighbors by cosine for every row matching
     * `queryPred` (must select a BOUNDED set — it is broadcast).
     * Ranking compares the cosine ROUNDED to 6 dp (tie → lower cid,
@@ -96,7 +102,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("qid"), col("rnk"), col("cid").as("nid"), round(col("sim"), 4).as("sim"))
-      .orderBy("qid", "rnk")
+      .transform(boundedOrder("qid", "rnk"))
   }
 
   /** Cosine-threshold similarity edges within blocks, both directions
@@ -533,7 +539,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
       .select(col("qid"), col("rnk"), col("nid"), col("dot"))
-      .orderBy("qid", "rnk")
+      .transform(boundedOrder("qid", "rnk"))
   }
 
   /** Exact integer distance of every vector to every centroid:
@@ -609,7 +615,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
       .select(col("qid"), col("rnk"), col("nid"), col("dot"))
-      .orderBy("qid", "rnk")
+      .transform(boundedOrder("qid", "rnk"))
   }
 
   /** The quantized-with-subspace corpus and its trained codebook —
@@ -808,7 +814,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
       .select(col("qid"), col("rnk"), col("nid"), col("score"))
-      .orderBy("qid", "rnk")
+      .transform(boundedOrder("qid", "rnk"))
   }
 
   /** IVF approximate nearest neighbors, fully oracle-checkable: the
@@ -848,6 +854,6 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
       .select(col("qid"), col("rnk"), col("nid"), col("dot"))
-      .orderBy("qid", "rnk")
+      .transform(boundedOrder("qid", "rnk"))
   }
 }

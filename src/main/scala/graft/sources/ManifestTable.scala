@@ -58,20 +58,6 @@ object ManifestTable {
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Run `body` with AQE's size-first shuffle coalescing
-    * (parallelismFirst=false) — see the writeData call site. Restores
-    * the session value on exit; correctness-neutral (AQE partition
-    * sizing only). */
-  private def withSizeFirstCoalesce[A](spark: SparkSession)(body: => A): A = {
-    val k = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, "false")
-    try body finally old match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    }
-  }
-
   private def manifestDir(table: String) = new Path(table, "_manifests")
   private def versionOf(p: Path): Int =
     p.getName.stripPrefix("v").stripSuffix(".json").toInt
@@ -3309,16 +3295,15 @@ object ManifestTable {
     // [[sizedPartitions]]); a declared layout or a large write is
     // written as the caller's frame partitions it
     val sized = sizedPartitions(spark, df0, inputBytes)
-    val w = sized.fold(dfW)(dfW.coalesce).write.mode(SaveMode.ErrorIfExists)
     // partition dirs spell the column's PHYSICAL name (r13): a renamed
     // identity partition column keeps ONE dir grammar across its whole
     // lineage — old and new files agree on the `<phys>=<value>` key,
     // and only the recorded schema knows the logical spelling.
     // Transform targets are absent from the mapping and pass through.
     val physPartBy = partitionBy.map(c => physOf.getOrElse(c, c))
-    def write(): Unit =
-      (if (partitionBy.nonEmpty) w.partitionBy(physPartBy: _*) else w)
-        .parquet(dataDir.toString)
+    def write(d: DataFrame): Unit =
+      (if (partitionBy.nonEmpty) d.write.partitionBy(physPartBy: _*) else d.write)
+        .mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
     // size-first AQE coalescing, SCOPED to the write action (r20,
     // guide §6 output sizing): the default parallelism-first mode
     // keeps every post-shuffle rewrite at `defaultParallelism`
@@ -3332,10 +3317,14 @@ object ManifestTable {
     // compute-dense scan stages, which want the parallelism; paired
     // A/B over the MV + lifecycle families measured the write-side
     // win at −1.3 s.
-    // A coalesced write skips it: its final stage is already fixed at
-    // `sized` tasks, and flipping the SHARED session's conf would only
-    // race the session's other threads.
-    if (sized.isDefined) write() else withSizeFirstCoalesce(spark)(write())
+    // The setting lives on a clone of the session that runs only this
+    // write, so the session's other threads never see it. A coalesced
+    // write skips it: its final stage is already fixed at `sized` tasks.
+    sized match {
+      case Some(n) => write(dfW.coalesce(n))
+      case None => write(org.apache.spark.sql.graftbridge.PlanBridge.withConf(dfW,
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false"))
+    }
     val f = fs(spark, dataDir)
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       f.listStatus(p).toSeq.flatMap(s =>
@@ -5893,9 +5882,10 @@ object ManifestTable {
     * mapping: a rename inside the range keeps its physical identity)
     * and aligned to the to-version column set — missing columns null,
     * dropped ones projected away. With `deferTombstones` tombstones
-    * are not row state: a changed target list churns nothing, and only
-    * added files read under them, so a lazy delete surfaces once, when
-    * a rewrite drops its file. */
+    * are not row state: a changed target list churns nothing and no
+    * side reads under them, so a lazy delete surfaces once, when a
+    * rewrite drops its file, and the delta stays additive over any
+    * split of the range. */
   private[sources] def multisetDelta(spark: SparkSession, table: String,
       sinceVersion: Int, toVersion: Int = -1,
       deferTombstones: Boolean = false): (DataFrame, DataFrame) = {
@@ -5910,12 +5900,12 @@ object ManifestTable {
     val removed = before.filterNot(afterSet)
     val dvS = deleteVectors(spark, table, sinceVersion)
     val dvT = deleteVectors(spark, table, to)
-    // deferred tombstones hide rows of added files only (a row lazily
-    // deleted inside the range is no insert); shared and removed files
-    // read raw of them on both sides, so only a vector change shows
+    // deferred tombstones are no row state on either side: every file
+    // reads raw of them, so a lazily deleted row stays in the feed until
+    // the rewrite that drops its file reports it, whichever ranges the
+    // versions are split into
     val tombS = if (deferTombstones) Nil else deleteTombstones(spark, table, sinceVersion)
-    val tombT = deleteTombstones(spark, table, to).map { case (p, fs) =>
-      (p, if (deferTombstones) fs.filterNot(beforeSet) else fs) }
+    val tombT = if (deferTombstones) Nil else deleteTombstones(spark, table, to)
     def predsOf(tb: Seq[(String, Seq[String])]): Map[String, Seq[String]] =
       tb.flatMap { case (p, fs) => fs.map(_ -> p) }
         .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap

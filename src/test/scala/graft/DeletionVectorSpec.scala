@@ -176,6 +176,37 @@ class DeletionVectorSpec extends AnyFunSuite with SparkFixture {
     assert(ids(ManifestTable.read(spark, t)) === Set(1L, 3L, 4L, 6L))
   }
 
+  test("the row feed is split-additive over a lazy delete of a row appended inside the range") {
+    val t = fresh()
+    ManifestTable.commit(spark, t, df(1L -> "a", 2L -> "b").coalesce(1),
+      SaveMode.Overwrite, statsColumns = Seq("id"))                  // v1
+    ManifestTable.commit(spark, t, df(4L -> "d", 5L -> "e").coalesce(1),
+      statsColumns = Seq("id"))                                       // v2: append
+    ManifestTable.deleteWhereLazy(spark, t, col("id") === 4L)         // v3: tombstone
+    ManifestTable.materializeDeletes(spark, t)                        // v4: rewrite
+    // per key: inserts minus deletes over (since, to]
+    def net(since: Int, to: Int): Map[Long, Int] =
+      ManifestTable.rowChanges(spark, t, since, Seq("id"), to).collect()
+        .map(r => r.getLong(0) -> (r.getAs[String]("_change_type") match {
+          case "insert" => 1; case "delete" => -1; case _ => 0 }))
+        .groupMapReduce(_._1)(_._2)(_ + _)
+    def sum(ranges: (Int, Int)*): Map[Long, Int] =
+      ranges.map { case (a, b) => net(a, b) }.reduce((x, y) =>
+        (x.keySet ++ y.keySet).map(k => k -> (x.getOrElse(k, 0) + y.getOrElse(k, 0))).toMap)
+        .filter(_._2 != 0)
+    assert(net(1, 2) === Map(4L -> 1, 5L -> 1))
+    assert(net(2, 3) === Map.empty, "a lazy delete is deferred")
+    assert(net(1, 3) === Map(4L -> 1, 5L -> 1),
+      "a row appended and lazily deleted inside the range is still an insert until materialized")
+    assert(net(3, 4) === Map(4L -> -1))
+    assert(net(1, 4) === Map(5L -> 1))
+    val fine = sum((1, 2), (2, 3), (3, 4))
+    assert(fine === Map(5L -> 1))
+    assert(sum((1, 3), (3, 4)) === fine)
+    assert(sum((1, 4)) === fine)
+    assert(ids(ManifestTable.read(spark, t)) === Set(1L, 2L, 5L))
+  }
+
   test("vectors work on a partitioned table (path-derived columns, per-file positions)") {
     val t = fresh()
     import spark.implicits._

@@ -134,4 +134,31 @@ class WriteSizingSpec extends AnyFunSuite with SparkFixture {
     assert(seen.size() === 1 && seen.contains(before.toString),
       s"a concurrent reader saw $seen, expected only $before")
   }
+
+  test("a large write coalesces size-first while a concurrent reader's parallelismFirst stays unchanged") {
+    val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    val before = spark.conf.getOption(key)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reader = new Thread(() => {
+      while (!done.get) {
+        seen.add(spark.conf.getOption(key).toString)
+        Thread.onSpinWait()
+      }
+    })
+    val t = freshTable()
+    // a hash repartition AQE may coalesce: parallelism-first keeps its
+    // defaultParallelism (4) partitions, size-first packs it into one
+    val big = spark.range(0, 600000, 1, 4).toDF("id").repartition(col("id"))
+    assert(big.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(4L << 20))
+    reader.start()
+    try ManifestTable.commit(spark, t, big)
+    finally { done.set(true); reader.join() }
+    assert(seen.size() === 1 && seen.contains(before.toString),
+      s"a concurrent reader saw $seen, expected only $before")
+    assert(ManifestTable.snapshotFiles(spark, t).size === 1,
+      "the write itself coalesced size-first")
+    assert(ManifestTable.read(spark, t).count() === 600000L)
+    assert(spark.conf.getOption(key) === before)
+  }
 }
