@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Iterative byte-pair-encoding merge training (Sennrich et al. 2016,
@@ -60,7 +61,8 @@ object Bpe {
     * words; stops early when the best pair occurs fewer than 2 times.
     * Output: (rank, left, right, freq), rank 1 = first merge, totally
     * ordered, as a local relation in rank order (no sort job). The
-    * corpus is read ONCE (one vocab agg) and probed by one job
+    * corpus is read ONCE (one vocab agg) and probed by one job, two if
+    * a partition holds more than its share of the limit
     * ([[probeVocab]]); merge training then runs driver-side under
     * [[LocalVocabLimit]] words (exact,
     * incremental — r13, replacing the per-merge one-row Spark job the
@@ -116,26 +118,42 @@ object Bpe {
   }
 
   /** The (word, count) vocabulary if it has at most `limit` words, else
-    * None: one job over the vocab's own plan, whose executed shuffle the
-    * distributed path then re-reads. A task ships its words only if they
-    * fit `limit`, and the driver drops them all once the total passes
-    * it, so it never keeps more than `limit` words. */
-  private def probeVocab(vocab: Dataset[(IndexedSeq[String], Long)],
-                         limit: Int): Option[Array[(IndexedSeq[String], Long)]] = {
-    val kept = scala.collection.mutable.ArrayBuffer.empty[(IndexedSeq[String], Long)]
-    var over = false
-    vocab.sparkSession.sparkContext.runJob(vocab.queryExecution.toRdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        val ws = it.take(limit.min(Int.MaxValue - 1) + 1).map { r =>
-          val a = r.getArray(0)
-          ((0 until a.numElements()).map(a.getUTF8String(_).toString), r.getLong(1))
-        }.toArray
-        Option.when(ws.length <= limit)(ws)
-      },
-      (_: Int, ws: Option[Array[(IndexedSeq[String], Long)]]) =>
-        if (over || ws.forall(kept.size + _.length > limit)) { over = true; kept.clear() }
-        else kept ++= ws.get)
-    Option.when(!over)(kept.toArray)
+    * None. What reaches the driver is bounded, not only what it keeps:
+    * one job over the vocab's own plan counts every partition and ships
+    * a partition's words only if they fit its share of `limit`; only
+    * when the counts sum to at most `limit` does a second job over the
+    * same executed shuffle fetch the partitions over their share. The
+    * driver so receives at most `limit` words in all, and the
+    * distributed path re-reads that shuffle. */
+  private[graft] def probeVocab(vocab: Dataset[(IndexedSeq[String], Long)],
+                                limit: Int): Option[Array[(IndexedSeq[String], Long)]] = {
+    val sc = vocab.sparkSession.sparkContext
+    val rdd = vocab.queryExecution.toRdd
+    val parts = new Array[Array[(IndexedSeq[String], Long)]](rdd.getNumPartitions)
+    val share = limit / parts.length.max(1)
+    var total = 0L
+    sc.runJob(rdd, (it: Iterator[InternalRow]) => wordsIfFit(it, share),
+      (i: Int, r: (Long, Array[(IndexedSeq[String], Long)])) => { total += r._1; parts(i) = r._2 })
+    Option.when(total <= limit) {
+      val rest = parts.indices.filter(parts(_) == null)
+      if (rest.nonEmpty) sc.runJob(rdd, (it: Iterator[InternalRow]) => wordsIfFit(it, limit)._2, rest)
+        .zip(rest).foreach { case (ws, i) => parts(i) = ws }
+      parts.flatten
+    }
+  }
+
+  /** A partition's word count, and its words if there are at most `cap`. */
+  private def wordsIfFit(it: Iterator[InternalRow], cap: Int): (Long, Array[(IndexedSeq[String], Long)]) = {
+    val ws = Array.newBuilder[(IndexedSeq[String], Long)]
+    var n = 0L
+    it.foreach { r =>
+      n += 1
+      if (n <= cap) {
+        val a = r.getArray(0)
+        ws += (((0 until a.numElements()).map(a.getUTF8String(_).toString), r.getLong(1)))
+      }
+    }
+    (n, if (n <= cap) ws.result() else null)
   }
 
   /** Exact in-memory merge training over a bounded (word, count)

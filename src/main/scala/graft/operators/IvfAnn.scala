@@ -15,8 +15,9 @@ import graft.functions.VectorOps
   * n to ~n/k per query, the standard IVF trade of recall for scan cost.
   *
   * Scale notes: the only driver-side data is the k×dim centroid matrix
-  * (like broadcasting a bounded dim table), folded from per-task partial
-  * sums as they arrive; assignment is a codegen'd argmax over k dot
+  * (like broadcasting a bounded dim table), tree-aggregated from
+  * per-task partial sums so the driver receives about √partitions of
+  * them, not one per partition; assignment is a codegen'd argmax over k dot
   * products; the probe join is an equi-join on cell — no all-pairs scan
   * anywhere — and the queries × k result sorts in one partition.
   */
@@ -39,8 +40,9 @@ object IvfAnn {
     * jitter is ~1e-13 — rounding makes the quantizer bit-stable across
     * runs and partitionings). Empty cells keep their previous centroid.
     * One job per step: the seed collects k rows (sorted on the driver);
-    * an iteration assigns cells and reduces per-partition
-    * [[VectorOps.CentroidAgg]] partial sums to the k×dim state. */
+    * an iteration assigns cells and tree-aggregates per-partition
+    * [[VectorOps.CentroidAgg]] partial sums to the k×dim state (its
+    * combining stage runs inside the same job). */
   def centroids(embeddings: DataFrame, k: Int, iters: Int): Seq[Seq[Double]] = {
     import VectorOps.CentroidAgg
     def rounded(xs: Seq[Double]) = xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
@@ -50,12 +52,9 @@ object IvfAnn {
     val n = cs.size
     for (_ <- 1 to iters) {
       val sums = embeddings.select(assign(col("embedding"), cs), col("embedding")).rdd
-        .mapPartitions { rows =>
-          val acc = Array.fill(n)(CentroidAgg.zero)
-          rows.foreach(r => acc(r.getInt(0)) = CentroidAgg.reduce(acc(r.getInt(0)), r.getSeq[Float](1)))
-          Iterator.single(acc)
-        }
-        .reduce((a, b) => a.zip(b).map { case (x, y) => CentroidAgg.merge(x, y) })
+        .treeAggregate(Array.fill(n)(CentroidAgg.zero))(
+          (acc, r) => { acc(r.getInt(0)) = CentroidAgg.reduce(acc(r.getInt(0)), r.getSeq[Float](1)); acc },
+          (a, b) => a.zip(b).map { case (x, y) => CentroidAgg.merge(x, y) })
       cs = cs.indices.map(i =>
         if (sums(i).n == 0) cs(i) else rounded(CentroidAgg.finish(sums(i))))
     }

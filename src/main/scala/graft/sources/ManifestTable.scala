@@ -3295,36 +3295,18 @@ object ManifestTable {
     // [[sizedPartitions]]); a declared layout or a large write is
     // written as the caller's frame partitions it
     val sized = sizedPartitions(spark, df0, inputBytes)
+    val w = sized.fold(dfW)(dfW.coalesce).write.mode(SaveMode.ErrorIfExists)
     // partition dirs spell the column's PHYSICAL name (r13): a renamed
     // identity partition column keeps ONE dir grammar across its whole
     // lineage — old and new files agree on the `<phys>=<value>` key,
     // and only the recorded schema knows the logical spelling.
     // Transform targets are absent from the mapping and pass through.
     val physPartBy = partitionBy.map(c => physOf.getOrElse(c, c))
-    def write(d: DataFrame): Unit =
-      (if (partitionBy.nonEmpty) d.write.partitionBy(physPartBy: _*) else d.write)
-        .mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
-    // size-first AQE coalescing, SCOPED to the write action (r20,
-    // guide §6 output sizing): the default parallelism-first mode
-    // keeps every post-shuffle rewrite at `defaultParallelism`
-    // partitions however tiny the data, so file counts — and every
-    // downstream per-file cost (stats, manifest census, listing) —
-    // scale with the CORE COUNT instead of the data. Within this one
-    // action the advisory size governs, so a small rewrite lands in
-    // few right-sized files at any core count and a 100 TB rewrite is
-    // untouched (its partitions already exceed the advisory size).
-    // Scoped, not global: r19 measured size-first +0.5 s on
-    // compute-dense scan stages, which want the parallelism; paired
-    // A/B over the MV + lifecycle families measured the write-side
-    // win at −1.3 s.
-    // The setting lives on a clone of the session that runs only this
-    // write, so the session's other threads never see it. A coalesced
-    // write skips it: its final stage is already fixed at `sized` tasks.
-    sized match {
-      case Some(n) => write(dfW.coalesce(n))
-      case None => write(org.apache.spark.sql.graftbridge.PlanBridge.withConf(dfW,
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false"))
-    }
+    // an uncoalesced write keeps AQE's parallelism-first sizing:
+    // size-first coalescing around it measured flat in a paired
+    // AbBench at sf0.1 (SCALE.md "Write sizing")
+    (if (partitionBy.nonEmpty) w.partitionBy(physPartBy: _*) else w)
+      .parquet(dataDir.toString)
     val f = fs(spark, dataDir)
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       f.listStatus(p).toSeq.flatMap(s =>

@@ -18,20 +18,11 @@ object ColumnBridge {
 /** Bridge to the `private[sql]` Dataset.ofRows — lets graft's SQL
   * INSERT command materialize its (still-unanalyzed) source plan as a
   * DataFrame at run time, exactly what Spark's own RunnableCommands
-  * do — and to the classic session's `cloneSession` for [[withConf]]. */
+  * do. Nothing else from the internal API is touched. */
 object PlanBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** `df` on a clone of its session that also carries `conf`, so the
-    * setting reaches only actions on the returned frame, never the
-    * session's other threads (the SparkContext and cache stay shared). */
-  def withConf(df: org.apache.spark.sql.DataFrame, conf: (String, String)*): org.apache.spark.sql.DataFrame = {
-    val s = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
-    conf.foreach { case (k, v) => s.sessionState.conf.setConfString(k, v) }
-    ofRows(s, df.queryExecution.analyzed)
-  }
 }

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.{Bpe, IvfAnn, Similarity}
@@ -21,11 +21,26 @@ class CuratePlanSpec extends AnyFunSuite with SparkFixture {
 
   /** Spark jobs `body` launches from this thread, and its value. */
   private def jobs[A](body: => A): (Int, A) = {
+    val (n, _, out) = jobsAndResultBytes(body)
+    (n, out)
+  }
+
+  /** Spark jobs `body` launches from this thread, the bytes their
+    * result tasks send to the driver, and its value. */
+  private def jobsAndResultBytes[A](body: => A): (Int, Long, A) = {
     val tag = java.util.UUID.randomUUID().toString
     val n = new AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(TagKey) == tag)) n.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty(TagKey) == tag)) {
+          n.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskType == "ResultTask" && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.resultSize)
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -36,7 +51,7 @@ class CuratePlanSpec extends AnyFunSuite with SparkFixture {
       ListenerDrain(sc)
       sc.removeSparkListener(listener)
     }
-    (n.get, out)
+    (n.get, bytes.get, out)
   }
 
   /** 500 seeded 16-dim vectors in `parts` partitions. */
@@ -75,9 +90,15 @@ class CuratePlanSpec extends AnyFunSuite with SparkFixture {
       assert(IvfAnn.centroids(v, 8, 3) === want, s"$p partitions")
       assert(CurateSpellings.centroids(v, 8, 3) === want, s"$p partitions, spelling")
     }
-    // one job for the seed, one per Lloyd iteration
-    val (n, _) = jobs(IvfAnn.centroids(emb, 8, 3))
-    assert(n === 4, s"IvfAnn.centroids(iters = 3) ran $n jobs")
+    // one job for the seed, one per Lloyd iteration; at 7 partitions
+    // the tree aggregation's combining stage stays inside that job
+    val v7 = vectors(7).cache()
+    v7.count()
+    Seq(emb -> 4, v7 -> 7).foreach { case (v, p) =>
+      val (n, _) = jobs(IvfAnn.centroids(v, 8, 3))
+      assert(n === 4, s"IvfAnn.centroids(iters = 3) ran $n jobs at $p partitions")
+    }
+    v7.unpersist()
   }
 
   test("cosine top-k: at most 4 jobs; the same rows in the same order as orderBy") {
@@ -111,5 +132,30 @@ class CuratePlanSpec extends AnyFunSuite with SparkFixture {
     val counted = udf { (_: String) => reads.add(1); true }.asNondeterministic()
     assert(table(Bpe.trainMerges(docs.filter(counted(col("text"))), 24, localVocabLimit = 0)) === local)
     assert(reads.value === 400L, "the distributed path read the corpus again")
+  }
+
+  test("the BPE probe sends the driver at most the limit's words, and fetches a skewed vocabulary that fits") {
+    import spark.implicits._
+    // 400 words of 64 symbols, 100 in each of 4 partitions
+    val vocab = spark.range(0, 400, 1, 4).as[Long]
+      .map(i => ((0 until 64).map(j => ('a' + (i + j) % 26).toChar.toString), i))
+    val all = vocab.collect().toSeq
+    val (n1, everything, got) = jobsAndResultBytes(Bpe.probeVocab(vocab, 10000))
+    assert(n1 === 1 && got.map(_.toSeq) === Some(all))
+    val (_, countsOnly, none) = jobsAndResultBytes(Bpe.probeVocab(vocab, 0))
+    assert(none.isEmpty)
+    // every partition's 100 words fit a limit of 200, the vocabulary
+    // does not: the driver must not receive more than 201 words' worth
+    val (n2, over, none2) = jobsAndResultBytes(Bpe.probeVocab(vocab, 200))
+    assert(n2 === 1 && none2.isEmpty)
+    val perWord = (everything - countsOnly).toDouble / 400
+    assert(over - countsOnly <= perWord * 201,
+      s"the probe sent ${over - countsOnly} bytes of words, more than 201 words of $perWord bytes")
+    // 175 words, 100 in partition 0: over its share of 200 but the
+    // whole fits, so a second job fetches that partition alone
+    val skewed = vocab.filter(w => w._2 < 100 || w._2 % 4 == 0)
+    val (n3, fetched, got3) = jobsAndResultBytes(Bpe.probeVocab(skewed, 200))
+    assert(n3 === 2 && got3.map(_.toSeq) === Some(skewed.collect().toSeq))
+    assert(fetched - countsOnly <= perWord * 201)
   }
 }
