@@ -141,11 +141,13 @@ object FunctionQueries {
         // (r19, guide §2 "shuffle fewer bytes": a Project above a Sort
         // preserves ordering, Catalyst only pushes projections the
         // other way — this halves the range-exchange and sort width;
-        // the math itself runs once either way)
+        // the math itself runs once either way). (l_orderkey,
+        // l_linenumber) is not unique; the other three source columns
+        // complete a total order, so the dump's row order is reproducible
         spread(Tables.lineitem(s, d))
           .select(col("l_orderkey"), col("l_linenumber"),
             col("l_extendedprice"), col("l_discount"), col("l_quantity"))
-          .orderBy("l_orderkey", "l_linenumber")
+          .orderBy("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_quantity")
           .select(
             col("l_orderkey"), col("l_linenumber"),
             round(col("l_extendedprice"), 1).as("r1"),
@@ -165,7 +167,8 @@ object FunctionQueries {
              |round(ln(l_extendedprice), 6) AS ln_price,
              |round(sqrt(l_quantity), 6) AS sqrt_qty,
              |((l_orderkey % 7) + 7) % 7 AS pm7
-             |FROM lineitem ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST""".stripMargin)
+             |FROM lineitem ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
+             |l_extendedprice NULLS FIRST, l_discount NULLS FIRST, l_quantity NULLS FIRST""".stripMargin)
     ),
 
     // F4: conditional / null handling.

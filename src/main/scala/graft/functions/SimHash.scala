@@ -7,28 +7,17 @@ import org.apache.spark.sql.functions._
   * Per token: xxhash64 → ±1 vote per bit position; the signature bit is
   * the vote sign. Near-duplicates differ in few bits, so candidate pairs
   * come from equal signatures (or small hamming distance via bit_count ^).
-  * Pure built-in expressions — codegen-friendly, no UDF.
+  * One codegen'd expression ([[SimHashSignature]]), no UDF.
   */
 object SimHash {
   val Bits = 32
 
-  private val powers: Seq[Long] = Seq.tabulate(Bits)(i => 1L << i)
-
-  /** 32-bit simhash of a whitespace-tokenized text column, as LongType. */
+  /** 32-bit simhash of a whitespace-tokenized text column, as LongType:
+    * each distinct token of `lower(trim(text))` split on single spaces
+    * votes once; NULL for NULL text. */
   def simhash(text: Column): Column = {
-    val tokens = array_distinct(split(lower(trim(text)), " "))
-    // votes(i) = sum over tokens of (bit i of xxhash64(token) ? +1 : -1)
-    val votes = aggregate(
-      tokens,
-      array_repeat(lit(0), Bits),
-      (acc, t) =>
-        zip_with(acc,
-          transform(typedlit(powers),
-            p => when(xxhash64(t).bitwiseAND(p) =!= 0L, 1).otherwise(-1)),
-          (a, b) => a + b))
-    aggregate(
-      zip_with(votes, typedlit(powers), (v, p) => when(v > 0, p).otherwise(lit(0L))),
-      lit(0L), _ + _)
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(SimHashSignature(ColumnBridge.expression(lower(trim(text)))))
   }
 
   /** Hamming distance between two simhash values. */

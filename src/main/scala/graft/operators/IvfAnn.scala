@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorOps
+import org.apache.spark.sql.types.FloatType
+import graft.functions.{CentroidMatrix, IvfCells, VectorOps}
 
 /** IVF-style approximate nearest neighbor (SURVEY.md §2.B B4 scale
   * path, alongside the random-hyperplane LSH in b4_lsh_ann).
@@ -17,32 +18,37 @@ import graft.functions.VectorOps
   * Scale notes: the only driver-side data is the k×dim centroid matrix
   * (like broadcasting a bounded dim table), tree-aggregated from
   * per-task partial sums so the driver receives about √partitions of
-  * them, not one per partition; assignment is a codegen'd argmax over k dot
-  * products; the probe join is an equi-join on cell — no all-pairs scan
-  * anywhere — and the queries × k result sorts in one partition.
+  * them, not one per partition; assignment is one codegen'd expression
+  * that holds the matrix and ranks k dot products; the probe join is an
+  * equi-join on cell — no all-pairs scan anywhere — and the queries × k
+  * result sorts in one partition.
   */
 object IvfAnn {
 
-  /** Cell id for a vector: argmax_k of (v·c_k − |c_k|²/2), which is the
-    * argmin of squared L2 distance. Ties break to the larger k via the
-    * struct ordering of array_max — deterministic. */
-  def assign(v: Column, centroids: Seq[Seq[Double]]): Column = {
-    val scored = centroids.zipWithIndex.map { case (c, k) =>
-      struct(
-        (VectorOps.dot(v, typedlit(c)) - lit(c.map(x => x * x).sum / 2)).as("s"),
-        lit(k).as("k"))
-    }
-    array_max(array(scored: _*)).getField("k")
+  /** The `n` nearest cells of a vector, best first: one codegen'd
+    * [[IvfCells]] expression holding the centroid matrix, so the plan
+    * carries its shape, not k×dim literals. */
+  private def cells(v: Column, centroids: Seq[Seq[Double]], n: Int): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(IvfCells(ColumnBridge.expression(v), CentroidMatrix(centroids), n))
   }
+
+  /** Cell id for a vector: argmax_k of (v·c_k − |c_k|²/2), which is the
+    * argmin of squared L2 distance. Ties break to the larger k, as the
+    * struct ordering of `array_max` broke them — deterministic. */
+  def assign(v: Column, centroids: Seq[Seq[Double]]): Column =
+    cells(v, centroids, 1).getItem(0)
 
   /** k-means centroids: deterministic init (vec_id < k), `iters` Lloyd
     * iterations, each result rounded to 6 decimals (summation-order
     * jitter is ~1e-13 — rounding makes the quantizer bit-stable across
     * runs and partitionings). Empty cells keep their previous centroid.
     * One job per step: the seed collects k rows (sorted on the driver);
-    * an iteration assigns cells and tree-aggregates per-partition
-    * [[VectorOps.CentroidAgg]] partial sums to the k×dim state (its
-    * combining stage runs inside the same job). */
+    * the vectors' plan is built once, and each iteration is one
+    * `treeAggregate` over it that ranks cells with [[IvfCells]]' own
+    * [[CentroidMatrix.rank]] and folds [[VectorOps.CentroidAgg]]
+    * partial sums into the k×dim state (its combining stage runs
+    * inside the same job). */
   def centroids(embeddings: DataFrame, k: Int, iters: Int): Seq[Seq[Double]] = {
     import VectorOps.CentroidAgg
     def rounded(xs: Seq[Double]) = xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
@@ -50,11 +56,17 @@ object IvfAnn {
       .select(col("vec_id").cast("long"), transform(col("embedding"), _.cast("double")))
       .collect().sortBy(_.getLong(0)).map(r => rounded(r.getSeq[Double](1))).toSeq
     val n = cs.size
+    val vectors = embeddings.select(col("embedding")).queryExecution.toRdd
+      .map(r => if (r.isNullAt(0)) null else r.getArray(0))
     for (_ <- 1 to iters) {
-      val sums = embeddings.select(assign(col("embedding"), cs), col("embedding")).rdd
-        .treeAggregate(Array.fill(n)(CentroidAgg.zero))(
-          (acc, r) => { acc(r.getInt(0)) = CentroidAgg.reduce(acc(r.getInt(0)), r.getSeq[Float](1)); acc },
-          (a, b) => a.zip(b).map { case (x, y) => CentroidAgg.merge(x, y) })
+      val m = CentroidMatrix(cs)
+      val sums = vectors.treeAggregate(Array.fill(n)(CentroidAgg.zero))(
+        (acc, v) => {
+          val c = m.rank(v, floats = true, 1)(0)
+          if (v != null) acc(c) = CentroidAgg.reduce(acc(c), v.toSeq[Float](FloatType))
+          acc
+        },
+        (a, b) => a.zip(b).map { case (x, y) => CentroidAgg.merge(x, y) })
       cs = cs.indices.map(i =>
         if (sums(i).n == 0) cs(i) else rounded(CentroidAgg.finish(sums(i))))
     }
@@ -63,16 +75,8 @@ object IvfAnn {
 
   /** The query's nProbe nearest cells, best first (ties → larger k,
     * matching [[assign]]'s rule for the top cell). */
-  def probeCells(v: Column, centroids: Seq[Seq[Double]], nProbe: Int): Column = {
-    val scored = centroids.zipWithIndex.map { case (c, k) =>
-      struct(
-        (VectorOps.dot(v, typedlit(c)) - lit(c.map(x => x * x).sum / 2)).as("s"),
-        lit(k).as("k"))
-    }
-    transform(
-      slice(reverse(array_sort(array(scored: _*))), 1, nProbe),
-      s => s.getField("k"))
-  }
+  def probeCells(v: Column, centroids: Seq[Seq[Double]], nProbe: Int): Column =
+    cells(v, centroids, nProbe)
 
   /** Top-k neighbors for query vectors (vec_id < nQueries): each query
     * probes its nProbe nearest IVF cells (candidates stay in exactly

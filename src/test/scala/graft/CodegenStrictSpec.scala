@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.VectorOps
-import graft.operators.MinHash
+import graft.functions.{SimHash, VectorOps}
+import graft.operators.{IvfAnn, MinHash}
 
 /** Every custom Expression must actually COMPILE under Janino — with
   * fallback disabled, a reference the generated Java can't resolve
@@ -91,6 +92,27 @@ class CodegenStrictSpec extends AnyFunSuite with SparkFixture {
         .toDF("q", "c")
       assert(bad.select(VectorOps.maxSim(col("q"), col("c"), 2))
         .collect().forall(_.isNullAt(0)))
+    }
+  }
+
+  test("SimHashSignature compiles and matches the built-in vote chain") {
+    strict {
+      val df = Seq("Spark makes  big data simple", "", null, "ω ω é").toDF("text")
+      val r = df.select(SimHash.simhash(col("text")), HofSpellings.simhashHof(col("text"))).collect()
+      assert(r.map(x => Option(x.get(0))).toSeq === r.map(x => Option(x.get(1))).toSeq)
+      assert(r(2).isNullAt(0))
+    }
+  }
+
+  test("IvfCells compiles and matches the typedlit quantizer") {
+    strict {
+      val cs = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 0.0))
+      val df = Seq(Seq(0.9f, 0.1f), Seq(0.2f, 1.5f), null).toDF("v")
+      def cells(c1: Column, c2: Column) =
+        df.select(c1, c2).collect().map(r => (r.getInt(0), r.getSeq[Int](1))).toSeq
+      val got = cells(IvfAnn.assign(col("v"), cs), IvfAnn.probeCells(col("v"), cs, 2))
+      assert(got === cells(CurateSpellings.assign(col("v"), cs), CurateSpellings.probeCells(col("v"), cs, 2)))
+      assert(got === Seq((2, Seq(2, 0)), (1, Seq(1, 2)), (2, Seq(2, 1))))
     }
   }
 }

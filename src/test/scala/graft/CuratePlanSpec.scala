@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.{Bpe, IvfAnn, Similarity}
 
@@ -99,6 +99,48 @@ class CuratePlanSpec extends AnyFunSuite with SparkFixture {
       assert(n === 4, s"IvfAnn.centroids(iters = 3) ran $n jobs at $p partitions")
     }
     v7.unpersist()
+  }
+
+  test("IVF quantizer: the same cells and probes as the typedlit spelling on ties, NaN, NULL and mismatched dims") {
+    import spark.implicits._
+    val nan = Float.NaN
+    // cells 0 and 2 tie exactly; cell 4 has a NaN component; cell 5 is
+    // 3-dimensional, so it scores NULL for every 2-dimensional vector
+    val cs = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 0.0), Seq(0.5, 0.5),
+      Seq(Double.NaN, 1.0), Seq(1.0, 0.0, 0.0))
+    val vs: Seq[Seq[Float]] = Seq(
+      Seq(0.9f, 0.1f), Seq(0.0f, 0.0f), Seq(0.25f, 0.25f), Seq(nan, 1.0f), Seq(nan, nan),
+      Seq(1.0f, 0.0f, 0.0f), Seq(1.0f), Seq.empty, null, Seq(-2.0f, 3.0f))
+    val df = vs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "v")
+    def cells(spelling: (Column, Int) => Column) =
+      df.select(col("i") +: (1 to cs.size + 1).map(n => spelling(col("v"), n)): _*)
+        .orderBy("i").collect().map(_.toSeq).toSeq
+    val got = cells((v, n) => IvfAnn.probeCells(v, cs, n))
+    assert(got === cells((v, n) => CurateSpellings.probeCells(v, cs, n)))
+    val assigned = df.select(col("i"), IvfAnn.assign(col("v"), cs), CurateSpellings.assign(col("v"), cs))
+      .collect()
+    assigned.foreach(r => assert(r.getInt(1) === r.getInt(2), s"vector ${vs(r.getInt(0))}"))
+    // NULL and mismatched vectors score NULL in every cell: largest first
+    val byRow = got.map(r => r.head.asInstanceOf[Int] -> r.last.asInstanceOf[scala.collection.Seq[Int]].toSeq).toMap
+    assert(byRow(8) === (5 to 0 by -1))
+    assert(byRow(6) === (5 to 0 by -1))
+    assert(byRow(5).head === 5 && byRow(0).last === 5)
+  }
+
+  test("IVF top-k's executed plan does not grow with the centroid matrix") {
+    def planChars(dim: Int) = {
+      import spark.implicits._
+      val rnd = new scala.util.Random(1103)
+      val v = (0L until 64L).map(i => (i, Seq.fill(dim)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding").cache()
+      val n = IvfAnn.topK(v, nQueries = 4, k = 3, cells = 8, iters = 1)
+        .queryExecution.executedPlan.toString.length
+      v.unpersist()
+      n
+    }
+    val (small, large) = (planChars(64), planChars(256))
+    // the typedlit spelling rendered 8 × 192 more doubles per use
+    assert(math.abs(large - small) < 64, s"plan text: $small chars at dim 64, $large at dim 256")
   }
 
   test("cosine top-k: at most 4 jobs; the same rows in the same order as orderBy") {

@@ -8,13 +8,32 @@ import graft.operators.{Bpe, IvfAnn}
 
 /** The multi-job formulations of the curate operators: a range-sorted
   * seed and a `groupBy` + collect per Lloyd iteration, a globally
-  * `orderBy`-sorted top-k, and a plain collected vocabulary. Kept as
-  * the equivalence oracles `CuratePlanSpec` compares the one-job
-  * operators against (same values, same order). */
+  * `orderBy`-sorted top-k, a plain collected vocabulary, and the IVF
+  * quantizer as `array_max` / `array_sort` over per-centroid `typedlit`
+  * structs. Kept as the equivalence oracles `CuratePlanSpec` compares
+  * the one-job operators and the one-expression quantizer against
+  * (same values, same order). */
 object CurateSpellings {
 
   private def rounded(xs: Seq[Double]) =
     xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+
+  private def scored(v: Column, centroids: Seq[Seq[Double]]): Seq[Column] =
+    centroids.zipWithIndex.map { case (c, k) =>
+      struct(
+        (VectorOps.dot(v, typedlit(c)) - lit(c.map(x => x * x).sum / 2)).as("s"),
+        lit(k).as("k"))
+    }
+
+  /** [[IvfAnn.assign]] as the struct ordering of `array_max`. */
+  def assign(v: Column, centroids: Seq[Seq[Double]]): Column =
+    array_max(array(scored(v, centroids): _*)).getField("k")
+
+  /** [[IvfAnn.probeCells]] as a reversed `array_sort`. */
+  def probeCells(v: Column, centroids: Seq[Seq[Double]], nProbe: Int): Column =
+    transform(
+      slice(reverse(array_sort(array(scored(v, centroids): _*))), 1, nProbe),
+      s => s.getField("k"))
 
   /** [[IvfAnn.centroids]] as `orderBy` seed + per-iteration groupBy. */
   def centroids(embeddings: DataFrame, k: Int, iters: Int): Seq[Seq[Double]] = {
@@ -23,7 +42,7 @@ object CurateSpellings {
       .collect().map(r => rounded(r.getSeq[Double](0))).toSeq
     for (_ <- 1 to iters) {
       val next = embeddings
-        .withColumn("cell", IvfAnn.assign(col("embedding"), cs))
+        .withColumn("cell", assign(col("embedding"), cs))
         .groupBy("cell").agg(VectorOps.centroid(col("embedding")).as("c"))
         .collect().map(r => r.getInt(0) -> rounded(r.getSeq[Double](1))).toMap
       cs = cs.indices.map(i => next.getOrElse(i, cs(i)))
@@ -37,10 +56,10 @@ object CurateSpellings {
     val cs = centroids(embeddings, cells, iters)
     val e = embeddings
       .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("cell", IvfAnn.assign(col("v"), cs))
+      .withColumn("cell", assign(col("v"), cs))
       .withColumn("nrm", VectorOps.norm(col("v")))
     val q = e.filter(col("vec_id") < nQueries)
-      .withColumn("probe", explode(IvfAnn.probeCells(col("v"), cs, nProbe)))
+      .withColumn("probe", explode(probeCells(col("v"), cs, nProbe)))
       .select(col("probe").as("cell"), col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val c = e.select(col("cell"), col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
