@@ -330,7 +330,13 @@ object FunctionQueries {
     Entry(
       "f11_try_ops",
       (s, d) =>
+        // (l_orderkey, l_linenumber) is not unique; every output column
+        // derives from these four source columns, so rows still tied
+        // after the sort are identical and the dump's order is fixed
         Tables.lineitem(s, d)
+          .select(col("l_orderkey"), col("l_linenumber"),
+            col("l_quantity"), col("l_returnflag"))
+          .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
           .select(
             col("l_orderkey"), col("l_linenumber"),
             round(try_divide(col("l_quantity"), col("l_linenumber") - 1), 6).as("qty_per"),
@@ -340,14 +346,14 @@ object FunctionQueries {
             // 13 s at sf0.1) — dirty data is rare by nature, the demo
             // should price it that way.
             expr("try_cast(CASE WHEN l_orderkey % 1000 = 0 THEN 'x' ELSE '7' END AS INT)").as("bad_int"),
-            expr("try_cast(l_quantity AS INT)").as("qty_int"))
-          .orderBy("l_orderkey", "l_linenumber"),
+            expr("try_cast(l_quantity AS INT)").as("qty_int")),
       Some("""SELECT l_orderkey, l_linenumber,
              |round(l_quantity / nullif(l_linenumber - 1, 0), 6) AS qty_per,
              |string_split(l_returnflag, ',')[2] AS missing_elem,
              |TRY_CAST(CASE WHEN l_orderkey % 1000 = 0 THEN 'x' ELSE '7' END AS INT) AS bad_int,
              |TRY_CAST(l_quantity AS INT) AS qty_int
-             |FROM lineitem ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST""".stripMargin)
+             |FROM lineitem ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
+             |l_quantity NULLS FIRST, l_returnflag NULLS FIRST""".stripMargin)
     ),
 
     // F9b: positional generator — posexplode keeps the element index

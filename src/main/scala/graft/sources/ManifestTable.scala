@@ -80,15 +80,14 @@ object ManifestTable {
     // drop-and-recreate hardening (review r10): (len, mtime)
     // validation leaves a residual hole — a recreated table whose v1
     // manifest matches the old one's byte length inside one mtime tick
-    // would serve stale text. A listing that shows FEWER versions than
-    // the cache holds is the observable signature of a recreate, so
-    // purge the orphans here; the sub-tick same-length v1-vs-v1 case
+    // would serve a stale record. A listing that shows FEWER versions
+    // than the cache holds is the observable signature of a recreate,
+    // so purge the orphans here; the sub-tick same-length v1-vs-v1 case
     // remains theoretically open (closing it needs content hashing,
     // i.e. re-reading what the cache exists to avoid) and is
     // documented at the cache.
     val head = vs.lastOption.getOrElse(0)
-    manifestTextCache.removeIf { case ((t, v), _) => t == table && v > head }
-    dvCache.removeIf { case ((t, v), _) => t == table && v > head }
+    rootCache.removeIf { case ((t, v), _) => t == table && v > head }
     vs
   }
 
@@ -102,55 +101,21 @@ object ManifestTable {
   def snapshotFiles(spark: SparkSession, table: String,
                     version: Int = -1): Seq[String] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Nil
-    else filesAndStatsFromText(spark, table, v, manifestText(spark, table, v))._1
+    if (v == 0) Nil else filesAndStats(spark, table, root(spark, table, v))._1
   }
 
-  private def filesFromText(text: String, table: String, v: Int): Seq[String] = {
-    // manifest grammar is ours and trivial: one quoted table-relative
-    // path per line inside "files": [...] — every data file lives
-    // under data/, which is what distinguishes a path from the
-    // "version"/"files" keys; no JSON dep needed to write or read it.
-    // The path regexes are SCOPED to the files block: the manifest
-    // may also carry "stats" (whose keys repeat the data/ paths) and
-    // "schemaB64" sections — an unscoped scan would double-count
-    // every file that has stats and read it twice.
-    val filesBlock = filesSection(text, table, v)
-    // LEGACY GUARD (ADVICE r5): manifests written before the
-    // relative-path format stored absolute paths, which the data/
-    // regex silently skips — a legacy table would read as empty with
-    // no hint of the cause. Any quoted path-shaped entry NOT under
-    // data/ is either re-relativized (absolute path that still
-    // contains a /data/<uuid>/<part> tail — the layout never changed,
-    // only the recording) or an explicit format error.
-    val rel = "\"(data/[^\"]+)\"".r.findAllMatchIn(filesBlock).map(_.group(1)).toSeq
-    val foreign = "\"([^\"]*/[^\"]+)\"".r.findAllMatchIn(filesBlock).map(_.group(1))
-      .filterNot(_.startsWith("data/")).toSeq
-    val migrated = foreign.map { abs =>
-      val i = abs.lastIndexOf("/data/")
-      require(i >= 0,
-        s"manifest v$v of $table contains unrecognized path '$abs' — " +
-          "not table-relative (data/...) and not a legacy absolute path " +
-          "with a data/<uuid>/<file> tail; unknown or corrupt manifest format")
-      abs.substring(i + 1)
-    }
-    rel ++ migrated
-  }
-
-  /** One read + one parse of a version's manifest, for the hot derived
-    * commits ([[merge]]/[[deleteWhere]]) and pruned reads that need
-    * files AND schema AND stats — calling the three public accessors
-    * separately re-reads and re-regexes the same (at 100k-file scale,
-    * megabytes-long) manifest text each time. */
+  /** Files, schema, stats and partition columns of one version, from
+    * one root lookup — for the hot derived commits ([[merge]]/
+    * [[deleteWhere]]) and pruned reads that need all four. */
   private def snapshotAll(spark: SparkSession, table: String, version: Int)
       : (Seq[String], Option[StructType],
          Map[String, Map[String, (Double, Double)]], Seq[String]) = {
     val v = if (version < 0) currentVersion(spark, table) else version
     if (v == 0) (Nil, None, Map.empty, Nil)
     else {
-      val text = manifestText(spark, table, v)
-      val (files, stats) = filesAndStatsFromText(spark, table, v, text)
-      (files, schemaFromText(text), stats, partitionByFromText(text))
+      val r = root(spark, table, v)
+      val (files, stats) = filesAndStats(spark, table, r)
+      (files, r.schema, stats, r.partitionBy)
     }
   }
 
@@ -160,13 +125,8 @@ object ManifestTable {
   def partitionColumns(spark: SparkSession, table: String,
                        version: Int = -1): Seq[String] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Nil else partitionByFromText(manifestText(spark, table, v))
+    if (v == 0) Nil else root(spark, table, v).partitionBy
   }
-
-  private def partitionByFromText(text: String): Seq[String] =
-    "\"partitionBy\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(text)
-      .map(m => "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-      .getOrElse(Nil)
 
   // -----------------------------------------------------------------
   // HIDDEN PARTITIONING — Iceberg's partition transforms: the layout
@@ -213,34 +173,12 @@ object ManifestTable {
       case _ => None
     }
 
-  private def transformsRawFromText(text: String): Option[String] =
-    "\"partitionTransformsB64\"\\s*:\\s*\"([A-Za-z0-9+/=]+)\"".r
-      .findFirstMatchIn(text).map(_.group(1))
-
   /** The non-identity partition transforms `version` was laid out
     * with; empty for flat or identity-partitioned tables. */
   def partitionTransforms(spark: SparkSession, table: String,
                           version: Int = -1): Seq[PartitionTransform] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Nil
-    else transformsRawFromText(manifestText(spark, table, v)).map { b =>
-      val arr = segmentMapper.readTree(unb64(b))
-      (0 until arr.size).map { i =>
-        val e = arr.get(i)
-        PartitionTransform(e.get("k").asText, e.get("s").asText,
-          e.get("n").asLong, e.get("t").asText)
-      }
-    }.getOrElse(Nil)
-  }
-
-  private def transformsB64Of(pts: Seq[PartitionTransform]): String = {
-    val arr = segmentMapper.createArrayNode()
-    pts.foreach { pt =>
-      val e = arr.addObject()
-      e.put("k", pt.kind); e.put("s", pt.source)
-      e.put("n", pt.n); e.put("t", pt.target)
-    }
-    b64(segmentMapper.writeValueAsString(arr))
+    if (v == 0) Nil else root(spark, table, v).transforms
   }
 
   /** The derived layout value, as the ONE Column definition both the
@@ -342,27 +280,31 @@ object ManifestTable {
     }
   }
 
-  /** Bounded (table, version) → manifest-text cache. Sound because a
+  /** Bounded (table, version) → decoded-root cache. Sound because a
     * published manifest is IMMUTABLE — the only lifecycle event is
     * deletion by [[expire]], which the existence check still observes
     * (an expired version keeps failing loudly; the FS stat it costs is
-    * nothing next to re-reading and re-parsing a multi-MB manifest on
-    * every accessor — read/merge/reconcile each consult the head text
-    * several times per operation). */
+    * nothing next to re-reading and re-decoding a multi-MB manifest
+    * on every accessor — read/merge/reconcile each consult the head
+    * root several times per operation). */
   // Each entry remembers the (length, mtime) of the file it was read
   // from, and a hit is validated against a fresh getFileStatus — the
   // same RPC the old existence check cost. This closes the
   // drop-and-recreate hole (ADVICE r9): delete a table directory and
   // re-create it at the same path in one JVM and version numbers
   // restart, so a bare existence check would happily serve the OLD
-  // table's v1 text for the NEW table's v1 file. The cache is bounded
-  // by TOTAL BYTES, not entry count — at 100k-file scale one manifest
-  // is tens of MB, and 64 such entries would pin GBs of driver heap.
-  private final case class CachedManifest(text: String, len: Long, mtime: Long)
+  // table's v1 root for the NEW table's v1 file. The cache is bounded
+  // by WEIGHT, not entry count — at 100k-file scale one root is tens
+  // of MB, and 64 such entries would pin GBs of driver heap. The
+  // weight is 2 bytes per char of root text plus 4 per decoded
+  // deletion-vector ordinal: 64 MB holds 32M chars of text or 16M
+  // ordinals, the two bounds the text and vector caches had apart.
+  private final case class CachedRoot(root: RootRecord, len: Long, mtime: Long,
+                                      weight: Long)
 
   /** The ONE validated-LRU shape every parsed-manifest-artifact cache
-    * in this file uses (manifest text, segment entries, bloom
-    * sidecars, ingest ledgers, decoded deletion vectors): synchronized
+    * in this file uses (decoded roots, segment entries, bloom
+    * sidecars, ingest ledgers): synchronized
     * access-order LRU bounded by a caller-chosen WEIGHT — bytes, key
     * counts, whatever the real memory is — never evicting the entry
     * just stored. Extracted r10 (review finding: four hand-rolled
@@ -395,14 +337,8 @@ object ManifestTable {
     }
   }
 
-  private val manifestTextCache = // 64 MB of manifest text
-    new BoundedLru[(String, Int), CachedManifest](64L << 20, 2L * _.text.length)
-
-  private def cacheLookup(key: (String, Int)): CachedManifest =
-    manifestTextCache.get(key)
-
-  private def cacheStore(key: (String, Int), e: CachedManifest): Unit =
-    manifestTextCache.put(key, e)
+  private val rootCache =
+    new BoundedLru[(String, Int), CachedRoot](64L << 20, _.weight)
 
   /** A version's manifest is gone — expired by retention or never
     * committed. A DEDICATED IllegalArgumentException subtype so
@@ -413,7 +349,8 @@ object ManifestTable {
   final class ExpiredVersionException(msg: String)
     extends IllegalArgumentException(msg)
 
-  private def manifestText(spark: SparkSession, table: String, v: Int): String = {
+  /** Version `v`'s root, decoded once per (table, version, len, mtime). */
+  private def root(spark: SparkSession, table: String, v: Int): RootRecord = {
     val p = manifestPath(table, v)
     val st =
       try fs(spark, p).getFileStatus(p)
@@ -421,9 +358,9 @@ object ManifestTable {
         case _: java.io.FileNotFoundException => throw new ExpiredVersionException(
           s"requirement failed: version $v of $table is expired or was never committed")
       }
-    val cached = cacheLookup((table, v))
+    val cached = rootCache.get((table, v))
     if (cached != null && cached.len == st.getLen &&
-        cached.mtime == st.getModificationTime) cached.text
+        cached.mtime == st.getModificationTime) cached.root
     else {
       val in = fs(spark, p).open(p)
       val text =
@@ -431,9 +368,10 @@ object ManifestTable {
         finally in.close()
       // PROTOCOL GATE (r11) — the Delta reader/writer-feature /
       // Iceberg format-version idiom: validated at parse time, BEFORE
-      // the text is cached or any section regex runs, so every read
-      // AND write path (they all funnel through this one accessor for
-      // head/parent text) refuses an unreadable snapshot loudly.
+      // the root is cached, so every read AND write path (they all
+      // funnel through this one accessor for head/parent roots)
+      // refuses an unreadable snapshot loudly — also when the codec
+      // cannot decode a section an unknown feature reshaped.
       // What the gate buys is FORWARD protection (honest contract,
       // r12): every gate-aware reader refuses any FUTURE feature it
       // does not understand, instead of the silent misreads each
@@ -444,9 +382,14 @@ object ManifestTable {
       // and stay exactly as unsafe as they were. Features are stamped
       // from the next publish onward; pre-gate roots carry no list
       // and are grandfathered — see SCALE.md "Format compatibility".
-      requireFeaturesReadable(featuresFromText(text), table, v)
-      cacheStore((table, v), CachedManifest(text, st.getLen, st.getModificationTime))
-      text
+      val r =
+        try RootCodec.decode(text, table, v)
+        catch { case scala.util.control.NonFatal(e) =>
+          requireFeaturesReadable(RootCodec.features(text), table, v); throw e }
+      requireFeaturesReadable(r.features, table, v)
+      rootCache.put((table, v), CachedRoot(r, st.getLen, st.getModificationTime,
+        2L * text.length + 4L * r.dvs.valuesIterator.map(_.size.toLong).sum))
+      r
     }
   }
 
@@ -474,18 +417,6 @@ object ManifestTable {
     "segments", "externs", "dvs", "tombstones", "transforms",
     "txn", "blooms", "ingest", "checks", "colmap")
 
-  /** Line-anchored on purpose (ADVICE r11): top-level root keys are
-    * emitted at exactly 2-space indent, while per-file stats entries
-    * (`    "data/…": {"col":[mn,mx]}`) sit at 4 — so a stats COLUMN
-    * literally named `features` can never match this regex regardless
-    * of section order, and the gate no longer leans on the (true but
-    * fragile) invariant that tryPublish writes the features line
-    * before the stats block. */
-  private def featuresFromText(text: String): Seq[String] =
-    "(?m)^  \"features\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(text)
-      .map(m => "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-      .getOrElse(Nil)
-
   private def requireFeaturesReadable(feats: Seq[String], table: String,
                                       v: Int): Unit = {
     val unknown = feats.filterNot(SupportedFeatures)
@@ -504,28 +435,7 @@ object ManifestTable {
   def tableFeatures(spark: SparkSession, table: String,
                     version: Int = -1): Seq[String] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Nil else featuresFromText(manifestText(spark, table, v))
-  }
-
-  /** The `"files": [ ... ]` block of a manifest (every format the table
-    * has ever written — including legacy absolute-path manifests — has
-    * one; its absence means corruption, not an empty snapshot).
-    * Anchored on the LAST `"files"` occurrence (ADVICE r8): the stats
-    * block precedes the files section and repeats raw COLUMN names as
-    * keys, so a stats-tracked column literally named `files` would
-    * otherwise shadow the section key — snapshotFiles would silently
-    * return Nil and [[expire]] would then reclaim live data. The files
-    * section is always the manifest's final section and its entries
-    * are uuid paths that cannot contain a quoted `"files"` key, so the
-    * last occurrence is unambiguous. */
-  private def filesSection(text: String, table: String, v: Int): String = {
-    val start = text.lastIndexOf("\"files\"")
-    require(start >= 0, s"manifest v$v of $table has no files section")
-    val open = text.indexOf('[', start)
-    val close = text.indexOf(']', open)
-    require(open >= 0 && close > open,
-      s"manifest v$v of $table has a malformed files section")
-    text.substring(open, close)
+    if (v == 0) Nil else root(spark, table, v).features
   }
 
   /** The snapshot schema recorded at commit time (Delta-style: the log,
@@ -535,17 +445,8 @@ object ManifestTable {
   def snapshotSchema(spark: SparkSession, table: String,
                      version: Int = -1): Option[StructType] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) None else schemaFromText(manifestText(spark, table, v))
+    if (v == 0) None else root(spark, table, v).schema
   }
-
-  private def schemaFromText(text: String): Option[StructType] =
-    "\"schemaB64\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(text)
-      .map { m =>
-        val json = new String(
-          java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8")
-        DataType.fromJson(json).asInstanceOf[StructType]
-      }
 
   /** Per-file column (min, max) ranges recorded at write time —
     * `relPath -> col -> (min, max)` as doubles. Files or columns absent
@@ -553,25 +454,7 @@ object ManifestTable {
   def snapshotStats(spark: SparkSession, table: String, version: Int = -1)
       : Map[String, Map[String, (Double, Double)]] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Map.empty
-    else filesAndStatsFromText(spark, table, v, manifestText(spark, table, v))._2
-  }
-
-  private def statsFromText(text: String)
-      : Map[String, Map[String, (Double, Double)]] = {
-    val start = text.indexOf("\"stats\"")
-    if (start < 0) Map.empty
-    else {
-      // one `"data/...": {"col":[mn,mx],...}` entry per line — the
-      // writer guarantees the shape, so per-line regexes suffice
-      val entry = "\"(data/[^\"]+)\"\\s*:\\s*\\{([^}]*)\\}".r
-      val range = "\"([^\"]+)\"\\s*:\\s*\\[([^,\\]]+),([^\\]]+)\\]".r
-      entry.findAllMatchIn(text.substring(start)).map { m =>
-        m.group(1) -> range.findAllMatchIn(m.group(2)).map { r =>
-          r.group(1) -> (r.group(2).trim.toDouble, r.group(3).trim.toDouble)
-        }.toMap
-      }.toMap
-    }
+    if (v == 0) Map.empty else filesAndStats(spark, table, root(spark, table, v))._2
   }
 
   // ------------------------------------------------------------------
@@ -592,9 +475,8 @@ object ManifestTable {
   //     LSM-ish amortization that keeps root size O(files/target).
   // Metadata-only commits (constraints, tombstones, DDL, restore with
   // a donor) carry every segment and write just the root: O(1).
-  // Segments are JSON via a real codec (Jackson, on Spark's own
-  // classpath) — the regex grammar stays confined to the root, whose
-  // shape is unchanged for legacy tables. Legacy inline manifests stay
+  // Segments are JSON through the same Jackson mapper as the root
+  // ([[RootCodec]]). Legacy inline manifests stay
   // readable forever; a table migrates the first time a commit crosses
   // the threshold, with no flag day ([[snapshotSegments]] exposes the
   // layout for tests/ops).
@@ -602,31 +484,17 @@ object ManifestTable {
 
   private[graft] val SegmentFilesKey = "graft.manifest.segmentFiles"
 
-  private def segmentsFromText(text: String): Seq[String] =
-    "\"segments\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(text)
-      .map(m => "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-      .getOrElse(Nil)
-
   /** The segment files `version`'s root references (table-relative,
     * under `_manifests/`), empty for an inline (legacy or small)
     * manifest. Ops/tests use it to see carry-by-reference at work. */
   def snapshotSegments(spark: SparkSession, table: String,
                        version: Int = -1): Seq[String] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Nil else segmentsFromText(manifestText(spark, table, v))
+    if (v == 0) Nil else root(spark, table, v).segments
   }
 
   private type SegEntries = IndexedSeq[(String, Map[String, (Double, Double)])]
 
-  // one configured mapper for all segment IO; stats can be NaN (min/max
-  // of a NaN-bearing double column) so non-numeric numbers are written
-  // bare and accepted back — both ends are this codec
-  private val segmentMapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_NON_NUMERIC_NUMBERS)
-    m.disable(com.fasterxml.jackson.core.JsonGenerator.Feature.QUOTE_NON_NUMERIC_NUMBERS)
-    m
-  }
 
   /** Write one immutable segment file; returns its manifest-relative
     * name. Written BEFORE the root publish — a lost race deletes it, a
@@ -635,7 +503,7 @@ object ManifestTable {
                            entries: Seq[(String, Map[String, (Double, Double)])])
       : String = {
     val rel = s"segments/${java.util.UUID.randomUUID()}.json"
-    val node = segmentMapper.createObjectNode()
+    val node = RootCodec.mapper.createObjectNode()
     val arr = node.putArray("entries")
     entries.foreach { case (p, st) =>
       val e = arr.addObject()
@@ -648,12 +516,12 @@ object ManifestTable {
     val path = new Path(manifestDir(table), rel)
     val f = fs(spark, path)
     val out = f.create(path, false) // uuid name: never contended
-    try out.write(segmentMapper.writeValueAsBytes(node)) finally out.close()
+    try out.write(RootCodec.mapper.writeValueAsBytes(node)) finally out.close()
     rel
   }
 
   private def parseSegment(text: String, where: String): SegEntries = {
-    val tree = segmentMapper.readTree(text)
+    val tree = RootCodec.mapper.readTree(text)
     val entries = tree.get("entries")
     require(entries != null && entries.isArray, s"malformed segment $where")
     (0 until entries.size).map { i =>
@@ -681,7 +549,7 @@ object ManifestTable {
   // guards the drop-and-recreate-at-same-path hole. Bounded by
   // ESTIMATED BYTES (review r10: an entry-count bound ignored that an
   // entry is path + per-column boxed stats, KBs each — 2M of them
-  // could pin GBs where the text cache above was deliberately held to
+  // could pin GBs where the root cache above is deliberately held to
   // 64 MB); the estimate is computed once at parse and stored.
   private final case class CachedSegment(entries: SegEntries,
                                          len: Long, mtime: Long, bytes: Long)
@@ -717,18 +585,16 @@ object ManifestTable {
     }
   }
 
-  /** Files + stats of a version's root text, segment-aware: the ONE
-    * accessor every snapshot consumer funnels through. Inline roots
-    * parse as before; segmented roots concatenate their segments'
-    * entries (stats map carries only files that have stats, matching
-    * the inline convention). */
-  private def filesAndStatsFromText(spark: SparkSession, table: String,
-                                    v: Int, text: String)
+  /** Files + stats of a root, segment-aware: the ONE accessor every
+    * snapshot consumer funnels through. Inline roots carry both;
+    * segmented roots concatenate their segments' entries (stats map
+    * carries only files that have stats, matching the inline
+    * convention). */
+  private def filesAndStats(spark: SparkSession, table: String, r: RootRecord)
       : (Seq[String], Map[String, Map[String, (Double, Double)]]) = {
-    val segs = segmentsFromText(text)
-    if (segs.isEmpty) (filesFromText(text, table, v), statsFromText(text))
+    if (r.segments.isEmpty) (r.files, r.stats)
     else {
-      val all = segs.map(segmentEntries(spark, table, _))
+      val all = r.segments.map(segmentEntries(spark, table, _))
       (all.flatMap(_.map(_._1)),
         all.iterator.flatten.filter(_._2.nonEmpty).toMap)
     }
@@ -743,11 +609,8 @@ object ManifestTable {
   def commitTimeMs(spark: SparkSession, table: String,
                    version: Int = -1): Option[Long] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) None else commitMsFromText(manifestText(spark, table, v))
+    if (v == 0) None else root(spark, table, v).commitMs
   }
-
-  private def commitMsFromText(text: String): Option[Long] =
-    "\"commitMs\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(text).map(_.group(1).toLong)
 
   /** The operation that produced `version` — append / overwrite /
     * merge / delete / compact / compact-small / restore /
@@ -756,19 +619,8 @@ object ManifestTable {
   def commitOp(spark: SparkSession, table: String,
                version: Int = -1): Option[String] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) None else opFromText(manifestText(spark, table, v))
+    if (v == 0) None else root(spark, table, v).op
   }
-
-  private def opFromText(text: String): Option[String] =
-    "\"op\"\\s*:\\s*\"([a-z-]+)\"".r.findFirstMatchIn(text).map(_.group(1))
-
-  /** Per-version rollup counters recorded at publish (r14):
-    * (nFiles, nBytes, nAdded, nRemoved). None for legacy roots. */
-  private def rollupFromText(text: String): Option[(Long, Long, Long, Long)] =
-    ("\"rollup\"\\s*:\\s*\\{\"nFiles\":\\s*(\\d+),\\s*\"nBytes\":\\s*(\\d+)," +
-      "\\s*\"nAdded\":\\s*(\\d+),\\s*\"nRemoved\":\\s*(\\d+)\\}").r
-      .findFirstMatchIn(text).map(m => (m.group(1).toLong, m.group(2).toLong,
-        m.group(3).toLong, m.group(4).toLong))
 
   /** DESCRIBE HISTORY: one row per surviving version — version, op,
     * commit wall-clock, file/byte totals, and the files added/removed
@@ -798,33 +650,32 @@ object ManifestTable {
     // (either cached from the previous iteration or re-derived)
     var prevV = -1
     var prevSet: Option[Set[String]] = None
-    def setOf(v: Int, text: String): Set[String] =
-      filesAndStatsFromText(spark, table, v, text)._1.toSet
+    def setOf(v: Int): Set[String] =
+      filesAndStats(spark, table, root(spark, table, v))._1.toSet
     val rows = vs.zipWithIndex.map { case (v, i) =>
-      val text = manifestText(spark, table, v)
+      val r = root(spark, table, v)
       // added/removed diff against the parent snapshot — unknowable
       // only for the oldest surviving version when its parent expired
       // (a windowed scan's first version derives from its parent
       // directly while that manifest survives)
       val known = v == 1 || i > 0 || vsFullSet.contains(v - 1)
       val (nFiles, bytes, addedN, removedN, matSet) =
-        rollupFromText(text) match {
-          case Some((nf, nb, na, nr)) => (nf.toInt, nb, na, nr, None)
+        r.rollup match {
+          case Some(u) => (u.nFiles.toInt, u.nBytes, u.nAdded, u.nRemoved, None)
           case None =>
-            val (vFiles, vStats) = filesAndStatsFromText(spark, table, v, text)
+            val (vFiles, vStats) = filesAndStats(spark, table, r)
             val fileSet = vFiles.toSet
             val parent =
               if (!known || v == 1) Set.empty[String]
               else if (prevV == v - 1 && prevSet.isDefined) prevSet.get
-              else setOf(v - 1, manifestText(spark, table, v - 1))
+              else setOf(v - 1)
             val b = vStats.valuesIterator
               .flatMap(_.get(SizeKey)).map(_._1.toLong).sum
             (fileSet.size, b, (fileSet -- parent).size.toLong,
               (parent -- fileSet).size.toLong, Some(fileSet))
         }
       prevV = v; prevSet = matSet
-      (v, opFromText(text).getOrElse("unknown"),
-        commitMsFromText(text).getOrElse(0L),
+      (v, r.op.getOrElse("unknown"), r.commitMs.getOrElse(0L),
         nFiles, bytes,
         if (known) Some(addedN) else None,
         if (known) Some(removedN) else None)
@@ -832,11 +683,6 @@ object ManifestTable {
     rows.toDF("version", "op", "commit_ms", "n_files", "n_bytes",
       "n_added", "n_removed")
   }
-
-  private def b64(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-  private def unb64(s: String): String =
-    new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
 
   /** Filename-safe encoding for publish TAGS (temp-manifest names):
     * standard base64 emits '/' — a tag like `addcheck-Y28/` would turn
@@ -852,7 +698,7 @@ object ManifestTable {
   def checkConstraints(spark: SparkSession, table: String,
                        version: Int = -1): Map[String, String] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Map.empty else checksFromText(manifestText(spark, table, v))
+    if (v == 0) Map.empty else root(spark, table, v).checks
   }
 
   /** The last committed transaction version per application id (the
@@ -865,22 +711,8 @@ object ManifestTable {
   def txnVersion(spark: SparkSession, table: String, appId: String,
                  version: Int = -1): Option[Long] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) None else txnsFromText(manifestText(spark, table, v)).get(appId)
+    if (v == 0) None else root(spark, table, v).txns.get(appId)
   }
-
-  private def txnsFromText(text: String): Map[String, Long] =
-    "\"txnsB64\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(text)
-      .map(m => "\"([A-Za-z0-9+/=]+)\"\\s*:\\s*(-?\\d+)".r
-        .findAllMatchIn(m.group(1))
-        .map(e => unb64(e.group(1)) -> e.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
-
-  private def checksFromText(text: String): Map[String, String] =
-    "\"checksB64\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(text)
-      .map(m => "\"([A-Za-z0-9+/=]+)\"\\s*:\\s*\"([A-Za-z0-9+/=]*)\"".r
-        .findAllMatchIn(m.group(1))
-        .map(e => unb64(e.group(1)) -> unb64(e.group(2))).toMap)
-      .getOrElse(Map.empty)
 
   // -----------------------------------------------------------------
   // Per-file BLOOM FILTER indexes — the Delta bloom-filter-index /
@@ -906,31 +738,12 @@ object ManifestTable {
 
   private def bloomsDir(table: String) = new Path(manifestDir(table), "blooms")
 
-  private def bloomRawFromText(text: String): Option[String] =
-    "\"bloomB64\"\\s*:\\s*\"([A-Za-z0-9+/=]+)\"".r
-      .findFirstMatchIn(text).map(_.group(1))
-
   /** The table's bloom index config at `version`, None when not
     * configured. */
   def bloomConfig(spark: SparkSession, table: String,
                   version: Int = -1): Option[BloomConfig] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) None
-    else bloomRawFromText(manifestText(spark, table, v)).map { b =>
-      val node = segmentMapper.readTree(unb64(b))
-      val cols = (0 until node.get("cols").size)
-        .map(i => node.get("cols").get(i).asText)
-      BloomConfig(cols, node.get("bits").asLong, node.get("k").asInt)
-    }
-  }
-
-  private def bloomCfgB64(cfg: BloomConfig): String = {
-    val node = segmentMapper.createObjectNode()
-    val arr = node.putArray("cols")
-    cfg.cols.foreach(arr.add)
-    node.put("bits", cfg.bits)
-    node.put("k", cfg.k)
-    b64(segmentMapper.writeValueAsString(node))
+    if (v == 0) None else root(spark, table, v).bloom
   }
 
   /** The k bit positions a value lights, as a Spark Column — the ONE
@@ -977,7 +790,7 @@ object ManifestTable {
       if (currentVersion(spark, table) == head &&
           tryPublish(spark, table, head, files, "addbloom",
             schema, stats, partBy, op = "add-bloom",
-            bloomB64 = Some(bloomCfgB64(BloomConfig(cols, bits, k)))))
+            bloom = Some(Some(BloomConfig(cols, bits, k)))))
         return head + 1
     }
     throw new java.util.ConcurrentModificationException(
@@ -999,7 +812,7 @@ object ManifestTable {
       if (currentVersion(spark, table) == head &&
           tryPublish(spark, table, head, files, "dropbloom",
             schema, stats, partBy, op = "drop-bloom",
-            bloomB64 = Some(""))) // empty replacement clears the record
+            bloom = Some(None))) // an empty replacement clears the record
         return head + 1
     }
     throw new java.util.ConcurrentModificationException(
@@ -1060,7 +873,7 @@ object ManifestTable {
       val text =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      val tree = segmentMapper.readTree(text)
+      val tree = RootCodec.mapper.readTree(text)
       val node = tree.get("blooms")
       import scala.jdk.CollectionConverters._
       var bytes = 0L
@@ -1098,16 +911,11 @@ object ManifestTable {
 
   private def ingestDir(table: String) = new Path(manifestDir(table), "ingest")
 
-  private def ingestSegsFromText(text: String): Seq[String] =
-    "\"ingestSegs\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(text)
-      .map(m => "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-      .getOrElse(Nil)
-
   /** The ingest-ledger files `version`'s root references. */
   def ingestLedgers(spark: SparkSession, table: String,
                     version: Int = -1): Seq[String] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Nil else ingestSegsFromText(manifestText(spark, table, v))
+    if (v == 0) Nil else root(spark, table, v).ingestSegs
   }
 
   private def sourceKey(p: String, len: Long, mtime: Long): String =
@@ -1133,7 +941,7 @@ object ManifestTable {
         val text =
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
-        val arr = segmentMapper.readTree(text).get("sources")
+        val arr = RootCodec.mapper.readTree(text).get("sources")
         val keys = (0 until arr.size).map { i =>
           val e = arr.get(i)
           sourceKey(e.get("p").asText, e.get("l").asLong, e.get("m").asLong)
@@ -1146,7 +954,7 @@ object ManifestTable {
   private def writeIngestLedger(spark: SparkSession, table: String,
                                 sources: Seq[(String, Long, Long)]): String = {
     val rel = s"ingest/${java.util.UUID.randomUUID()}.json"
-    val node = segmentMapper.createObjectNode()
+    val node = RootCodec.mapper.createObjectNode()
     val arr = node.putArray("sources")
     sources.foreach { case (p, l, m) =>
       val e = arr.addObject(); e.put("p", p); e.put("l", l); e.put("m", m)
@@ -1154,7 +962,7 @@ object ManifestTable {
     val path = new Path(manifestDir(table), rel)
     val f = fs(spark, path)
     val out = f.create(path, false) // uuid name: never contended
-    try out.write(segmentMapper.writeValueAsBytes(node)) finally out.close()
+    try out.write(RootCodec.mapper.writeValueAsBytes(node)) finally out.close()
     rel
   }
 
@@ -1294,7 +1102,7 @@ object ManifestTable {
   def deleteTombstones(spark: SparkSession, table: String,
                        version: Int = -1): Seq[(String, Seq[String])] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) Nil else tombstonesFromText(manifestText(spark, table, v))
+    if (v == 0) Nil else root(spark, table, v).tombstones
   }
 
   /** Row-granular DELETION VECTORS of `version` — `relPath -> sorted
@@ -1313,35 +1121,8 @@ object ManifestTable {
   def deleteVectors(spark: SparkSession, table: String,
                     version: Int = -1): Map[String, Seq[Long]] = {
     val v = if (version < 0) currentVersion(spark, table) else version
-    if (v == 0) return Map.empty
-    // decoded-vector cache (review r10): after the scattered delete
-    // this feature exists for, the map holds O(deleted rows) ordinals,
-    // and every read/merge/publish consulted it — re-running the
-    // base64+varint walk each time. Weight = ordinal count; validation
-    // = the manifest file's (len, mtime), like every cache here.
-    val p = manifestPath(table, v)
-    val st =
-      try fs(spark, p).getFileStatus(p)
-      catch {
-        case _: java.io.FileNotFoundException => throw new IllegalArgumentException(
-          s"requirement failed: version $v of $table is expired or was never committed")
-      }
-    val key = (table, v)
-    val hit = dvCache.get(key)
-    if (hit != null && hit.len == st.getLen &&
-        hit.mtime == st.getModificationTime) hit.dvs
-    else {
-      val m = dvsFromText(manifestText(spark, table, v))
-      dvCache.put(key, CachedDvs(m, st.getLen, st.getModificationTime,
-        math.max(1L, m.valuesIterator.map(_.size.toLong).sum)))
-      m
-    }
+    if (v == 0) Map.empty else root(spark, table, v).dvs
   }
-
-  private final case class CachedDvs(dvs: Map[String, Seq[Long]],
-                                     len: Long, mtime: Long, ords: Long)
-  private val dvCache = // ≤ 16M decoded ordinals resident
-    new BoundedLru[(String, Int), CachedDvs](16000000L, _.ords)
 
   /** True when version `v`'s commit removed ROWS without removing
     * files — its deletion-vector or tombstone state differs from the
@@ -1350,87 +1131,18 @@ object ManifestTable {
     * ([[graft.streaming.ChangeFeedStream]]) consults for versions
     * whose FILE census looks append-clean: op names alone over-refuse
     * (an insert-only MERGE or a zero-match DELETE is append-safe).
-    * Manifest reads ride the text cache. Throws
+    * Root reads ride the root cache. Throws
     * [[ExpiredVersionException]] when the parent manifest is gone —
     * callers treat unknowable as unsafe. */
   private[graft] def rowStateShrunkAt(spark: SparkSession, table: String,
                                       v: Int): Boolean =
     v > 1 && {
-      val cur = manifestText(spark, table, v)
-      val par = manifestText(spark, table, v - 1)
-      def tombMap(t: String): Map[String, Set[String]] =
-        tombstonesFromText(t).map { case (k, vs) => k -> vs.toSet }.toMap
-      dvsFromText(cur) != dvsFromText(par) ||
-        tombMap(cur) != tombMap(par)
+      val cur = root(spark, table, v)
+      val par = root(spark, table, v - 1)
+      def tombMap(r: RootRecord): Map[String, Set[String]] =
+        r.tombstones.map { case (k, vs) => k -> vs.toSet }.toMap
+      cur.dvs != par.dvs || tombMap(cur) != tombMap(par)
     }
-
-  private def dvsFromText(text: String): Map[String, Seq[Long]] =
-    "\"dvsB64\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(text)
-      .map(m => "\"([A-Za-z0-9+/=]+)\"\\s*:\\s*\"([A-Za-z0-9+/=]*)\"".r
-        .findAllMatchIn(m.group(1))
-        .map(e => unb64(e.group(1)) -> decodeDv(e.group(2))).toMap)
-      .getOrElse(Map.empty)
-
-  /** Sorted ordinals → delta-varint bytes → base64 (compact: dense
-    * runs cost ~1 byte/row). */
-  private def encodeDv(ordinals: Seq[Long]): String = {
-    val out = new java.io.ByteArrayOutputStream()
-    var prev = 0L
-    ordinals.foreach { o =>
-      var d = o - prev
-      require(d >= 0, "deletion-vector ordinals must be sorted and distinct")
-      prev = o
-      while ((d & ~0x7fL) != 0) { out.write(((d & 0x7f) | 0x80).toInt); d >>>= 7 }
-      out.write(d.toInt)
-    }
-    java.util.Base64.getEncoder.encodeToString(out.toByteArray)
-  }
-
-  private def decodeDv(b64: String): Seq[Long] = {
-    val bytes = java.util.Base64.getDecoder.decode(b64)
-    val out = Seq.newBuilder[Long]
-    var i = 0
-    var prev = 0L
-    while (i < bytes.length) {
-      var d = 0L
-      var shift = 0
-      var more = true
-      while (more) {
-        val b = bytes(i); i += 1
-        d |= (b & 0x7fL) << shift; shift += 7
-        more = (b & 0x80) != 0
-      }
-      prev += d
-      out += prev
-    }
-    out.result()
-  }
-
-  private def tombstonesFromText(text: String): Seq[(String, Seq[String])] = {
-    val start = text.indexOf("\"tombstonesB64\"")
-    if (start < 0) Nil
-    else {
-      // entries are `"b64pred": ["data/...", ...]`. The block must NOT
-      // end at the first `}` — `}` is not in the hive escape list, so
-      // a partition value like `a}b` puts a literal `}` inside a
-      // target path and would truncate the block (silently dropping
-      // tombstones = resurrecting deleted rows). End instead at the
-      // next SECTION key: quotes ARE hive-escaped, so no quoted
-      // section token can appear inside a target string.
-      val end = Seq("\"dvsB64\"", "\"partitionBy\"", "\"schemaB64\"", "\"stats\"",
-          "\"segments\"", "\"files\"")
-        .map(k => text.indexOf(k, start)).filter(_ >= 0) match {
-        case Nil => text.length
-        case hits => hits.min
-      }
-      val block = text.substring(start, end)
-      "\"([A-Za-z0-9+/=]+)\"\\s*:\\s*\\[([^\\]]*)\\]".r
-        .findAllMatchIn(block).map { m =>
-          unb64(m.group(1)) ->
-            "\"([^\"]+)\"".r.findAllMatchIn(m.group(2)).map(_.group(1)).toSeq
-        }.toSeq
-    }
-  }
 
   /** SQL CHECK semantics: a row violates only when the expression is
     * FALSE — NULL passes (the standard's unknown-is-ok rule). One
@@ -1575,8 +1287,7 @@ object ManifestTable {
             op = "set-partition-spec",
             tombstones = Some(deleteTombstones(spark, table, head)),
             dvs = Some(deleteVectors(spark, table, head)),
-            transformsB64 = Some(
-              if (transforms.isEmpty) "" else transformsB64Of(transforms))))
+            transforms = Some(transforms)))
         return head + 1
     }
     throw new java.util.ConcurrentModificationException(
@@ -1766,7 +1477,7 @@ object ManifestTable {
     val text =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    val node = segmentMapper.readTree(text)
+    val node = RootCodec.mapper.readTree(text)
     import scala.jdk.CollectionConverters._
     node.fields().asScala.map(kv => kv.getKey -> kv.getValue.asText).toMap
   }
@@ -1775,9 +1486,9 @@ object ManifestTable {
     * two writers with the SAME properties produce identical bytes and
     * a content compare can stand in for "same CREATE statement". */
   private[graft] def configBytes(props: Map[String, String]): Array[Byte] = {
-    val node = segmentMapper.createObjectNode()
+    val node = RootCodec.mapper.createObjectNode()
     props.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    segmentMapper.writeValueAsBytes(node)
+    RootCodec.mapper.writeValueAsBytes(node)
   }
 
   private def readRawBytes(f: FileSystem, p: Path): Option[Array[Byte]] =
@@ -1916,7 +1627,7 @@ object ManifestTable {
 
   /** `data/<uuid>` → donor-root map for `table`; empty for non-clones.
     * One driver-side stat RPC per call (same validation discipline as
-    * the manifest text cache — a dropped-and-recreated table at the
+    * the root cache — a dropped-and-recreated table at the
     * same path can never serve a stale ledger). */
   def externRoots(spark: SparkSession, table: String): Map[String, String] = {
     val p = externsPath(table)
@@ -1934,7 +1645,7 @@ object ManifestTable {
       val text =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      val node = segmentMapper.readTree(text).get("externs")
+      val node = RootCodec.mapper.readTree(text).get("externs")
       require(node != null && node.isObject,
         s"malformed extern ledger at $p")
       import scala.jdk.CollectionConverters._
@@ -2035,10 +1746,10 @@ object ManifestTable {
       // a config-less donor
       lf.delete(configPath(dst), false)
     }
-    val node = segmentMapper.createObjectNode()
+    val node = RootCodec.mapper.createObjectNode()
     val ex = node.putObject("externs")
     ledger.toSeq.sortBy(_._1).foreach { case (u, root) => ex.put(u, root) }
-    val ledgerBytes = segmentMapper.writeValueAsBytes(node)
+    val ledgerBytes = RootCodec.mapper.writeValueAsBytes(node)
     val out = lf.create(lp, false) // exclusive: a racing clone loses here
     try out.write(ledgerBytes) finally out.close()
     // the donor's COPY INTO memory comes along (metadata-sized file
@@ -2105,8 +1816,8 @@ object ManifestTable {
         op = "clone",
         tombstones = Some(deleteTombstones(spark, src, v)),
         dvs = Some(deleteVectors(spark, src, v)),
-        bloomB64 = bloomRawFromText(manifestText(spark, src, v)),
-        transformsB64 = transformsRawFromText(manifestText(spark, src, v)),
+        bloom = Some(bloomConfig(spark, src, v)),
+        transforms = Some(partitionTransforms(spark, src, v)),
         ingestSegs = Some(donorLedgers))
       catch { case e: Throwable => cleanupCloneDebris(); throw e }
     if (!ok) {
@@ -3388,10 +3099,9 @@ object ManifestTable {
         // partition columns already carry exact path-derived ranges —
         // and do not exist inside the data files to scan
         val cols = statsCols2.filter(present).filterNot(partitionBy.contains)
-        // the manifest grammar is quote-delimited and line-oriented: a
-        // column name carrying a quote, backslash, or newline would be
-        // written unescaped and corrupt the stats block for EVERY
-        // reader of this snapshot — refuse at the write, not the read
+        // a column name carrying a quote, backslash, or newline is
+        // refused at the write: builds before the root codec read the
+        // stats block with line regexes and would misread the snapshot
         cols.foreach(c => require(!c.exists(ch => ch == '"' || ch == '\\' || ch == '\n' || ch == '\r'),
           s"stats column name '$c' contains characters the manifest " +
             "grammar cannot carry (quote, backslash, or newline)"))
@@ -3431,7 +3141,7 @@ object ManifestTable {
           // sidecar is complete or absent, never torn
           if (bloomCols.nonEmpty) {
             val bc = bloomCfg.get
-            val node = segmentMapper.createObjectNode()
+            val node = RootCodec.mapper.createObjectNode()
             node.put("bits", bc.bits); node.put("k", bc.k)
             val bl = node.putObject("blooms")
             rows.foreach { r =>
@@ -3447,7 +3157,7 @@ object ManifestTable {
             val sp = new Path(bloomsDir(table), s"$uuid.json")
             val sfs = fs(spark, sp)
             val out = sfs.create(sp, false) // uuid name: never contended
-            try out.write(segmentMapper.writeValueAsBytes(node))
+            try out.write(RootCodec.mapper.writeValueAsBytes(node))
             finally out.close()
           }
           rows.map { r =>
@@ -3599,12 +3309,12 @@ object ManifestTable {
                          txn: Option[(String, Long)] = None,
                          txnExtra: Seq[(String, Long)] = Nil,
                          dvs: Option[Map[String, Seq[Long]]] = None,
-                         bloomB64: Option[String] = None,
-                         transformsB64: Option[String] = None,
+                         bloom: Option[Option[BloomConfig]] = None,
+                         transforms: Option[Seq[PartitionTransform]] = None,
                          ingestSegs: Option[Seq[String]] = None)
       : Boolean = {
-    val fileSet0 = files.toSet
-    val live0 = stats.filter { case (f, m) => m.nonEmpty && fileSet0.contains(f) }
+    val fileSet = files.toSet
+    val live = stats.filter { case (f, m) => m.nonEmpty && fileSet.contains(f) }
     // IDENTITY high-water-mark sync (r16): every publish advances each
     // identity column's recorded mark to the furthest value (in step
     // direction) the snapshot's per-file stats carry — the SAME ranges
@@ -3622,7 +3332,7 @@ object ManifestTable {
       StructType(s.fields.map { f =>
         ColumnSpecs.identityOf(f) match {
           case Some(is) =>
-            val ranges = live0.valuesIterator.flatMap(_.get(f.name)).toSeq
+            val ranges = live.valuesIterator.flatMap(_.get(f.name)).toSeq
             if (ranges.isEmpty) f
             else {
               val b = if (is.step > 0) ranges.map(_._2).max else ranges.map(_._1).min
@@ -3646,106 +3356,53 @@ object ManifestTable {
         }
       })
     }
-    // schema rides base64-encoded (its JSON is full of quotes the
-    // regex-grammar manifest must not see)
-    val schemaLine = schemaSynced.map { s =>
-      val b64 = java.util.Base64.getEncoder.encodeToString(s.json.getBytes("UTF-8"))
-      s"""  "schemaB64": "$b64",\n"""
-    }.getOrElse("")
+    // a column name with a quote, backslash or newline is refused:
+    // builds before the root codec read roots with line regexes that
+    // would misread it
     partitionBy.foreach(c => require(!c.exists(ch =>
         ch == '"' || ch == '\\' || ch == '\n' || ch == '\r'),
       s"partition column name '$c' contains characters the manifest " +
         "grammar cannot carry (quote, backslash, or newline)"))
-    val partitionLine =
-      if (partitionBy.isEmpty) ""
-      else partitionBy.map(c => s""""$c"""")
-        .mkString("  \"partitionBy\": [", ", ", "],\n")
-    val fileSet = fileSet0
-    val live = live0
+    val parent = if (head == 0) RootRecord(0) else root(spark, table, head)
     // commit wall-clock, forced STRICTLY past the parent's so
     // timestamp-as-of resolution is total even for same-millisecond
-    // commit bursts (the Delta in-commit-timestamp monotonicity rule);
-    // one extra head-manifest read per publish, amortized by the write
-    val parentText = if (head == 0) "" else manifestText(spark, table, head)
-    val parentMs =
-      if (head == 0) 0L else commitMsFromText(parentText).getOrElse(0L)
-    val commitMs = math.max(System.currentTimeMillis(), parentMs + 1)
+    // commit bursts (the Delta in-commit-timestamp monotonicity rule)
+    val commitMs = math.max(System.currentTimeMillis(),
+      parent.commitMs.getOrElse(0L) + 1)
     // CHECK constraints are table metadata: every commit CARRIES the
     // parent's set unless the caller explicitly replaces it
     // (addConstraint/dropConstraint) — like the Delta metadata action,
     // so a constraint added once binds every later writer with zero
-    // call-site cooperation. Names and exprs ride base64 (arbitrary
-    // SQL text must not meet the regex-grammar manifest).
+    // call-site cooperation.
     // streaming-txn watermarks: carried like constraints, with this
     // commit's (appId, version) replacing the appId's previous entry —
     // the atomic record that makes a replayed micro-batch detectable
-    val txns = (if (head == 0) Map.empty[String, Long]
-                else txnsFromText(parentText)) ++ txnExtra ++ txn
-    val txnLine =
-      if (txns.isEmpty) ""
-      else txns.toSeq.sortBy(_._1).map { case (a, v) =>
-        s""""${b64(a)}": $v"""
-      }.mkString("  \"txnsB64\": {", ", ", "},\n")
-    val cons = constraints.getOrElse(
-      if (head == 0) Map.empty[String, String] else checksFromText(parentText))
-    val consLine =
-      if (cons.isEmpty) ""
-      else cons.toSeq.sortBy(_._1).map { case (n, e) =>
-        s""""${b64(n)}": "${b64(e)}""""
-      }.mkString("  \"checksB64\": {", ", ", "},\n")
-    // Lazy-delete tombstones (pred SQL b64 → targeted files): carried
+    val txns = parent.txns ++ txnExtra ++ txn
+    val cons = constraints.getOrElse(parent.checks)
+    // Lazy-delete tombstones (pred SQL → targeted files): carried
     // like constraints unless explicitly replaced, with each entry's
     // target list pruned to files still in THIS snapshot — a rewrite
     // of a targeted file applied the tombstone during its derive, so
     // the shrinking list is self-cleaning; an empty list drops the
     // entry (fully materialized).
-    val tombs0 = tombstones.getOrElse(
-      if (head == 0) Nil else tombstonesFromText(parentText))
-    val tombs = tombs0
+    val tombs = tombstones.getOrElse(parent.tombstones)
       .map { case (p, ts) => (p, ts.filter(fileSet.contains)) }
       .filter(_._2.nonEmpty)
-    val tombLine =
-      if (tombs.isEmpty) ""
-      else tombs.map { case (p, ts) =>
-        ts.map(t => s""""$t"""").mkString(s""""${b64(p)}": [""", ", ", "]")
-      }.mkString("  \"tombstonesB64\": {", ", ", "},\n")
     // deletion vectors: carried like tombstones unless replaced, each
     // entry pruned to files still in THIS snapshot (a rewrite of a
     // vectored file applied its vector during the derive — the
     // departing file takes its entry with it)
-    val dvs0 = dvs.getOrElse(
-      if (head == 0) Map.empty[String, Seq[Long]]
-      else deleteVectors(spark, table, head)) // cached decode
-    val dvsLive = dvs0.filter { case (f, os) =>
+    val dvsLive = dvs.getOrElse(parent.dvs).filter { case (f, os) =>
       os.nonEmpty && fileSet.contains(f) }
-    val dvLine =
-      if (dvsLive.isEmpty) ""
-      else dvsLive.toSeq.sortBy(_._1).map { case (f, os) =>
-        s""""${b64(f)}": "${encodeDv(os)}""""
-      }.mkString("  \"dvsB64\": {", ", ", "},\n")
-    // bloom index config: carried like constraints unless replaced
-    // (addBloom); an empty replacement drops it
-    val bloomVal = bloomB64.orElse(
-      if (head == 0) None else bloomRawFromText(parentText))
-      .filter(_.nonEmpty)
-    val bloomLine =
-      bloomVal.map(b => s"""  "bloomB64": "$b",\n""").getOrElse("")
-    // partition transforms: carried like the bloom config; overwrite
-    // (and restore/clone, which pass the donor's) replace explicitly
-    val ptVal = transformsB64.orElse(
-      if (head == 0) None else transformsRawFromText(parentText))
-      .filter(_.nonEmpty)
-    val ptLine =
-      ptVal.map(b => s"""  "partitionTransformsB64": "$b",\n""").getOrElse("")
+    // bloom index config and partition transforms: carried like
+    // constraints unless replaced (addBloom/dropBloom; overwrite,
+    // restore and clone pass their own)
+    val bloomVal = bloom.getOrElse(parent.bloom)
+    val ptVal = transforms.getOrElse(parent.transforms)
     // ingest ledgers: PERMANENT memory — carried verbatim by every
     // publish (compaction must not forget what was ingested), never
     // pruned to the file set
-    val ingVal = ingestSegs.getOrElse(
-      if (head == 0) Nil else ingestSegsFromText(parentText))
-    val ingLine =
-      if (ingVal.isEmpty) ""
-      else ingVal.map(r => s""""$r"""")
-        .mkString("  \"ingestSegs\": [", ", ", "],\n")
+    val ingVal = ingestSegs.getOrElse(parent.ingestSegs)
     require(op.matches("[a-z][a-z-]*"),
       s"op '$op' is not a manifest-safe identifier")
     val target = manifestPath(table, head + 1)
@@ -3786,23 +3443,15 @@ object ManifestTable {
     // version's, so those stay O(root) instead of O(files).
     val segTarget = math.max(1, spark.sparkContext.hadoopConfiguration
       .getInt(SegmentFilesKey, 1000))
-    val parentSegs = if (head == 0) Nil else segmentsFromText(parentText)
+    val parentSegs = parent.segments
     val donorSegs = reuseSegmentsOf.toSeq.filter(_ > 0)
-      .flatMap(v => segmentsFromText(manifestText(spark, table, v)))
+      .flatMap(v => root(spark, table, v).segments)
     val segmented = files.nonEmpty &&
       (files.size > segTarget || parentSegs.nonEmpty || donorSegs.nonEmpty)
     var newSegRefs = Seq.empty[String]
-    val (statsBlock, segmentsLine, filesBody) =
-      if (!segmented) {
-        val sb =
-          if (live.isEmpty) ""
-          else live.toSeq.sortBy(_._1).map { case (fp, m) =>
-            val cols = m.toSeq.sortBy(_._1)
-              .map { case (c, (mn, mx)) => s""""$c":[$mn,$mx]""" }.mkString(",")
-            s"""    "$fp": {$cols}"""
-          }.mkString("  \"stats\": {\n", ",\n", "\n  },\n")
-        (sb, "", files.map(p => s"    \"$p\"").mkString(",\n"))
-      } else {
+    val segmentRefs =
+      if (!segmented) Nil
+      else {
         // a candidate segment is carried by reference iff every file in
         // it is in this snapshot with IDENTICAL stats and not already
         // covered (parent and donor lists can overlap)
@@ -3844,9 +3493,7 @@ object ManifestTable {
           writeSegment(spark, table, chunk.map(p =>
             p -> live.getOrElse(p, Map.empty[String, (Double, Double)])))
         }.toSeq
-        val refs = carried.map(_._1) ++ newSegRefs
-        ("", refs.map(r => s""""$r"""").mkString("  \"segments\": [", ", ", "],\n"),
-          "")
+        carried.map(_._1) ++ newSegRefs
       }
     // required-feature list, derived from what this root ACTUALLY
     // carries (never from the parent's list — a feature whose last
@@ -3857,26 +3504,19 @@ object ManifestTable {
     val features = Seq(
       segmented -> "segments",
       (externRoots(spark, table).nonEmpty) -> "externs",
-      dvLine.nonEmpty -> "dvs",
-      tombLine.nonEmpty -> "tombstones",
-      ptLine.nonEmpty -> "transforms",
-      txnLine.nonEmpty -> "txn",
-      bloomLine.nonEmpty -> "blooms",
-      ingLine.nonEmpty -> "ingest",
-      consLine.nonEmpty -> "checks",
+      dvsLive.nonEmpty -> "dvs",
+      tombs.nonEmpty -> "tombstones",
+      ptVal.nonEmpty -> "transforms",
+      txns.nonEmpty -> "txn",
+      bloomVal.nonEmpty -> "blooms",
+      ingVal.nonEmpty -> "ingest",
+      cons.nonEmpty -> "checks",
       // a mapping-bearing schema is unreadable to a mapping-ignorant
       // era (it would surface nulls for every renamed column) — the
       // derived-per-root rule applies here too: a later overwrite
       // recording a mapping-free schema drops the gate with it
       schema.exists(hasMapping) -> "colmap"
     ).collect { case (true, f) => f }
-    // 2-space indent is LOAD-BEARING: featuresFromText line-anchors on
-    // it to distinguish this top-level key from per-file stats entries
-    // (4-space) — keep any future top-level section at the same indent
-    val featuresLine =
-      if (features.isEmpty) ""
-      else features.map(f => s""""$f"""")
-        .mkString("  \"features\": [", ", ", "],\n")
     // per-version rollup counters (r14): file/byte totals and the
     // file-set diff vs the parent, recorded ONCE at publish so
     // DESCRIBE HISTORY is O(versions) ROOT parses at any table size —
@@ -3885,24 +3525,14 @@ object ManifestTable {
     // from the caches the publisher just warmed deriving its own file
     // list, so this costs a set-diff, not extra I/O. Legacy roots
     // without the key fall back to the full parse per version.
-    val parentFileSet: Set[String] =
-      if (head == 0) Set.empty
-      else filesAndStatsFromText(spark, table, head, parentText)._1.toSet
-    val rollBytes = live.valuesIterator
-      .flatMap(_.get(SizeKey)).map(_._1.toLong).sum
-    val rollupLine =
-      s"""  "rollup": {"nFiles": ${fileSet.size}, "nBytes": $rollBytes, """ +
-        s""""nAdded": ${(fileSet -- parentFileSet).size}, """ +
-        s""""nRemoved": ${(parentFileSet -- fileSet).size}},\n"""
-    val body =
-      s"""{
-         |  "version": ${head + 1},
-         |  "op": "$op",
-         |  "commitMs": $commitMs,
-         |$rollupLine$featuresLine$txnLine$consLine$tombLine$dvLine$bloomLine$ptLine$ingLine$partitionLine$schemaLine$statsBlock$segmentsLine  "files": [
-         |$filesBody
-         |  ]
-         |}""".stripMargin
+    val parentFileSet = filesAndStats(spark, table, parent)._1.toSet
+    val body = RootCodec.encode(RootRecord(head + 1, Some(op), Some(commitMs),
+      Some(Rollup(fileSet.size, live.valuesIterator.flatMap(_.get(SizeKey))
+        .map(_._1.toLong).sum, (fileSet -- parentFileSet).size,
+        (parentFileSet -- fileSet).size)),
+      features, txns, cons, tombs, dvsLive, bloomVal, ptVal, ingVal, partitionBy,
+      schemaSynced, if (segmented) Map.empty else live, segmentRefs,
+      if (segmented) Nil else files))
     val out = f.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     beforePublishLink()
@@ -4174,9 +3804,8 @@ object ManifestTable {
           // EXCEPT the table-creating append (head 0), which has no
           // parent to inherit from and must record explicitly or the
           // layout memory is lost at birth (review r10 finding)
-          transformsB64 =
-            if (mode == SaveMode.Append && head > 0) None
-            else Some(if (transforms.isEmpty) "" else transformsB64Of(transforms))))
+          transforms =
+            if (mode == SaveMode.Append && head > 0) None else Some(transforms)))
         committed = head + 1
       else {
         // A lost race means another writer occupied slot head+1, so the
@@ -6210,12 +5839,12 @@ object ManifestTable {
         val f = fs(spark, dir)
         f.mkdirs(dir)
         physOf.values.foreach { phys =>
-          val node = segmentMapper.createObjectNode()
+          val node = RootCodec.mapper.createObjectNode()
           val arr = node.putArray("files")
           files.sorted.foreach(arr.add)
           val p = new Path(dir, s"$phys.json")
           f.delete(p, false)
-          require(createExclusive(f, p, segmentMapper.writeValueAsBytes(node)),
+          require(createExclusive(f, p, RootCodec.mapper.writeValueAsBytes(node)),
             s"could not publish the exists-default census for $table.$phys")
           existsPreCache.remove((table, phys))
         }
@@ -6260,7 +5889,7 @@ object ManifestTable {
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
         import scala.jdk.CollectionConverters._
-        segmentMapper.readTree(text).path("files").elements().asScala
+        RootCodec.mapper.readTree(text).path("files").elements().asScala
           .map(_.asText()).toSet
       } catch { case _: java.io.FileNotFoundException =>
         // no census (hand-built manifest): nothing classifies as
@@ -6799,13 +6428,12 @@ object ManifestTable {
       // 100k-file segmented snapshot writes ONE tiny root, no segments
       // restore is the WHOLE state: the target's bloom config and
       // partition-transform record come back too (empty = cleared)
-      val targetText = manifestText(spark, table, version)
+      val target = root(spark, table, version)
       if (tryPublish(spark, table, head, files, s"restore-$version",
           schema, stats, partBy, Some(cons), op = "restore",
           tombstones = Some(tombs), reuseSegmentsOf = Some(version),
           dvs = Some(targetDvs),
-          bloomB64 = Some(bloomRawFromText(targetText).getOrElse("")),
-          transformsB64 = Some(transformsRawFromText(targetText).getOrElse(""))))
+          bloom = Some(target.bloom), transforms = Some(target.transforms)))
         return head + 1
       if (currentVersion(spark, table) <= head)
         throw new java.io.IOException(
@@ -6839,13 +6467,12 @@ object ManifestTable {
       val cons = checkConstraints(spark, table, head)
       val tombs = deleteTombstones(spark, table, head)
       val dvs = deleteVectors(spark, table, head)
-      val text = manifestText(spark, table, head)
+      val r = root(spark, table, head)
       if (tryPublish(spark, table, head, files, s"marker-${txn._1}",
           schema, stats, partBy, Some(cons), op = "marker",
           tombstones = Some(tombs), reuseSegmentsOf = Some(head),
           txn = Some(txn), txnExtra = txnExtra, dvs = Some(dvs),
-          bloomB64 = Some(bloomRawFromText(text).getOrElse("")),
-          transformsB64 = Some(transformsRawFromText(text).getOrElse(""))))
+          bloom = Some(r.bloom), transforms = Some(r.transforms)))
         return head + 1
       if (currentVersion(spark, table) <= head)
         throw new java.io.IOException(
@@ -7073,7 +6700,7 @@ object ManifestTable {
     val segDir = new Path(manifestDir(table), "segments")
     if (f.exists(segDir)) {
       val referenced = keep
-        .flatMap(v => segmentsFromText(manifestText(spark, table, v))).toSet
+        .flatMap(v => root(spark, table, v).segments).toSet
       val cutoff = System.currentTimeMillis() - graceMs
       f.listStatus(segDir)
         .filter(st => !referenced.contains("segments/" + st.getPath.getName))
@@ -7101,7 +6728,7 @@ object ManifestTable {
     val ingDir = ingestDir(table)
     if (f.exists(ingDir)) {
       val referenced = keep
-        .flatMap(v => ingestSegsFromText(manifestText(spark, table, v))).toSet
+        .flatMap(v => root(spark, table, v).ingestSegs).toSet
       val cutoff = System.currentTimeMillis() - graceMs
       f.listStatus(ingDir)
         .filter(st => !referenced.contains("ingest/" + st.getPath.getName))

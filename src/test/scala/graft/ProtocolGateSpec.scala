@@ -123,6 +123,55 @@ class ProtocolGateSpec extends AnyFunSuite with SparkFixture {
     assert(ManifestTable.read(spark, t).count() == 39)
   }
 
+  test("the gate and every accessor read a valid JSON root in any layout") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val t = tmp("layout")
+    val df = (0 until 60).map(i => (i.toLong, i % 3, s"r$i")).toDF("id", "g", "s")
+    ManifestTable.commit(spark, t, df, SaveMode.Overwrite, statsColumns = Seq("id"),
+      partitionBy = Seq("g"), txn = Some(("app", 1L)))
+    ManifestTable.addConstraint(spark, t, "pos", "id >= 0")
+    ManifestTable.addBloom(spark, t, Seq("id"))
+    ManifestTable.deleteWhereVector(spark, t, col("id") === 7L)
+    val v = ManifestTable.deleteWhereLazy(spark, t, col("id") === 8L)
+    def accessors(): Seq[Any] = Seq(
+      ManifestTable.snapshotFiles(spark, t, v), ManifestTable.snapshotStats(spark, t, v),
+      ManifestTable.snapshotSchema(spark, t, v), ManifestTable.partitionColumns(spark, t, v),
+      ManifestTable.partitionTransforms(spark, t, v), ManifestTable.tableFeatures(spark, t, v),
+      ManifestTable.checkConstraints(spark, t, v), ManifestTable.txnVersion(spark, t, "app", v),
+      ManifestTable.deleteTombstones(spark, t, v), ManifestTable.deleteVectors(spark, t, v),
+      ManifestTable.bloomConfig(spark, t, v), ManifestTable.commitTimeMs(spark, t, v),
+      ManifestTable.commitOp(spark, t, v), ManifestTable.ingestLedgers(spark, t, v),
+      ManifestTable.snapshotSegments(spark, t, v),
+      ManifestTable.history(spark, t).collect().toSeq,
+      ManifestTable.read(spark, t, v).collect().toSet)
+    val before = accessors()
+    // re-serialize the head root on one line with its keys reversed, so
+    // `features` follows `stats` and sits at no particular indent
+    val p = java.nio.file.Paths.get(f"$t/_manifests/v$v%08d.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val tree = mapper.readTree(java.nio.file.Files.readAllBytes(p))
+    def rewrite(extraFeature: Option[String], reshapeFiles: Boolean = false): Unit = {
+      val out = mapper.createObjectNode()
+      tree.fieldNames().asScala.toSeq.reverse.foreach(k =>
+        out.set[com.fasterxml.jackson.databind.JsonNode](k, tree.get(k).deepCopy()))
+      extraFeature.foreach(f => out.withArray("features").add(f))
+      if (reshapeFiles) out.putArray("files").addObject().put("path", "data/x")
+      java.nio.file.Files.write(p, mapper.writeValueAsBytes(out))
+    }
+    rewrite(None)
+    assert(!new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("\n"))
+    assert(accessors() == before)
+    rewrite(Some("someday"))
+    interceptUnsupported("someday")(ManifestTable.read(spark, t).collect())
+    interceptUnsupported("someday")(ManifestTable.commit(spark, t, df.limit(2)))
+    // a section the unknown feature reshaped so that this build cannot
+    // decode it still gets the gate's named refusal, not a parse error
+    rewrite(Some("someday"), reshapeFiles = true)
+    interceptUnsupported("someday")(ManifestTable.snapshotFiles(spark, t))
+    assert(ManifestTable.currentVersion(spark, t) == v)
+  }
+
   private def withSessionZone(tz: String)(body: => Unit): Unit = {
     val prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", tz)
